@@ -505,34 +505,39 @@ def test_stream_stream_interval_join_matches_batch(
     assert not missing, f"{len(missing)} closed pairs missing: {sorted(missing)[:3]}"
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_KV_SCHEMA = T.StructType(
+    [T.StructField("ts", T.TimestampType()), T.StructField("k", T.StringType())]
+)
+
+
+def _land_kv_file(spark, tmp_path, inbox, name, rows, mtime):
+    """One single-file parquet chunk of (ts, k) rows, landed in ``inbox``
+    with a fixed modification time (file streams replay in that order)."""
+    import glob as g
+    import os
+    import shutil
+
+    os.makedirs(inbox, exist_ok=True)
+    stage = str(tmp_path / f"stage_{name}")
+    spark.createDataFrame(rows, _KV_SCHEMA).coalesce(1).write.mode("overwrite").parquet(stage)
+    dst = os.path.join(inbox, f"{name}.parquet")
+    shutil.copy(g.glob(f"{stage}/part-*.parquet")[0], dst)
+    os.utime(dst, (mtime, mtime))
+
+
 def test_late_rows_dropped_after_watermark(spark, tmp_path):
     """Exact watermark semantics on synthetic data: a row arriving in a
     later micro-batch with event time older than (max_seen - delay) must
     be dropped from an append-mode windowed aggregate; a late-but-within
     -delay row must still count."""
     import datetime as dt
-    import os
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("k", T.StringType())]
-    )
     base = dt.datetime(2024, 6, 1, 10, 0, 0)
     d = str(tmp_path / "late_stream")
-    os.makedirs(d)
 
     def write_chunk(name, rows, mtime):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / name))
-        import glob as g
-        import shutil
-
-        src = g.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        dst = f"{d}/{name}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (mtime, mtime))
+        _land_kv_file(spark, tmp_path, d, name, rows, mtime)
 
     # b0: events in windows 10:00 (one row) and 10:05 (two rows)
     write_chunk(
@@ -561,7 +566,7 @@ def test_late_rows_dropped_after_watermark(spark, tmp_path):
     # b4: push watermark beyond every open window so all finalize
     write_chunk("c5", [(base + dt.timedelta(minutes=60), "a")], 1_700_000_240)
 
-    stream = file_stream(spark, d, schema, max_files_per_trigger=1)
+    stream = file_stream(spark, d, _KV_SCHEMA, max_files_per_trigger=1)
     counts = windowed_count(stream, "ts", ["k"], window="5 minutes", watermark="10 minutes")
     q = run_to_memory(counts, "late_counts")
     q.awaitTermination()
@@ -582,32 +587,17 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     the property the reference's delete-then-insert dance was trying to
     fake (App.java:146-157)."""
     import datetime as dt
-    import glob as g
-    import os
-    import shutil
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("k", T.StringType())]
-    )
     base = dt.datetime(2024, 6, 1, 0, 0, 0)
     d = str(tmp_path / "resume_stream")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    os.makedirs(d)
 
     def write_chunk(name, rows, mtime):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / name))
-        src = g.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        dst = f"{d}/{name}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (mtime, mtime))
+        _land_kv_file(spark, tmp_path, d, name, rows, mtime)
 
     def run_pass():
-        stream = file_stream(spark, d, schema)
+        stream = file_stream(spark, d, _KV_SCHEMA)
         q = (
             stream.writeStream.format("parquet")
             .option("path", out)
@@ -626,6 +616,123 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 8, f"expected 5+3 rows exactly once, got {len(rows)}"
     assert len({(r.ts, r.k) for r in rows}) == 8, "duplicate rows after resume"
+
+
+def _offset_log_conf(ckpt: str, batch_id: int) -> dict:
+    """The session conf a micro-batch's offset-log entry recorded."""
+    import json
+
+    with open(f"{ckpt}/offsets/{batch_id}") as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_start_pins_core_count_and_restores_session(spark, tmp_path):
+    """A query started through the engine's start path runs its stateful
+    shuffle at one partition per core, recorded in the checkpoint, while
+    the session keeps its batch default — also when ``start()`` fails."""
+    import datetime as dt
+    import os
+
+    from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch, start_query
+
+    fixture_value = spark.conf.get(_SHUFFLE_PARTITIONS)
+    cores = spark.sparkContext.defaultParallelism
+    inbox, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    base = dt.datetime(2024, 6, 1)
+    _land_kv_file(
+        spark, tmp_path, inbox, "a",
+        [(base + dt.timedelta(minutes=7 * i), "xyz"[i % 3]) for i in range(30)],
+        1_700_000_000,
+    )
+    try:
+        spark.conf.set(_SHUFFLE_PARTITIONS, "32")
+        counts = windowed_count(
+            file_stream(spark, inbox, _KV_SCHEMA), "ts", ["k"], window="1 hour"
+        )
+        q = start_foreach_batch(
+            counts, lambda b, _: b.write.mode("append").parquet(out), ckpt
+        )
+        assert spark.conf.get(_SHUFFLE_PARTITIONS) == "32"
+        q.awaitTermination()
+        assert q.exception() is None
+        assert _offset_log_conf(ckpt, 0)[_SHUFFLE_PARTITIONS] == str(cores)
+        state_parts = [p for p in os.listdir(f"{ckpt}/state/0") if p.isdigit()]
+        assert len(state_parts) == cores, state_parts
+        assert spark.read.parquet(out).count() > 0
+
+        bad = counts.writeStream.format("no_such_sink_format").option(
+            "checkpointLocation", str(tmp_path / "bad_ckpt")
+        )
+        with pytest.raises(Exception):
+            start_query(spark, bad)
+        assert spark.conf.get(_SHUFFLE_PARTITIONS) == "32"
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, fixture_value)
+
+
+def test_restart_keeps_checkpoint_partition_count(spark, tmp_path):
+    """A checkpoint written at 8 shuffle partitions keeps 8 when the query
+    restarts through the start path (which would pick the core count for a
+    new checkpoint), and its finalized windows equal one uninterrupted
+    run's."""
+    import datetime as dt
+
+    from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
+    fixture_value = spark.conf.get(_SHUFFLE_PARTITIONS)
+    base = dt.datetime(2024, 6, 1)
+    files = {
+        "a": [(base + dt.timedelta(minutes=5 * i), "xyz"[i % 3]) for i in range(11)],
+        "b": [(base + dt.timedelta(minutes=60 + 5 * i), "xxy"[i % 3]) for i in range(19)],
+    }
+
+    def counts(inbox):
+        stream = file_stream(spark, inbox, _KV_SCHEMA, max_files_per_trigger=1)
+        return windowed_count(stream, "ts", ["k"], window="1 hour", watermark="10 minutes")
+
+    def sink(out):
+        return lambda b, _: b.write.mode("append").parquet(out)
+
+    def windows(out):
+        return sorted((r.window_start, r.k, r.n) for r in spark.read.parquet(out).collect())
+
+    # Interrupted: the first run sees file a only, started directly at 8
+    # partitions (as a checkpoint from a wider session would be); file b
+    # lands before the restart, which goes through the start path.
+    inbox, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _land_kv_file(spark, tmp_path, inbox, "a", files["a"], 1_700_000_000)
+    try:
+        spark.conf.set(_SHUFFLE_PARTITIONS, "8")
+        q = (
+            counts(inbox).writeStream.foreachBatch(sink(out))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, fixture_value)
+    q.awaitTermination()
+    _land_kv_file(spark, tmp_path, inbox, "b", files["b"], 1_700_000_100)
+    q = start_foreach_batch(counts(inbox), sink(out), ckpt)
+    q.awaitTermination()
+    assert q.exception() is None
+    assert _offset_log_conf(ckpt, 0)[_SHUFFLE_PARTITIONS] == "8"
+    assert _offset_log_conf(ckpt, 1)[_SHUFFLE_PARTITIONS] == "8"
+
+    # Uninterrupted: both files, one run through the start path.
+    inbox1, out1, ckpt1 = str(tmp_path / "in1"), str(tmp_path / "out1"), str(tmp_path / "ckpt1")
+    _land_kv_file(spark, tmp_path, inbox1, "a", files["a"], 1_700_000_000)
+    _land_kv_file(spark, tmp_path, inbox1, "b", files["b"], 1_700_000_100)
+    q = start_foreach_batch(counts(inbox1), sink(out1), ckpt1)
+    q.awaitTermination()
+    assert _offset_log_conf(ckpt1, 0)[_SHUFFLE_PARTITIONS] == str(
+        spark.sparkContext.defaultParallelism
+    )
+
+    got, want = windows(out), windows(out1)
+    assert {ws.hour for ws, _, _ in want} == {0, 1}, want
+    assert got == want
+    assert spark.conf.get(_SHUFFLE_PARTITIONS) == fixture_value
 
 
 def test_update_mode_final_counts_match_batch(spark, sf_dir, events_dir, events_schema):

@@ -9,6 +9,8 @@ parameterized and defaults are chosen for correctness-at-scale:
 - UTC session timezone so event-time semantics match the oracle and the
   reference's UTC hour selection (``App.java:44``).
 - Arrow enabled for the Pandas-UDF paths (similarity / multimodal ops).
+- Streaming queries do not inherit the 32-partition batch default:
+  ``streaming.sinks.start_query`` sizes them to the cores at start.
 """
 
 from __future__ import annotations

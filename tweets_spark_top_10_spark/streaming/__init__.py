@@ -47,7 +47,11 @@ from tweets_spark_top_10_spark.streaming.scd2 import (
     maintain_scd2_history,
     merge_scd2_batch,
 )
-from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_overwrite, run_to_memory
+from tweets_spark_top_10_spark.streaming.sinks import (
+    foreach_batch_overwrite,
+    foreach_batch_top_k,
+    run_to_memory,
+)
 from tweets_spark_top_10_spark.streaming.stateful import (
     sessionize_transform_with_state,
     sessionize_with_state,
@@ -79,5 +83,6 @@ __all__ = [
     "maintain_scd2_history",
     "merge_scd2_batch",
     "foreach_batch_overwrite",
+    "foreach_batch_top_k",
     "run_to_memory",
 ]

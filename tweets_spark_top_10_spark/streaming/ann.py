@@ -38,6 +38,7 @@ from tweets_spark_top_10_spark.functions.similarity import (
     rp_array,
 )
 from tweets_spark_top_10_spark.streaming.sketch import upsert_rows_by_bucket
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def _one_per_id(
@@ -110,12 +111,7 @@ def maintain_ivf_index(
             seq_col,
         )
 
-    return (
-        stream_vecs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_vecs, merge, checkpoint)
 
 
 def upsert_rp_cells_batch(
@@ -176,12 +172,7 @@ def maintain_rp_ivf_index(
             seq_col,
         )
 
-    return (
-        stream_vecs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_vecs, merge, checkpoint)
 
 
 def upsert_pq_codes_batch(
@@ -259,12 +250,7 @@ def maintain_pq_index(
             perm,
         )
 
-    return (
-        stream_vecs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_vecs, merge, checkpoint)
 
 
 def enrich_stream_ann(
@@ -311,12 +297,7 @@ def enrich_stream_ann(
         )
         topk.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
-    return (
-        stream_queries.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_queries, score, checkpoint)
 
 
 def enrich_stream_adc(
@@ -372,9 +353,4 @@ def enrich_stream_adc(
         )
         topk.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
-    return (
-        stream_queries.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_queries, score, checkpoint)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.functions.bloom import bloom_word_updates
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def merge_bloom_batch(
@@ -81,12 +82,7 @@ def maintain_bloom(
             batch_df.sparkSession, batch_df, table_path, key_col, m_bits, k
         )
 
-    return (
-        stream_keys.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_keys, merge, checkpoint)
 
 
 def read_bloom_words(spark, table_path: str, m_bits: int = 1 << 16) -> list[int]:

@@ -56,6 +56,7 @@ from tweets_spark_top_10_spark.streaming.heavy_hitters import (
     _recover,
 )
 from tweets_spark_top_10_spark.streaming.ivm import _swap_write
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 # Version of the symbol-string encoding persisted in {state_dir}/words.
@@ -273,12 +274,7 @@ def maintain_bpe_vocab(
             relearn_window_factor=relearn_window_factor,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs_stream, step, checkpoint)
 
 
 def bpe_step(
@@ -392,9 +388,4 @@ def encode_stream_docs(
         ).withColumn("n_rules", F.lit(len(rules)))
         out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(encode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs_stream, encode, checkpoint)

@@ -40,6 +40,8 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
 def init_cdc_table(base: DataFrame, table_path: str) -> None:
     """Seed the stored table from a base snapshot (``__seq = -1`` so
     every real change beats it; no tombstones)."""
@@ -134,12 +136,7 @@ def maintain_cdc_snapshot(
             batch_df.sparkSession, batch_df, table_path, key, seq_col, op_col
         )
 
-    return (
-        change_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(change_stream, merge, checkpoint)
 
 
 def read_cdc_snapshot(spark, table_path: str) -> DataFrame:

@@ -36,6 +36,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
 
 def merge_mg_batch(
     spark,
@@ -123,12 +125,7 @@ def maintain_heavy_hitters(
             batch_id=batch_id,
         )
 
-    return (
-        stream_tokens.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_tokens, merge, checkpoint)
 
 
 def _recover(table_path: str) -> None:
@@ -439,12 +436,7 @@ def maintain_windowed_heavy_hitters(
             batch_id=batch_id,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_df, merge, checkpoint)
 
 
 def windowed_grouped_top_k_from_summary(
@@ -532,12 +524,7 @@ def maintain_grouped_heavy_hitters(
             batch_id=batch_id,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_df, merge, checkpoint)
 
 
 def grouped_top_k_from_summary(

@@ -46,6 +46,7 @@ from tweets_spark_top_10_spark.operators.ivm import (
     build_agg_view,
 )
 from tweets_spark_top_10_spark.streaming.cdc import merge_cdc_batch
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def _swap_write(df: DataFrame, path: str, batch_id: int | None = None) -> None:
@@ -182,9 +183,4 @@ def maintain_agg_view(
             batch_id=batch_id,
         )
 
-    return (
-        change_stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(change_stream, step, checkpoint)

@@ -69,6 +69,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
 _BATCH_COL = "__ingest_batch"
 
 
@@ -184,12 +186,7 @@ def foreach_batch_bucketed_ingest(
         # table never chase deleted files
         spark.sql(f"REFRESH TABLE {table_name}")
 
-    writer = stream.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _write, checkpoint, trigger_available_now)
 
 
 def _rescue_late_partitions(aside: str, path: str, horizon: int) -> None:

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
 
 def maintain_bucket_partials(
     obs_stream: DataFrame,
@@ -76,12 +78,7 @@ def maintain_bucket_partials(
                     "spark.sql.sources.partitionOverwriteMode", prev
                 )
 
-    return (
-        obs_stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(obs_stream, step, checkpoint)
 
 
 def read_resampled(

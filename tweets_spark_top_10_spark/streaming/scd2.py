@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.operators.merge import scd2_history
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def _swap_write(df: DataFrame, path: str) -> None:
@@ -120,9 +121,4 @@ def maintain_scd2_history(
             batch_df.sparkSession, batch_df, history_path, key, seq_col, op_col
         )
 
-    return (
-        change_stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(change_stream, step, checkpoint)

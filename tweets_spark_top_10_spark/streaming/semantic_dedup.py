@@ -64,6 +64,7 @@ from tweets_spark_top_10_spark.streaming.heavy_hitters import (
 )
 from tweets_spark_top_10_spark.functions.sampling import hash_bucket
 from tweets_spark_top_10_spark.streaming.sketch import upsert_rows_by_bucket
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def upsert_semantic_pairs_batch(
@@ -254,12 +255,7 @@ def maintain_semantic_dedup(
             _persist_centroids(new_cents, centroids_path, n)
             state[0], state[1] = new_cents, n
 
-    return (
-        stream_vecs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_vecs, merge, checkpoint)
 
 
 def _persist_centroids(cents: DataFrame, path: str, fitted_n: int) -> None:

@@ -10,10 +10,59 @@ no delete window arithmetic, no month off-by-one bug (SURVEY.md §1.2).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_START_LOCK = threading.Lock()
+
+
+def start_query(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start a streaming query with one shuffle partition per core.
+
+    Every streaming query in the engine starts here.  Spark turns AQE off
+    inside micro-batches, so the stateful shuffle and the state store run
+    exactly ``spark.sql.shuffle.partitions`` tasks per micro-batch; at the
+    32-partition batch default that is mostly fixed per-task cost on a few
+    cores.  This sets the conf to ``sparkContext.defaultParallelism`` for
+    the query: only around ``writer.start()``, under a module lock, and
+    restored in a ``finally`` (also when ``start()`` raises), so batch
+    queries keep the session default.  Other threads running batch jobs
+    on the same session during a start see the narrower width briefly.
+
+    Spark clones the session at ``start()`` and writes this conf into the
+    checkpoint's offset log, and the state store is partitioned by it.  So
+    the value applies to new checkpoints only: a restarted query keeps the
+    value its checkpoint pinned, whatever the cores are now.
+    ``foreachBatch`` functions receive batches of the cloned session, so
+    their own shuffles run at the same width.
+    """
+    with _START_LOCK:
+        before = spark.conf.get(_SHUFFLE_PARTITIONS)
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, before)
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    trigger_available_now: bool = True,
+) -> StreamingQuery:
+    """``writeStream.foreachBatch(fn)`` with a checkpoint, started through
+    :func:`start_query`.  ``trigger_available_now`` drains what is there
+    and stops; ``False`` keeps the query running with the default trigger.
+    """
+    writer = stream.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return start_query(stream.sparkSession, writer)
 
 
 def foreach_batch_overwrite(
@@ -39,12 +88,7 @@ def foreach_batch_overwrite(
             .parquet(path)
         )
 
-    writer = stream.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _write, checkpoint, trigger_available_now)
 
 
 def foreach_batch_top_k(
@@ -54,6 +98,7 @@ def foreach_batch_top_k(
     key: str,
     k: int = 10,
     count_col: str = "n",
+    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """The streaming reference query's sink: per finalized window, keep
     the top-K keys by count and overwrite that window's result partition.
@@ -62,20 +107,14 @@ def foreach_batch_top_k(
     exactly once, after the watermark closes it), so state stays the
     incremental windowed count — Spark needs no sorted/update-mode
     output support.  This is `App.java:99+134`'s orderBy+limit applied
-    per hour-window, continuously.
+    per hour-window, continuously (``trigger_available_now=False``).
     """
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    from tweets_spark_top_10_spark.operators.topk import top_k_per_group
+
     def rank(batch: DataFrame) -> DataFrame:
-        w = W.partitionBy("window_start").orderBy(
-            F.desc(count_col), F.asc(key)
-        )
-        return (
-            batch.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("rank")
-        )
+        return top_k_per_group(batch, ["window_start"], [F.desc(count_col), F.asc(key)], k)
 
     return foreach_batch_overwrite(
         windowed_counts,
@@ -83,6 +122,7 @@ def foreach_batch_top_k(
         partition_by=["window_start"],
         checkpoint=checkpoint,
         transform=rank,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -94,13 +134,13 @@ def run_to_memory(
     """Drain a (bounded) stream into an in-memory table and return the
     query; callers awaitTermination then read ``spark.table(name)``.
     Test-only: memory sink collects to the driver."""
-    return (
+    writer = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-        .start()
     )
+    return start_query(stream.sparkSession, writer)
 
 
 def foreach_batch_kv_upsert(
@@ -152,9 +192,4 @@ def foreach_batch_kv_upsert(
         )
         upsert_rows_by_bucket(batch.sparkSession, keyed, table_path, key_col)
 
-    writer = stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _merge, checkpoint, trigger_available_now)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from tweets_spark_top_10_spark.functions.dedup import minhash_signatures
 from tweets_spark_top_10_spark.functions.sampling import hash_bucket
 from tweets_spark_top_10_spark.sources.writers import write_partitioned
+from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
 def upsert_signature_batch(
@@ -159,9 +160,4 @@ def maintain_minhash_index(
             n_buckets,
         )
 
-    return (
-        stream_docs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_docs, merge, checkpoint)

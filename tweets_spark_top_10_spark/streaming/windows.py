@@ -8,8 +8,10 @@ partitions; here late data is handled by the watermark instead of
 
 State-scale notes: watermark bounds state to (windows in flight ×
 distinct keys). For a viral-key workload the count state is tiny (one
-long per key/window); the shuffle is keyed by (window, key) so AQE-era
-skew splitting applies on the final agg.
+long per key/window). The stateful shuffle is keyed by (window, key)
+and gets no AQE: Spark turns it off inside micro-batches, so its width
+(and the state store's) is fixed when the query starts, one partition
+per core, by ``sinks.start_query``.
 """
 
 from __future__ import annotations
