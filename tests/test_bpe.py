@@ -772,7 +772,7 @@ def test_bpe_production_fixture_integrity_and_fixpoint(spark):
     recovers the original word (lossless segmentation)."""
     import os
 
-    from tools.bpe_vocab_probe import zipf_words
+    from tests.datagen import zipf_words
     from tweets_spark_top_10_spark.functions.bpe import (
         read_merge_rules_parquet,
         segment_words_arrow,
@@ -812,7 +812,7 @@ def test_bpe_fixture_encode_throughput_floor(spark):
     import os
     import time
 
-    from tools.bpe_vocab_probe import zipf_words
+    from tests.datagen import zipf_words
     from tweets_spark_top_10_spark.functions.bpe import (
         read_merge_rules_parquet,
         segment_words_arrow,

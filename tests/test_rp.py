@@ -149,14 +149,14 @@ def test_rp_ivf_rerank_clustered_recall_floor(spark, sf_dir):
     quasi-random fixture is the JL worst case (rank-5→20 cosine gap
     0.076, inside the projection's ranking noise), where the pipeline
     measures 0.60 at 32/50.  On clustered geometry — every base vector
-    expanded into a 10-member cluster (``tools/rp_clustered_probe.
+    expanded into a 10-member cluster (``tests/datagen.
     clustered_corpus``, deterministic eps-shift members; intra-cluster
     cosine ~0.989, cross-cluster ~quasi-random) — the gap dwarfs the
     noise and the operator's actual selling point shows: measured
     recall@5 is 1.0 at BOTH d_out=16/20 and 32/50 (sf0.001 fixture and
     the 10x sf0.1 probe alike).  Pinned at >= 0.9 to absorb float-edge
     drift while staying far above the worst-case 0.60."""
-    from tools.rp_clustered_probe import clustered_corpus
+    from tests.datagen import clustered_corpus
 
     corpus = clustered_corpus(spark, sf_dir, replicas=10).localCheckpoint(
         eager=True

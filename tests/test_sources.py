@@ -303,60 +303,6 @@ def test_ntz_timestamp_coerced_at_load_boundary(spark, sf_dir, tmp_path):
     assert got[0]["ts"] == t0
 
 
-def test_correctness_rotation_not_stale():
-    """The stale-first driver rotation (``_LAST_CHECKED``) must be
-    regenerated whenever a new CORRECTNESS artifact lands; rounds 3/4
-    silently re-checked the same 50 queries because it wasn't. With
-    ``--autofold`` a strictly-newer driver artifact is folded in place
-    (the driver writes CORRECTNESS after the round's last commit, so
-    round-open is otherwise always stale — rounds 5-7 each burned their
-    first commit on this); the fold then rides the round's first
-    commit. Any other mismatch still fails."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, "tools/update_check_history.py", "--check", "--autofold"],
-        cwd="/root/repo",
-        capture_output=True,
-        text=True,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-def test_reprove_next_retires_on_newer_driver_row():
-    """_REPROVE_NEXT (round 11): a rewritten-since-last-check marker
-    retires exactly when a driver row from >= its marked round lands,
-    and survives (entry line verbatim, comment included) until then."""
-    import importlib.util
-    import pathlib
-
-    spec = importlib.util.spec_from_file_location(
-        "uch", pathlib.Path("/root/repo/tools/update_check_history.py")
-    )
-    uch = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(uch)
-
-    src = (
-        "_REPROVE_NEXT: dict[str, int] = {\n"
-        '    "q_old": 3,  # rewritten in r3\n'
-        '    "q_new": 9,  # rewritten in r9\n'
-        "}"
-    )
-    parsed = uch._parse_reprove(src)
-    assert set(parsed) == {"q_old", "q_new"}
-    # q_old's rewrite was re-proved in r5; q_new still waits
-    last = {"q_old": 5, "q_new": 8}
-    surviving = {n: v for n, v in parsed.items() if last.get(n, 0) < v[0]}
-    rendered = uch.render_reprove(surviving)
-    assert '"q_new": 9,  # rewritten in r9' in rendered
-    assert "q_old" not in rendered
-    # empty set renders the literal empty dict (block must stay present
-    # for the next marking)
-    assert uch.render_reprove({}) == "_REPROVE_NEXT: dict[str, int] = {}"
-    assert uch._parse_reprove("_REPROVE_NEXT: dict[str, int] = {}") == {}
-
-
 def test_snapshot_write_read_time_travel(spark, sf_dir, tmp_path):
     """Snapshot-versioned table: latest read tracks the newest publish,
     pinned reads stay immutable, unknown versions fail loudly."""

@@ -4,7 +4,7 @@ the serving story needs the artifact itself, offline/online split like
 the PQ/IVF ``ensure_*`` indexes).
 
 Trains ``learn_from_words_batched`` on the deterministic Zipf-10^5
-pseudo-word vocabulary (``tools.bpe_vocab_probe.zipf_words`` — the
+pseudo-word vocabulary (``tests.datagen.zipf_words`` — the
 documents test corpus has a 31-word vocabulary, far too small for a
 production-depth table), truncates to exactly ``--merges`` ranks (a
 rank-prefix of a merge sequence is itself a valid merge table: encoding
@@ -49,7 +49,7 @@ def main() -> None:
     ap.add_argument("--out", default="fixtures/bpe_merges_32k")
     args = ap.parse_args()
 
-    from tools.bpe_vocab_probe import zipf_words
+    from tests.datagen import zipf_words
     from tweets_spark_top_10_spark.functions.bpe import (
         MERGE_SCHEMA,
         learn_from_words_batched,

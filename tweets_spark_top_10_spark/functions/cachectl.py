@@ -2,10 +2,10 @@
 
 Several operators ``persist()`` a multiply-referenced intermediate
 (shingle tables, sketch signatures, PQ residuals) so the expensive
-subplan runs once instead of per-reference.  ``bench.py`` clears the
-session cache between queries, but a long-lived session running many
-catalog queries back-to-back (the correctness driver runs ~80 in one
-session) would otherwise accumulate cached blocks without bound.
+subplan runs once instead of per-reference.  A long-lived session
+running many catalog queries back-to-back (the correctness driver runs
+~80 in one session) would otherwise accumulate cached blocks without
+bound.
 
 ``persist_tracked`` is a drop-in replacement for ``DataFrame.persist``
 that records the handle per session; ``release_persisted`` unpersists

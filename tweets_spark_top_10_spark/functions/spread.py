@@ -22,8 +22,6 @@ micro-batch partitioning is the source's concern.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # The probe below asks the PHYSICAL width via ``df.rdd`` — but under AQE
@@ -75,14 +73,8 @@ def spread_scan(df: DataFrame) -> DataFrame:
     Apply at the START of an expression-heavy pipeline (before the
     tokenize/shingle/scoring projections), AFTER any selective filter
     (fewer rows shuffle; the filter itself still pushes down — Catalyst
-    moves filters through Repartition in either case).
-
-    ``SPARK_GRAFT_SPREAD_OFF=1`` forces the identity branch — the
-    measurement knob for interleaved on/off A/Bs within one session
-    (tools/ab_interleave.py); unset in production and in the bench."""
+    moves filters through Repartition in either case)."""
     if df.isStreaming:
-        return df
-    if os.environ.get("SPARK_GRAFT_SPREAD_OFF"):
         return df
     if not _scan_shaped(df):
         return df

@@ -25,8 +25,7 @@ Order:
 
 and within a tier the original registration order is preserved.  Under
 a ~50-row budget this guarantees a red row gets re-checked the very
-next round.  After each round, fold that round's CORRECTNESS_r{N}.json
-into both structures (``tools/update_check_history.py``).
+next round.  The tables below are maintained by hand.
 ``tests/test_plan_audit.py`` asserts the rotation is monotone.
 """
 
@@ -51,12 +50,11 @@ from tweets_spark_top_10_spark.queries import (  # noqa: F401
 )
 from tweets_spark_top_10_spark.queries.registry import ORACLE, QUERIES
 
-# Last round in which the driver's CORRECTNESS_r{N}.json contained a
-# row for the query.  Maintained from the driver artifacts (the keys of
-# CORRECTNESS_r01/r02): a query absent here has never been checked and
-# sorts first.  Every row listed below was green in its round (r2 had
-# zero fails; the r1 rows listed here are the 30 not re-checked in r2,
-# all green in r1).
+# Last round in which the driver's correctness report contained a
+# row for the query.  Maintained by hand: a query absent here has never
+# been checked and sorts first.  Every row listed below was green in
+# its round (r2 had zero fails; the r1 rows listed here are the 30 not
+# re-checked in r2, all green in r1).
 _LAST_CHECKED: dict[str, int] = {
     # --- last driver row: round 15 ---
     "user_running_value": 15,
@@ -215,8 +213,8 @@ _LAST_CHECKED: dict[str, int] = {
 
 
 # Queries whose LATEST driver row was red (ERR / hash-fail /
-# no_oracle).  Maintained by tools/update_check_history.py; these sort
-# ahead of everything, including never-checked queries.
+# no_oracle).  Maintained by hand; these sort ahead of everything,
+# including never-checked queries.
 _RED_LATEST: set[str] = set()
 
 # Queries whose IMPLEMENTATION was rewritten after their last driver
@@ -225,16 +223,14 @@ _RED_LATEST: set[str] = set()
 # LAST under stale-first ordering, so without this a rewrite could
 # wait ~3 rounds for driver re-proof (round-11: the lsh_knn_top5 SRP
 # rewrite landed the round after its last check).  These sort just
-# after red; tools/update_check_history.py clears a name once a driver
-# row from >= its marked round lands.
+# after red; clear a name by hand once a driver row from >= its marked
+# round lands.
 #
 # round-12: srp_signatures gained entry guards (n_bits <= 62
 # ValueError; in-plan raise_error on vector length != dim) — the
 # __codes expression is now wrapped in a CASE WHEN, so re-prove the
 # SRP-banding consumer even though valid-data values are
 # byte-identical (guards verified perf-neutral, same harness).
-# NOTE: only ENTRY lines inside the braces survive regeneration by
-# tools/update_check_history.py — keep curation notes out here.
 _REPROVE_NEXT: dict[str, int] = {}
 
 

@@ -361,8 +361,8 @@ def lsh_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regression): srp_knn's first operator over the candidates is the
     # banding AGGREGATE (map-side combining), so the conditional
     # fan-out exchange cost more than the parallelism bought — the same
-    # decision rule as the BPE word table.  Interleaved on/off min-of-4
-    # (tools/ab_interleave.py): 2.41 s spread vs 1.91 s unspread.
+    # decision rule as the BPE word table.  Interleaved on/off min-of-4:
+    # 2.41 s spread vs 1.91 s unspread.
     cands = emb.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     )
@@ -770,8 +770,7 @@ def lsh_knn_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regression): the candidates feed the ml LSH fit/transform and a
     # broadcast cross join whose own stages already parallelize, and
     # the added exchange measured as a net loss — interleaved on/off
-    # min-of-4 (tools/ab_interleave.py): 2.32 s spread vs 1.84 s
-    # unspread.
+    # min-of-4: 2.32 s spread vs 1.84 s unspread.
     cands = emb.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     )

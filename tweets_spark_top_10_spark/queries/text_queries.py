@@ -249,9 +249,9 @@ def doc_tfidf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread_scan-fanned (r17, adjudicating the r16 driver
     # regression): the explode feeds two map-side-combining aggregates
     # directly — the BPE-word-table decision rule — and the conditional
-    # exchange measured as a net loss: interleaved on/off min-of-4
-    # (tools/ab_interleave.py) 1.73 s spread vs 1.27 s unspread (every
-    # unspread pass beat every spread pass).
+    # exchange measured as a net loss: interleaved on/off min-of-4,
+    # 1.73 s spread vs 1.27 s unspread (every unspread pass beat every
+    # spread pass).
     toks = docs.select(
         "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
     )
@@ -503,8 +503,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r17, adjudicating the r16 driver regression): the table's first
     # consumer is the signature AGGREGATE (map-side combining), so the
     # conditional fan-out exchange cost more than it bought here —
-    # interleaved on/off min-of-4 (tools/ab_interleave.py): 5.52 s
-    # spread vs 5.10 s unspread, and the r16 driver run read +32% with
+    # interleaved on/off min-of-4: 5.52 s spread vs 5.10 s
+    # unspread, and the r16 driver run read +32% with
     # it on.  (The ngram_jaccard family KEEPS its shingle spread: its
     # first consumer is the DF-cap + pair self-join, where the r16
     # interleaved A/B read 5.23 spread vs 6.28 unspread.)

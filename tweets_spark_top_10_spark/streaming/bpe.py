@@ -288,10 +288,9 @@ def bpe_step(
     relearn_window_factor: int = 8,
 ) -> dict:
     """One micro-batch of vocab maintenance — the exact body
-    ``maintain_bpe_vocab`` runs per batch, exposed so the scale probe
-    (``tools/stream_scale_probe.py`` mode ``bpe``) drives the
-    IDENTICAL path it measures.  Returns {folded, relearned,
-    stored_tokens} telemetry."""
+    ``maintain_bpe_vocab`` runs per batch, exposed so a caller that
+    drives batches itself runs the IDENTICAL path.  Returns {folded,
+    relearned, stored_tokens} telemetry."""
     if batch_df.isEmpty():
         return {"folded": False, "relearned": False, "stored_tokens": None}
     spark = batch_df.sparkSession
