@@ -35,15 +35,17 @@ def test_long_path_converges(spark):
     assert got == {(i, 0) for i in range(13)}
 
 
-def test_cc_deep_chain_converges_in_log_rounds(spark):
+def test_cc_deep_chain_converges_in_log_rounds(spark, monkeypatch):
     """Adversarial DEEP chain (diameter 1024): the Kiveris'14
     large-star/small-star alternation must label it exactly AND inside
     a logarithmic round budget.  Min-label propagation needs ~d/2
     rounds (512 here — far past any sane max_iter); the star algorithm
     contracts it in O(log d).  This is the iteration-count A/B from
-    round-6 verdict item 5."""
+    round-6 verdict item 5.  The driver finish is disabled so the star
+    rounds run."""
     import tweets_spark_top_10_spark.functions.dedup as dd
 
+    monkeypatch.setattr(dd, "_DRIVER_CC_MAX_EDGES", 0)
     n = 1024
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
@@ -54,6 +56,39 @@ def test_cc_deep_chain_converges_in_log_rounds(spark):
         f"deep chain took {dd._last_cc_rounds} rounds — lost the "
         "logarithmic contraction (label propagation would need ~512)"
     )
+
+
+def test_cc_unconverged_star_rounds_raise(spark, monkeypatch):
+    """Star rounds that hit max_iter before a fixed point must raise,
+    naming the round count, instead of returning labels that are not
+    min-rooted yet."""
+    import pytest
+
+    import tweets_spark_top_10_spark.functions.dedup as dd
+
+    monkeypatch.setattr(dd, "_DRIVER_CC_MAX_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="in 1 rounds"):
+        connected_components(pairs, max_iter=1)
+
+
+def test_cc_driver_and_star_paths_agree(spark, monkeypatch):
+    """A small graph finishes on the driver (0 star rounds), and the
+    driver finish labels exactly like the star rounds — self-loop-only
+    nodes (9, 30) included, each labeled with itself."""
+    import tweets_spark_top_10_spark.functions.dedup as dd
+
+    pairs = [(1, 2), (3, 2), (9, 9), (7, 5), (5, 6), (30, 30), (6, 4), (4, 4)]
+    driver = _cc(spark, pairs)
+    assert dd._last_cc_rounds == 0
+    monkeypatch.setattr(dd, "_DRIVER_CC_MAX_EDGES", 0)
+    star = _cc(spark, pairs)
+    assert dd._last_cc_rounds > 0
+    assert driver == star == {
+        (1, 1), (2, 1), (3, 1), (9, 9), (4, 4), (5, 4), (6, 4), (7, 4), (30, 30),
+    }
 
 
 def test_bridged_components_matches_global_cc_on_union(spark):

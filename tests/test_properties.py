@@ -157,21 +157,21 @@ def test_avro_codec_roundtrip_property(recs, codec):
         assert have == want
 
 
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 40), st.integers(0, 40)),
-        min_size=1,
-        max_size=60,
-    )
+_edge_lists = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 40)),
+    min_size=1,
+    max_size=60,
 )
-def test_connected_components_matches_union_find(spark, edges):
-    """Star-contraction CC == a trivial driver-side union-find on
-    arbitrary random graphs (self-loops, duplicates, disjoint bits):
-    every node must be labeled with the minimum id reachable from it.
-    Property-based gate for the Kiveris'14 rewrite — the oracle queries
-    only cover near-dup-shaped graphs; this covers adversarial ones."""
-    from tweets_spark_top_10_spark.functions.dedup import connected_components
+
+
+def _check_cc_against_union_find(spark, edges, driver_cap):
+    """connected_components == a trivial union-find written here (not
+    the engine's helper) on an arbitrary graph, with the driver-finish
+    threshold set to ``driver_cap``: every node must be labeled with
+    the minimum id reachable from it."""
+    from unittest import mock
+
+    import tweets_spark_top_10_spark.functions.dedup as dd
 
     parent: dict[int, int] = {}
 
@@ -191,10 +191,35 @@ def test_connected_components_matches_union_find(spark, edges):
     want = {n: find(n) for n in parent}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r.node: r.component for r in connected_components(df).collect()
-    }
+    with mock.patch.object(dd, "_DRIVER_CC_MAX_EDGES", driver_cap):
+        got = {
+            r.node: r.component
+            for r in dd.connected_components(df).collect()
+        }
     assert got == want
+    return dd._last_cc_rounds
+
+
+@settings(max_examples=5, deadline=None)
+@given(_edge_lists)
+def test_connected_components_matches_union_find(spark, edges):
+    """Driver-finish CC == a trivial union-find on arbitrary random
+    graphs (self-loops, duplicates, disjoint bits).  Property-based
+    gate: the oracle queries only cover near-dup-shaped graphs; this
+    covers adversarial ones.  A graph this small takes the driver path
+    (0 star rounds)."""
+    import tweets_spark_top_10_spark.functions.dedup as dd
+
+    cap = dd._DRIVER_CC_MAX_EDGES
+    assert _check_cc_against_union_find(spark, edges, cap) == 0
+
+
+@settings(max_examples=5, deadline=None)
+@given(_edge_lists)
+def test_connected_components_star_path_matches_union_find(spark, edges):
+    """The same property with the driver finish disabled, so the
+    Kiveris'14 large-star/small-star rounds label the graph."""
+    assert _check_cc_against_union_find(spark, edges, 0) > 0
 
 
 def test_srp_signatures_match_definition_at_nondefault_geometry(spark):

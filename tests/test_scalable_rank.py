@@ -185,3 +185,53 @@ def test_grouped_exact_quantiles_single_member_groups(spark):
     for r in rows:
         assert r["e0"] == r["e1"] == r["e2"] == float(r["g"] * 10)
     spark.catalog.clearCache()
+
+
+def test_grouped_exact_quantiles_nulls_match_builtin(spark):
+    """Null measure values are skipped and a null group key is a group
+    of its own, as in the builtin grouped `percentile` — over two fused
+    measures, with a group whose first measure is all null and a group
+    whose every value is null (both still emit their row)."""
+    from tweets_spark_top_10_spark.operators.scalable_rank import (
+        grouped_exact_quantiles_multi,
+    )
+
+    rows = []
+    for i in range(400):
+        g = [1, 2, None, 3][i % 4]
+        v = None if i % 7 == 0 or g == 3 else float(i % 23)
+        w = None if i % 5 == 0 else float(i % 11)
+        rows.append((g, v, w))
+    rows += [(4, None, None), (4, None, None)]
+    df = spark.createDataFrame(rows, "g int, v double, w double")
+    qs = [0.0, 0.25, 0.5, 0.9, 1.0]
+    arr = "array(" + ", ".join(str(q) for q in qs) + ")"
+
+    def listed(x):
+        return list(x) if x is not None else [None] * len(qs)
+
+    want = {
+        r["g"]: listed(r["pv"]) + listed(r["pw"])
+        for r in df.groupBy("g")
+        .agg(
+            F.expr(f"percentile(v, {arr})").alias("pv"),
+            F.expr(f"percentile(w, {arr})").alias("pw"),
+        )
+        .collect()
+    }
+    got_df = grouped_exact_quantiles_multi(
+        df,
+        ["g"],
+        [
+            ("v", [(q, f"v{i}") for i, q in enumerate(qs)]),
+            ("w", [(q, f"w{i}") for i, q in enumerate(qs)]),
+        ],
+    )
+    got = {
+        r["g"]: [r[f"v{i}"] for i in range(len(qs))]
+        + [r[f"w{i}"] for i in range(len(qs))]
+        for r in got_df.collect()
+    }
+    assert None in want and 3 in want and 4 in want
+    assert got == want, (got, want)
+    spark.catalog.clearCache()

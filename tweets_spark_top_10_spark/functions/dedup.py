@@ -27,6 +27,7 @@ are written artifacts, not session caches.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -566,8 +567,42 @@ def expand_rep_pairs(
 
 
 #: Rounds the last :func:`connected_components` call took to converge —
-#: read by the deep-chain A/B test; not part of the stable API.
+#: 0 when it finished on the driver; read by the deep-chain A/B test;
+#: not part of the stable API.
 _last_cc_rounds: int = 0
+
+#: Largest edge count :func:`connected_components` labels on the driver
+#: (one union-find over the collected edges) instead of running the
+#: distributed star rounds.  See that function's docstring for the
+#: measured crossover.
+_DRIVER_CC_MAX_EDGES = 1_000_000
+
+
+def _min_root_labels(edges) -> dict:
+    """Union-find over an iterable of ``(a, b)`` edges: a dict mapping
+    every endpoint to the minimum id reachable from it.
+
+    Union-by-min keeps each root the minimum of its set, and path
+    halving keeps ``find`` near-constant; a self-loop ``(a, a)`` just
+    registers ``a`` as its own component."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {x: find(x) for x in parent}
 
 
 def connected_components(
@@ -577,6 +612,24 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """Dedup clusters: connected components over a near-dup pair list.
+
+    The pair list is materialized once and counted.  A graph of at most
+    :data:`_DRIVER_CC_MAX_EDGES` edges is collected (Arrow) and labeled
+    with one union-find on the driver (:func:`_min_root_labels`): the
+    per-shard cost of the star rounds below is per-job scheduling, not
+    compute — ~26 small jobs for a ~5k-edge benchmark shard — so a
+    small graph finishes in one collect.  Measured on a 4-core host
+    (``local[4]``, warm JVM) over near-dup-shaped graphs (components of
+    4–64 nodes, half chains, half cliques), driver finish vs. star
+    rounds, result counted: 5k edges 0.2 vs 7.0 s, 100k 0.6 vs 7.7 s,
+    300k 1.6 vs 13.9 s, 1M 4.3 vs 17.6 s, 3M 14.7 vs 41.8 s.  On one
+    host the star rounds never win; their ~7 s is fixed per-job cost
+    plus ~12 µs per edge on 4 cores, and a cluster divides the
+    per-edge part while the driver's ~5 µs per edge is one Python
+    thread.  The driver finish reaches the star rounds' fixed cost at
+    about 1.5M edges, so the constant is 1M: below it the driver wins
+    on any cluster size, at a driver peak of ~170 MB of Python memory
+    (~520 MB at 3M).  Above it the distributed path runs unchanged.
 
     Alternating large-star / small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC 2014) — each round is two
@@ -597,25 +650,39 @@ def connected_components(
     round (at 100 TB this would be a persisted iteration table);
     convergence is probed with a single-row checksum aggregate
     (count + hash-sum) — one cheap action per round, with ``max_iter``
-    as the hard bound.
+    as the hard bound: a contraction still moving after ``max_iter``
+    rounds raises ``RuntimeError`` rather than return labels that are
+    not yet min-rooted.
 
     Output: (node, component) — component = min doc id reachable;
-    identical labels/semantics to the propagation version this
-    replaced, so the recursive-CTE oracle is unchanged.  Only nodes
-    appearing in pairs are labeled (isolated docs are trivially their
-    own cluster).
+    identical labels on both paths, so the recursive-CTE oracle is
+    unchanged.  Only nodes appearing in pairs are labeled (isolated
+    docs are trivially their own cluster; a node seen only in a
+    self-loop is labeled with itself).
     """
     global _last_cc_rounds
     # Materialize the (often expensive) upstream pair plan exactly ONCE;
-    # everything below — node inventory included — reads the checkpoint,
-    # so the returned plan never re-evaluates candidate generation.
-    # Lazy (r16): round 1's convergence collect is the first action over
-    # `e` (which derives from e0), so it materializes this checkpoint
-    # too — eager=True ran the whole candidate pipeline as a separate
-    # blocking job at query-construction time for the same truncation.
+    # the count below is its first action, and everything after it —
+    # the driver collect, or the node inventory and star rounds — reads
+    # the checkpoint, so candidate generation never re-evaluates.
     e0 = pairs.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=False)
+    if e0.count() <= _DRIVER_CC_MAX_EDGES:
+        t = e0.toArrow()
+        labels = _min_root_labels(
+            zip(t.column("u").to_pylist(), t.column("v").to_pylist())
+        )
+        _last_cc_rounds = 0
+        id_type = t.schema.field("u").type
+        return pairs.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(list(labels), id_type),
+                    "component": pa.array(list(labels.values()), id_type),
+                }
+            )
+        )
     nodes = (
         e0.select(F.explode(F.array("u", "v")).alias("node")).distinct()
     )
@@ -694,6 +761,11 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components: star contraction did not reach a fixed "
+            f"point in {max_iter} rounds; its labels are not min-rooted yet"
+        )
     comp_map = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return (
         nodes.join(comp_map, "node", "left")
@@ -734,26 +806,9 @@ def blocked_components(
     import pandas as pd
 
     def _cc(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(pdf[src], pdf[dst]):
-            a, b = int(a), int(b)
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
+        labels = _min_root_labels(zip(pdf[src].tolist(), pdf[dst].tolist()))
         return pd.DataFrame(
-            [(x, find(x)) for x in parent], columns=["node", "component"]
+            {"node": list(labels), "component": list(labels.values())}
         )
 
     return pairs.groupBy(*block_cols).applyInPandas(

@@ -256,8 +256,8 @@ def grouped_exact_quantiles(
     Ties in ``value_col`` are fine for the same reason as in
     :func:`exact_quantiles`: the value AT a rank is invariant to how a
     run of equal values is ordered or split across range partitions.
-    Nulls in ``value_col`` must be absent (the builtin skips them; this
-    operator would rank them) — callers pass non-null measure columns.
+    Nulls follow the builtin: null values are skipped, and a null group
+    key is a group of its own (see :func:`grouped_exact_quantiles_multi`).
     """
     return grouped_exact_quantiles_multi(
         df,
@@ -270,7 +270,6 @@ def grouped_exact_quantiles_multi(
     df: DataFrame,
     group_cols: list[str],
     specs: list[tuple[str, list[tuple[float, str]]]],
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Per-group exact quantiles over SEVERAL measure columns in ONE
     corpus pass — ``specs`` is ``[(value_col, [(q, out_name), ...]),
@@ -289,6 +288,20 @@ def grouped_exact_quantiles_multi(
     ~builtin-parity fused; the builtin itself is 1.5 s).  All quantiles
     are probed for every tag (wasted probes are metadata) and the final
     pivot keeps only the requested (tag, q) pairs.
+
+    Nulls match the builtin ``percentile``.  A null measure value is
+    routed to the shadow tag ``-1 - i``, which the pivot never reads: it
+    takes no rank among its measure's values, yet a group whose values
+    are all null still yields a row (of nulls).  Group keys join
+    null-safely (``<=>``), so a null group key is one more group.
+
+    The ranked intermediate is always persisted.  Its range exchange is
+    nondeterministic: the range partitioner samples with a seed derived
+    from the RDD id, and ``spark_partition_id`` /
+    ``monotonically_increasing_id`` depend on the layout it picks.  If
+    the exchange re-ran per consumer, the offsets could be computed
+    against a different layout from the one the probe join reads, and
+    the per-execution ``assert_true`` could not see the drift.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     pre = df.select(
@@ -297,7 +310,9 @@ def grouped_exact_quantiles_multi(
             F.array(
                 *[
                     F.struct(
-                        F.lit(i).alias("__tag"),
+                        F.when(F.col(vc).isNull(), F.lit(-1 - i))
+                        .otherwise(F.lit(i))
+                        .alias("__tag"),
                         F.col(vc).cast("double").alias("__val"),
                     )
                     for i, (vc, _) in enumerate(specs)
@@ -312,7 +327,7 @@ def grouped_exact_quantiles_multi(
     base_cols = list(group_cols)
     group_cols = [*group_cols, "__tag"]
     value_col = "__val"
-    tagged = (
+    tagged = persist_tracked(
         pre.repartitionByRange(parallelism, *group_cols, value_col)
         .sortWithinPartitions(*group_cols, value_col)
         .select(
@@ -321,8 +336,6 @@ def grouped_exact_quantiles_multi(
             F.monotonically_increasing_id().alias("__mid"),
         )
     )
-    if persist_intermediate:
-        tagged = persist_tracked(tagged)
     # per-(partition, group) extents: one row per (pid, group) —
     # metadata-sized (#partitions x #groups).  Consecutive-mid contract
     # enforced per (pid, group): rows of a group are contiguous within a
@@ -400,7 +413,7 @@ def grouped_exact_quantiles_multi(
     # Three corpus passes total: cache build, per_pg, hit.
     gmatch = reduce(
         lambda a, b: a & b,
-        [F.col(c) == F.col(f"__g_{c}") for c in group_cols],
+        [F.col(c).eqNullSafe(F.col(f"__g_{c}")) for c in group_cols],
     )
     targets = offs.join(
         probes,

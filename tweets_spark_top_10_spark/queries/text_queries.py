@@ -323,10 +323,11 @@ def doc_tfidf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: n-gram Jaccard pairs → connected components
-    via iterative min-label propagation (functions/dedup.py).  The
-    oracle recomputes components with a recursive CTE — the iterative
-    DataFrame algorithm is under the full value gate.  The pair step
-    runs with the same ``max_shingle_df=100`` hot-shingle cap as
+    (functions/dedup.py): a driver union-find when the pair list is at
+    most 1M edges, else the large-star/small-star contraction; both
+    give each node its minimum reachable id.  The oracle recomputes
+    components with a recursive CTE, so the DataFrame result is under
+    the full value gate.  The pair step runs with the same ``max_shingle_df=100`` hot-shingle cap as
     ``ngram_jaccard_dup_pairs`` (mirrored in the oracle), so the edge
     list stays sub-quadratic at scale."""
     from tweets_spark_top_10_spark.functions.dedup import connected_components
