@@ -2616,8 +2616,8 @@ def test_windowed_mg_crash_between_closed_write_and_live_swap(
         window="hour", batch_id=0,
     )
 
-    real_swap = hh._swap_in
-    hh._swap_in = lambda *a, **kw: (_ for _ in ()).throw(
+    real_swap = hh.swap_in
+    hh.swap_in = lambda *a, **kw: (_ for _ in ()).throw(
         RuntimeError("crash after closed write, before live swap")
     )
     try:
@@ -2629,7 +2629,7 @@ def test_windowed_mg_crash_between_closed_write_and_live_swap(
                 delay_seconds=3600, window="hour", batch_id=1,
             )
     finally:
-        hh._swap_in = real_swap
+        hh.swap_in = real_swap
 
     # replay the same batch id; must complete and not double anything
     hh.merge_mg_batch_windowed(

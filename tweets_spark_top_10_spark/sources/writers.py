@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
+
 
 def write_csv_top_k(df: DataFrame, path: str, k: int = 10) -> None:
     """Write the top-K rows as a single headered CSV, overwriting.
@@ -22,59 +24,36 @@ def write_csv_top_k(df: DataFrame, path: str, k: int = 10) -> None:
     df.limit(k).coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_files: int,
-    tmp_suffix: str = "__compact_tmp",
-) -> int:
+def compact_parquet(spark, path: str, target_files: int) -> int:
     """Compact a small-files parquet directory to ``target_files`` files.
 
     The small-files problem is the classic file-based-lake failure mode
     (per-hour streaming sinks emit one file per micro-batch per
     partition; a year later the table is millions of tiny files and the
-    driver chokes on listing).  Read → coalesce (no shuffle) → write to
-    a sibling tmp dir → atomic-ish swap.  At real scale this runs per
-    partition, not per table.  Returns the new file count.
+    driver chokes on listing).  Read → coalesce (no shuffle) → write the
+    stage → publish with ``sources/swap.py``.  At real scale this runs
+    per partition, not per table.  Returns the new file count.
 
     Row preservation is checked against the SOURCE count (counted before
-    the rewrite), and the swap keeps the original directory intact until
-    the compacted copy has passed that check: original -> renamed aside,
-    tmp -> live, aside deleted last.  A crash mid-swap leaves either the
-    original or both copies on disk — never neither.
+    the rewrite) inside the stage write, so a compacted copy that lost
+    rows raises before the swap and the live table is never touched.
     """
     import glob
-    import os
     import shutil
 
-    tmp = path.rstrip("/") + tmp_suffix
-    old = path.rstrip("/") + "__compact_old"
-    # Re-entrancy with RECOVERY: a crash between the two renames leaves
-    # `path` missing and the data alive only in the aside (original) or
-    # tmp (count-checked compacted copy) — restore before any cleanup,
-    # never delete a directory that is the table's only copy.  Only
-    # once `path` exists are leftovers safe to clear (os.rename onto a
-    # non-empty dir raises ENOTEMPTY otherwise).
-    if not os.path.exists(path):
-        if os.path.exists(old):
-            os.rename(old, path)
-        elif os.path.exists(tmp):
-            os.rename(tmp, path)
-    if os.path.exists(path):
-        for leftover in (tmp, old):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
+    recover(path)
     before = spark.read.parquet(path).count()
-    spark.read.parquet(path).coalesce(target_files).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    compacted = spark.read.parquet(tmp).count()
-    if compacted != before:
-        shutil.rmtree(tmp)
-        raise AssertionError(f"compaction lost rows: {before} -> {compacted}")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+
+    def _write(staging: str) -> None:
+        spark.read.parquet(path).coalesce(target_files).write.mode(
+            "overwrite"
+        ).parquet(staging)
+        compacted = spark.read.parquet(staging).count()
+        if compacted != before:
+            shutil.rmtree(staging)
+            raise AssertionError(f"compaction lost rows: {before} -> {compacted}")
+
+    swap_in(path, _write)
     return len(glob.glob(f"{path}/part-*.parquet"))
 
 

@@ -41,7 +41,7 @@ from tweets_spark_top_10_spark.streaming.sketch import upsert_rows_by_bucket
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
-def _one_per_id(
+def one_per_id(
     batch_vecs: DataFrame,
     id_col: str,
     vec_col: str,
@@ -74,9 +74,9 @@ def upsert_vector_cells_batch(
     seq_col: str | None = None,
 ) -> None:
     """Merge one batch of vectors into the cell-assignment table."""
-    one_per_id = _one_per_id(batch_vecs, id_col, vec_col, seq_col)
+    latest = one_per_id(batch_vecs, id_col, vec_col, seq_col)
     assigned = ivf_assign_cells(
-        one_per_id, centroids, id_col, vec_col, n_probe=1
+        latest, centroids, id_col, vec_col, n_probe=1
     ).withColumn("bucket", hash_bucket(id_col, n_buckets))
     upsert_rows_by_bucket(spark, assigned, table_path, id_col)
 
@@ -134,8 +134,8 @@ def upsert_rp_cells_batch(
     maintained artifact like its 64-dim sibling, never a rebuild.
     The rerank half needs no maintenance at all: it reads the base
     vector table by id at query time."""
-    one_per_id = _one_per_id(batch_vecs, id_col, vec_col, seq_col)
-    projected = rp_array(one_per_id, id_col, vec_col, d_out=d_out)
+    latest = one_per_id(batch_vecs, id_col, vec_col, seq_col)
+    projected = rp_array(latest, id_col, vec_col, d_out=d_out)
     assigned = ivf_assign_cells(
         projected, centroids, id_col, "rp_vec", n_probe=1
     ).withColumn("bucket", hash_bucket(id_col, n_buckets))
@@ -206,11 +206,11 @@ def upsert_pq_codes_batch(
     """
     from tweets_spark_top_10_spark.functions.pq import apply_permutation, pq_encode
 
-    one_per_id = _one_per_id(batch_vecs, id_col, vec_col, seq_col)
+    latest = one_per_id(batch_vecs, id_col, vec_col, seq_col)
     if perm is not None:
-        one_per_id = apply_permutation(one_per_id, id_col, perm, vec_col)
+        latest = apply_permutation(latest, id_col, perm, vec_col)
     codes = pq_encode(
-        one_per_id, codebook, id_col, vec_col, m, sub_dim
+        latest, codebook, id_col, vec_col, m, sub_dim
     ).withColumn("bucket", hash_bucket(id_col, n_buckets))
     upsert_rows_by_bucket(spark, codes, table_path, id_col)
 

@@ -5,12 +5,12 @@ key-set filter per run; at 100 TB the dimension churns continuously
 and a rebuild re-reads it all.  Bloom bit-words are mergeable
 (``bit_or`` is commutative, associative, idempotent), so the filter
 can be maintained incrementally: each micro-batch contributes its
-sparse word updates, OR-merged into the stored word table under an
-atomic dir swap.  The maintained table is bit-identical to a
-single-pass batch build over the union of all streamed keys — which
-is exactly what the differential test asserts — so every
-``bloom_might_contain`` guarantee (zero false negatives) carries
-over.  Deletes are the known Bloom limitation (bits are never
+sparse word updates, OR-merged into the stored word table and
+published by ``sources/swap.py``.  The maintained table is
+bit-identical to a single-pass batch build over the union of all
+streamed keys — which is exactly what the differential test asserts —
+so every ``bloom_might_contain`` guarantee (zero false negatives)
+carries over.  Deletes are the known Bloom limitation (bits are never
 cleared); a pipeline that needs them rebuilds periodically or uses a
 counting filter — documented, not hidden.
 
@@ -19,13 +19,11 @@ State is at most ``m_bits/64`` rows regardless of stream length.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.functions.bloom import bloom_word_updates
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
@@ -39,26 +37,15 @@ def merge_bloom_batch(
 ) -> None:
     """OR one micro-batch's word updates into the stored word table."""
     updates = bloom_word_updates(batch_keys, key_col, m_bits=m_bits, k=k)
-    aside = table_path.rstrip("/") + "__old"
-    staging = table_path.rstrip("/") + "__stage"
-    if os.path.exists(aside):
-        if not os.path.exists(table_path):
-            os.rename(aside, table_path)
-        else:
-            shutil.rmtree(aside)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    if os.path.exists(table_path):
+    if recover(table_path):
         merged = spark.read.parquet(table_path).unionByName(updates)
     else:
         merged = updates
     merged = merged.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
-    merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    if os.path.exists(table_path):
-        os.rename(table_path, aside)
-    os.rename(staging, table_path)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
+    swap_in(
+        table_path,
+        lambda staging: merged.coalesce(1).write.mode("overwrite").parquet(staging),
+    )
 
 
 def maintain_bloom(
@@ -87,6 +74,7 @@ def maintain_bloom(
 
 def read_bloom_words(spark, table_path: str, m_bits: int = 1 << 16) -> list[int]:
     """Densify the stored word table for ``bloom_might_contain``."""
+    recover(table_path)
     dense = [0] * (m_bits // 64)
     for r in spark.read.parquet(table_path).collect():
         dense[int(r["word_idx"])] = int(r["word"])

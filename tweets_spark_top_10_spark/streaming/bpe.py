@@ -9,9 +9,8 @@ recomputations.  This module attaches both to a document stream
 
 1. **Word-frequency table** ({state_dir}/words, columns ``s, freq``):
    each micro-batch's word counts fold ADDITIVELY into the stored
-   table (union → groupBy sum → atomic dir swap).  Replay idempotence
-   rides the MG batch-id-marker protocol
-   (``streaming/heavy_hitters._already_merged``): a redelivered
+   table (union → groupBy sum → ``sources/swap.py`` publish).  Replay
+   idempotence rides that module's batch-id marker: a redelivered
    micro-batch (crash between the swap and the streaming checkpoint
    commit) skips the fold instead of double-counting.  The fold
    rewrites the word table per batch — at Zipf scale that table is
@@ -51,11 +50,7 @@ from tweets_spark_top_10_spark.functions.bpe import (
     learn_from_words_batched,
     word_frequency_table,
 )
-from tweets_spark_top_10_spark.streaming.heavy_hitters import (
-    _already_merged,
-    _recover,
-)
-from tweets_spark_top_10_spark.streaming.ivm import _swap_write
+from tweets_spark_top_10_spark.sources.swap import already_merged, recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
@@ -80,7 +75,7 @@ def _sniff_words_encoding(words: str) -> str | None:
     pyarrow (no Spark session needed): a v2 multi-symbol row contains
     a double-space separator (``' h  i '``), a v1 row single spaces
     (``' h i '``).  The dir is always the atomic output of ONE writer
-    version (``_swap_write`` swaps whole dirs), so the first decisive
+    version (``sources/swap.py`` swaps whole dirs), so the first decisive
     row settles it.  Returns '1', '2', 'coincide' (every row scanned
     is single-symbol, where the two encodings are byte-identical), or
     None (no readable rows — corrupt/empty, nothing provable)."""
@@ -134,7 +129,7 @@ def _assert_encoding(state_dir: str, stamp: bool = False) -> None:
                 "state dir (it rebuilds from the stream) or migrate it"
             )
         return
-    if os.path.exists(_words_dir(state_dir)):
+    if recover(_words_dir(state_dir)):
         sniffed = _sniff_words_encoding(_words_dir(state_dir))
         if sniffed == "1":
             raise RuntimeError(
@@ -174,7 +169,7 @@ def _merges_dir(state_dir: str) -> str:
 def read_bpe_words(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current maintained word-frequency table (s, freq)."""
     _assert_encoding(state_dir)
-    _recover(_words_dir(state_dir))
+    recover(_words_dir(state_dir))
     return spark.read.parquet(_words_dir(state_dir))
 
 
@@ -182,7 +177,7 @@ def read_bpe_merges(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current maintained merge table (MERGE_SCHEMA columns; the
     rank-0 bookkeeping sentinel row is internal and filtered out)."""
     _assert_encoding(state_dir)
-    _recover(_merges_dir(state_dir))
+    recover(_merges_dir(state_dir))
     return (
         spark.read.parquet(_merges_dir(state_dir))
         .where(F.col("merge_rank") >= 1)
@@ -197,11 +192,11 @@ def _fold_words_batch(
     """Additively merge one batch's word counts into the stored table
     (skipped entirely when ``batch_id`` already landed)."""
     words = _words_dir(state_dir)
-    _recover(words)
-    if _already_merged(words, batch_id):
+    live = recover(words)
+    if already_merged(words, batch_id):
         return
     delta = word_frequency_table(batch_docs, text_col)
-    if os.path.exists(words):
+    if live:
         merged = (
             spark.read.parquet(words)
             .unionByName(delta)
@@ -212,7 +207,10 @@ def _fold_words_batch(
         merged = delta
     # the swap overwrites the dir the plan reads from — materialize
     # the merged counts off the old files first
-    _swap_write(merged.localCheckpoint(eager=True), words, batch_id)
+    merged = merged.localCheckpoint(eager=True)
+    swap_in(
+        words, lambda staging: merged.write.mode("overwrite").parquet(staging), batch_id
+    )
 
 
 def _stored_tokens(spark: SparkSession, state_dir: str) -> int:
@@ -297,9 +295,8 @@ def bpe_step(
     _assert_encoding(state_dir, stamp=True)
     _fold_words_batch(spark, batch_df, state_dir, text_col, batch_id)
     mdir = _merges_dir(state_dir)
-    _recover(mdir)
     fitted = None
-    if os.path.exists(mdir):
+    if recover(mdir):
         head = spark.read.parquet(mdir).select("fitted_tokens").head()
         fitted = int(head[0]) if head is not None else None
     total = _stored_tokens(spark, state_dir)
@@ -324,7 +321,9 @@ def bpe_step(
     ).withColumn("fitted_tokens", F.lit(total).cast("long"))
     # merge table + fitted_tokens advance LAST — crash inside the
     # re-learn leaves the trigger armed, replay converges
-    _swap_write(table, mdir, batch_id)
+    swap_in(
+        mdir, lambda staging: table.write.mode("overwrite").parquet(staging), batch_id
+    )
     return {"folded": True, "relearned": True, "stored_tokens": total}
 
 
@@ -335,7 +334,7 @@ def read_bpe_merge_rules(
     encoders consume (K rows — metadata-class, same as centroid books).
     [] when the maintainer has not produced a table yet (bootstrap:
     encoding degrades to character segmentation, never an error)."""
-    if not os.path.exists(_merges_dir(state_dir)):
+    if not recover(_merges_dir(state_dir)):
         _assert_encoding(state_dir)  # still refuse a poisoned state dir
         return []
     return [

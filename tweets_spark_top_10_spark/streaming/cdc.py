@@ -4,9 +4,8 @@ stream.
 The batch operator (``operators/merge.apply_changes``) merges a
 complete change log in one plan; a live pipeline instead receives the
 log as an unbounded stream and must keep a queryable snapshot current.
-Each micro-batch is MERGEd into the stored table under the same
-atomic dir-swap protocol as the other maintained indexes
-(``streaming/bloom.py``, ``streaming/ann.py``).
+Each micro-batch is MERGEd into the stored table and published by
+``sources/swap.py``.
 
 Robustness is seq-based, not delivery-based:
 
@@ -34,17 +33,17 @@ shape) — here the whole-table swap keeps the semantics reviewable.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
 
 def init_cdc_table(base: DataFrame, table_path: str) -> None:
     """Seed the stored table from a base snapshot (``__seq = -1`` so
     every real change beats it; no tombstones)."""
+    recover(table_path)
     base.select(
         "*",
         F.lit(-1).cast("long").alias("__seq"),
@@ -76,16 +75,7 @@ def merge_cdc_batch(
             (F.col(op_col) == "D").alias("__c_del"),
         )
     )
-    aside = table_path.rstrip("/") + "__old"
-    staging = table_path.rstrip("/") + "__stage"
-    if os.path.exists(aside):
-        if not os.path.exists(table_path):
-            os.rename(aside, table_path)
-        else:
-            shutil.rmtree(aside)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    if os.path.exists(table_path):
+    if recover(table_path):
         base = spark.read.parquet(table_path)
         joined = base.join(latest, base[key] == latest[f"__c_{key}"], "full_outer")
         # the change wins iff it exists and beats the stored seq
@@ -108,12 +98,7 @@ def merge_cdc_batch(
             F.col("__c_seq").alias("__seq"),
             F.col("__c_del").alias("__deleted"),
         )
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(table_path):
-        os.rename(table_path, aside)
-    os.rename(staging, table_path)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
+    swap_in(table_path, lambda staging: merged.write.mode("overwrite").parquet(staging))
 
 
 def maintain_cdc_snapshot(
@@ -141,6 +126,7 @@ def maintain_cdc_snapshot(
 
 def read_cdc_snapshot(spark, table_path: str) -> DataFrame:
     """Current snapshot: stored table minus tombstones and metadata."""
+    recover(table_path)
     t = spark.read.parquet(table_path)
     return t.where(~F.col("__deleted")).drop("__seq", "__deleted")
 
@@ -158,11 +144,7 @@ def compact_cdc_table(spark, table_path: str, replay_horizon_seq: int) -> int:
     caller's contract with its source, not something this function
     can check.  Returns the number of tombstones removed.
     """
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    recover(table_path)
     stored = spark.read.parquet(table_path)
     doomed = stored.where(
         F.col("__deleted") & (F.col("__seq") < replay_horizon_seq)
@@ -173,12 +155,5 @@ def compact_cdc_table(spark, table_path: str, replay_horizon_seq: int) -> int:
     kept = stored.where(
         ~F.col("__deleted") | (F.col("__seq") >= replay_horizon_seq)
     ).localCheckpoint(eager=True)
-    staging = table_path.rstrip("/") + "__stage"
-    aside = table_path.rstrip("/") + "__old"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    kept.write.mode("overwrite").parquet(staging)
-    os.rename(table_path, aside)
-    os.rename(staging, table_path)
-    shutil.rmtree(aside)
+    swap_in(table_path, lambda staging: kept.write.mode("overwrite").parquet(staging))
     return n

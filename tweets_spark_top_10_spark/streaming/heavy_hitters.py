@@ -20,9 +20,7 @@ N/(capacity+1) bound as the batch sketch):
 3. prune back to ``capacity`` by subtracting the (capacity+1)-th
    largest counter from all and dropping non-positives.
 
-State is a plain parquet dir swapped atomically (stage → aside →
-live), so a replayed micro-batch after a crash re-derives the same
-merge from either the old or new state plus the batch.
+State is a plain parquet dir published by ``sources/swap.py``.
 
 One bounded driver collect per merge: the (capacity+1) largest
 estimates, to find the prune threshold — O(capacity), not O(data).
@@ -31,11 +29,11 @@ estimates, to find the prune threshold — O(capacity), not O(data).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.sources.swap import already_merged, recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
@@ -50,15 +48,13 @@ def merge_mg_batch(
     """Fold one micro-batch of tokens into the stored MG summary.
 
     ``batch_id`` (when the caller is a foreachBatch sink) makes the
-    merge idempotent under at-least-once replay: the last merged id is
-    persisted INSIDE the swapped summary dir (underscore-prefixed, so
-    parquet readers skip it) and a replayed batch with id <= the stored
-    high-water mark is a no-op.  Without the marker a crash after the
-    swap commits but before the streaming checkpoint commits would
-    double-merge the batch, inflating est and the NULL-token total.
+    merge idempotent under at-least-once replay (the marker of
+    ``sources/swap.py``).  Without it a crash after the swap commits
+    but before the streaming checkpoint commits would double-merge the
+    batch, inflating est and the NULL-token total.
     """
-    _recover(table_path)
-    if _already_merged(table_path, batch_id):
+    live = recover(table_path)
+    if already_merged(table_path, batch_id):
         return
     batch_summary = (
         batch_tokens.groupBy(token_col).agg(F.count(F.lit(1)).alias("est"))
@@ -68,7 +64,7 @@ def merge_mg_batch(
             F.count(F.lit(1)).alias("est"),
         )
     )
-    if os.path.exists(table_path):
+    if live:
         merged = spark.read.parquet(table_path).unionByName(batch_summary)
     else:
         merged = batch_summary
@@ -95,11 +91,11 @@ def merge_mg_batch(
     else:
         pruned = merged
 
-    def _write(staging: str) -> None:
-        pruned.coalesce(1).write.mode("overwrite").parquet(staging)
-        _stamp_batch_id(staging, batch_id)
-
-    _swap_in(table_path, _write)
+    swap_in(
+        table_path,
+        lambda staging: pruned.coalesce(1).write.mode("overwrite").parquet(staging),
+        batch_id,
+    )
     merged.unpersist(blocking=False)
 
 
@@ -126,75 +122,6 @@ def maintain_heavy_hitters(
         )
 
     return start_foreach_batch(stream_tokens, merge, checkpoint)
-
-
-def _recover(table_path: str) -> None:
-    """Crash recovery for the swap protocol (same as
-    :func:`merge_mg_batch`): a crash between the two renames leaves
-    the only valid summary in the aside dir — restore it; a
-    half-written staging dir is garbage — drop it.  MUST run before
-    the stored summary is READ, not just before it is replaced (a
-    post-read recovery silently merges against an empty live dir and
-    halves the state — caught by
-    ``test_grouped_mg_merge_recovers_from_stale_swap_dirs``)."""
-    aside = table_path.rstrip("/") + "__old"
-    staging = table_path.rstrip("/") + "__stage"
-    if os.path.exists(aside):
-        if not os.path.exists(table_path):
-            os.rename(aside, table_path)
-        else:
-            shutil.rmtree(aside)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-
-
-_BATCH_MARKER = "_mg_last_batch_id"
-
-
-def _stamp_batch_id(summary_dir: str, batch_id: int | None) -> None:
-    """Record the merged micro-batch id inside the summary dir so it
-    swaps atomically with the state it describes (underscore-prefixed
-    files are invisible to parquet scans)."""
-    if batch_id is not None:
-        with open(os.path.join(summary_dir, _BATCH_MARKER), "w") as fh:
-            fh.write(str(int(batch_id)))
-
-
-def _already_merged(table_path: str, batch_id: int | None) -> bool:
-    """True when a replayed micro-batch (at-least-once foreachBatch
-    redelivery after a crash between the state swap and the streaming
-    checkpoint commit) has already been folded into the live summary.
-
-    EQUALITY, not ``<=`` (round-8 review finding): within one
-    checkpoint, ids are monotonic and the only redelivery Structured
-    Streaming ever performs is the LAST committed id — so ``==`` fully
-    covers the crash-replay window.  ``<=`` would also silently discard
-    the first batches of a NEW checkpoint pointed at an existing state
-    dir (fresh checkpoints restart ids at 0).  Residual caveat, shared
-    with Spark's own documented batchId-dedup pattern: reusing a state
-    dir under a new checkpoint whose FIRST id happens to equal the
-    stored marker skips that one batch — delete the state (or the
-    marker file) when re-pointing a stream at old state."""
-    if batch_id is None:
-        return False
-    marker = os.path.join(table_path, _BATCH_MARKER)
-    if not os.path.exists(marker):
-        return False
-    with open(marker) as fh:
-        return int(batch_id) == int(fh.read().strip())
-
-
-def _swap_in(table_path: str, write) -> None:
-    """Atomic stage → aside → live replacement for a summary dir."""
-    aside = table_path.rstrip("/") + "__old"
-    staging = table_path.rstrip("/") + "__stage"
-    _recover(table_path)
-    write(staging)
-    if os.path.exists(table_path):
-        os.rename(table_path, aside)
-    os.rename(staging, table_path)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
 
 
 def _grouped_summary_merge(
@@ -274,24 +201,22 @@ def merge_mg_batch_grouped(
     ``(group, token, est)`` with a NULL-token total row per group.
     Merge math in :func:`_grouped_summary_merge`.
     """
-    _recover(table_path)  # BEFORE reading state, not just before swap
-    if _already_merged(table_path, batch_id):  # at-least-once replay
+    live = recover(table_path)  # BEFORE reading state, not just before swap
+    if already_merged(table_path, batch_id):  # at-least-once replay
         return
     batch_df = batch_df.where(
         F.col(group_col).isNotNull() & F.col(token_col).isNotNull()
     )
-    stored = (
-        spark.read.parquet(table_path) if os.path.exists(table_path) else None
-    )
+    stored = spark.read.parquet(table_path) if live else None
     pruned = _grouped_summary_merge(
         stored, batch_df, [group_col], token_col, capacity
     )
 
-    def _write(staging: str) -> None:
-        pruned.coalesce(1).write.mode("overwrite").parquet(staging)
-        _stamp_batch_id(staging, batch_id)
-
-    _swap_in(table_path, _write)
+    swap_in(
+        table_path,
+        lambda staging: pruned.coalesce(1).write.mode("overwrite").parquet(staging),
+        batch_id,
+    )
 
 
 _HW_MARKER = "_mg_high_water_us"
@@ -342,10 +267,9 @@ def merge_mg_batch_windowed(
     threshold (its pre-batch watermark ≥ this batch's post-batch one),
     so no merged row can ever target a closed window.
     """
-    live = table_path
     closed = table_path.rstrip("/") + "__closed"
-    _recover(live)
-    if _already_merged(live, batch_id):
+    live = recover(table_path)
+    if already_merged(table_path, batch_id):
         return
     batch_df = batch_df.where(
         F.col(time_col).isNotNull()
@@ -355,7 +279,7 @@ def merge_mg_batch_windowed(
     # high-water mark: one bounded scalar aggregate per batch
     row = batch_df.agg(F.max(F.unix_micros(F.col(time_col))).alias("mx")).collect()[0]
     batch_max_us = row["mx"]
-    hw_path = os.path.join(live, _HW_MARKER)
+    hw_path = os.path.join(table_path, _HW_MARKER)
     hw_old = None
     if os.path.exists(hw_path):
         with open(hw_path) as fh:
@@ -374,7 +298,7 @@ def merge_mg_batch_windowed(
         kept = kept.where(F.unix_micros(F.col(time_col)) >= F.lit(drop_us))
     kept = kept.withColumn("window", F.date_trunc(window, F.col(time_col)))
 
-    stored = spark.read.parquet(live) if os.path.exists(live) else None
+    stored = spark.read.parquet(table_path) if live else None
     pruned = _grouped_summary_merge(
         stored, kept, ["window", group_col], token_col, capacity
     ).persist()
@@ -398,11 +322,10 @@ def merge_mg_batch_windowed(
 
     def _write(staging: str) -> None:
         alive.coalesce(1).write.mode("overwrite").parquet(staging)
-        _stamp_batch_id(staging, batch_id)
         with open(os.path.join(staging, _HW_MARKER), "w") as fh:
             fh.write(str(int(hw_new)))
 
-    _swap_in(live, _write)
+    swap_in(table_path, _write, batch_id)
     pruned.unpersist(blocking=False)
 
 
@@ -456,11 +379,10 @@ def windowed_grouped_top_k_from_summary(
         grouped_candidate_rerank,
     )
 
-    live = table_path
     closed = table_path.rstrip("/") + "__closed"
     parts = []
-    if os.path.exists(live):
-        parts.append(spark.read.parquet(live))
+    if recover(table_path):
+        parts.append(spark.read.parquet(table_path))
     if os.path.exists(closed):
         parts.append(
             spark.read.parquet(closed).select(
@@ -545,6 +467,7 @@ def grouped_top_k_from_summary(
         grouped_candidate_rerank,
     )
 
+    recover(table_path)
     summary = spark.read.parquet(table_path)
     corpus = corpus.where(
         F.col(group_col).isNotNull() & F.col(token_col).isNotNull()
@@ -569,6 +492,7 @@ def top_k_from_summary(
         candidates_from_summary,
     )
 
+    recover(table_path)
     summary = spark.read.parquet(table_path)
     candidates = candidates_from_summary(summary, token_col, k, capacity)
     counted = corpus_tokens

@@ -20,22 +20,18 @@ after every batch — the differential test asserts exactly that, after
 a duplicated AND an out-of-order batch.
 
 Consistency across the two swaps (closed in round 8): steps 2 and 3
-are two separate dir swaps, not one transaction, so a crash BETWEEN
-them leaves the view one batch ahead of the snapshot.  The view dir
-now carries the last-applied ``batch_id`` (same marker protocol as the
-MG summaries, swapped atomically with the view): on replay the view
-update SKIPS (its delta is already in) while the snapshot MERGE still
-runs — and the snapshot merge is itself seq-idempotent — so the
-replayed batch converges both artifacts.  This is exactly-once given
-the Structured Streaming guarantee that a replayed batch_id carries
-identical data.  ``rebuild_view`` (one aggregate over the snapshot)
+are two separate ``sources/swap.py`` publishes, not one transaction, so
+a crash BETWEEN them leaves the view one batch ahead of the snapshot.
+The view dir carries the last-applied ``batch_id`` marker: on replay
+the view update SKIPS (its delta is already in) while the snapshot
+MERGE still runs — and the snapshot merge is itself seq-idempotent —
+so the replayed batch converges both artifacts.  This is exactly-once
+given the Structured Streaming guarantee that a replayed batch_id
+carries identical data.  ``rebuild_view`` (one aggregate over the snapshot)
 remains the big-hammer recovery.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -45,43 +41,17 @@ from tweets_spark_top_10_spark.operators.ivm import (
     apply_agg_delta,
     build_agg_view,
 )
-from tweets_spark_top_10_spark.streaming.cdc import merge_cdc_batch
+from tweets_spark_top_10_spark.sources.swap import already_merged, recover, swap_in
+from tweets_spark_top_10_spark.streaming.cdc import merge_cdc_batch, read_cdc_snapshot
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
-
-
-def _swap_write(df: DataFrame, path: str, batch_id: int | None = None) -> None:
-    from tweets_spark_top_10_spark.streaming.heavy_hitters import (
-        _stamp_batch_id,
-    )
-
-    staging, aside = path.rstrip("/") + "__stage", path.rstrip("/") + "__old"
-    for p in (staging,):
-        if os.path.exists(p):
-            shutil.rmtree(p)
-    if os.path.exists(aside):
-        if not os.path.exists(path):
-            os.rename(aside, path)
-        else:
-            shutil.rmtree(aside)
-    df.write.mode("overwrite").parquet(staging)
-    _stamp_batch_id(staging, batch_id)
-    if os.path.exists(path):
-        os.rename(path, aside)
-    os.rename(staging, path)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
 
 
 def rebuild_view(
     spark, snapshot_path: str, view_path: str, group_cols: list[str], sum_cols: list[str]
 ) -> None:
     """Recovery / bootstrap: one aggregate over the live snapshot."""
-    from tweets_spark_top_10_spark.streaming.cdc import read_cdc_snapshot
-
-    _swap_write(
-        build_agg_view(read_cdc_snapshot(spark, snapshot_path), group_cols, sum_cols),
-        view_path,
-    )
+    view = build_agg_view(read_cdc_snapshot(spark, snapshot_path), group_cols, sum_cols)
+    swap_in(view_path, lambda staging: view.write.mode("overwrite").parquet(staging))
 
 
 def ivm_step(
@@ -102,20 +72,15 @@ def ivm_step(
     the view update (the delta is in) but STILL merges the snapshot —
     which is seq-idempotent — so a crash between the two swaps
     converges on replay instead of double-counting the delta."""
-    from tweets_spark_top_10_spark.streaming.heavy_hitters import (
-        _already_merged,
-        _recover,
-    )
-
-    _recover(view_path)
-    view_done = _already_merged(view_path, batch_id)
+    has_view = recover(view_path)
+    view_done = already_merged(view_path, batch_id)
     w = Window.partitionBy(key).orderBy(F.desc(seq_col), F.desc(op_col))
     latest = (
         batch_df.withColumn("__brn", F.row_number().over(w))
         .where("__brn = 1")
         .drop("__brn")
     )
-    if os.path.exists(snapshot_path):
+    if recover(snapshot_path):
         stored = spark.read.parquet(snapshot_path)
         eff = (
             latest.join(
@@ -139,7 +104,7 @@ def ivm_step(
         return
     if not view_done:
         delta = agg_delta(live, eff, key, group_cols, sum_cols, seq_col, op_col)
-        if os.path.exists(view_path):
+        if has_view:
             view = spark.read.parquet(view_path)
         else:
             view = spark.createDataFrame([], delta.schema).select(
@@ -149,7 +114,11 @@ def ivm_step(
             )
         new_view = apply_agg_delta(view, delta, group_cols, sum_cols)
         new_view = new_view.localCheckpoint(eager=True)
-        _swap_write(new_view, view_path, batch_id=batch_id)
+        swap_in(
+            view_path,
+            lambda staging: new_view.write.mode("overwrite").parquet(staging),
+            batch_id,
+        )
     merge_cdc_batch(spark, eff, snapshot_path, key, seq_col, op_col)
 
 

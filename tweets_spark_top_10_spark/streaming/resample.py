@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
 
@@ -67,6 +68,9 @@ def maintain_bucket_partials(
                 )
                 .withColumn("batch_id", F.lit(int(batch_id)))
             )
+            # a crashed compaction leaves the partials aside: restore
+            # them before this batch's partition lands in a fresh dir
+            recover(partials_path)
             (
                 partial.write.mode("overwrite")
                 .partitionBy("batch_id")
@@ -93,6 +97,7 @@ def read_resampled(
     (same rounding: avg = sum/count to 6 digits)."""
     from pyspark.sql import Window
 
+    recover(partials_path)
     merged = (
         spark.read.parquet(partials_path)
         .groupBy(key_col, "bucket")
@@ -135,12 +140,10 @@ def compact_bucket_partials(
     ``compact_cdc_table``), so their partials are summed into the
     consolidated partition; partitions at/above the horizon are kept
     verbatim, preserving the batch-id-keyed overwrite idempotence for
-    anything still replayable.  Atomic dir swap; returns how many
-    batch partitions were folded.
+    anything still replayable.  Published by ``sources/swap.py``;
+    returns how many batch partitions were folded.
     """
-    import os
-    import shutil
-
+    recover(partials_path)
     df = spark.read.parquet(partials_path)
     group_cols = [c for c in df.columns if c not in ("v_sum", "v_cnt", "batch_id")]
     old = df.where(F.col("batch_id") < batch_horizon)
@@ -156,13 +159,10 @@ def compact_bucket_partials(
     out = merged.unionByName(keep.select(merged.columns)).localCheckpoint(
         eager=True
     )
-    staging = partials_path.rstrip("/") + "__stage"
-    aside = partials_path.rstrip("/") + "__old"
-    for p in (staging, aside):
-        if os.path.exists(p):
-            shutil.rmtree(p)
-    out.write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-    os.rename(partials_path, aside)
-    os.rename(staging, partials_path)
-    shutil.rmtree(aside)
+    swap_in(
+        partials_path,
+        lambda staging: out.write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(staging),
+    )
     return n_folded

@@ -20,37 +20,18 @@ batch operator would splice it), silent in production by design, like
 late data past a watermark.
 
 Scale: per batch, one window over the (churn-sized) batch, one keyed
-join against stored per-key high-water marks, one union write under
-the atomic dir-swap protocol shared by the other maintained tables.
+join against stored per-key high-water marks, one union write published
+by ``sources/swap.py``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.operators.merge import scd2_history
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
-
-
-def _swap_write(df: DataFrame, path: str) -> None:
-    staging, aside = path.rstrip("/") + "__stage", path.rstrip("/") + "__old"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    if os.path.exists(aside):
-        if not os.path.exists(path):
-            os.rename(aside, path)
-        else:
-            shutil.rmtree(aside)
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        os.rename(path, aside)
-    os.rename(staging, path)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
 
 
 def merge_scd2_batch(
@@ -62,7 +43,7 @@ def merge_scd2_batch(
     op_col: str = "op",
 ) -> None:
     """Apply one micro-batch to the stored history table."""
-    if os.path.exists(history_path):
+    if recover(history_path):
         stored = spark.read.parquet(history_path).localCheckpoint(eager=True)
         hw = stored.groupBy(key).agg(
             F.max(
@@ -82,26 +63,24 @@ def merge_scd2_batch(
     eff = eff.localCheckpoint(eager=True)
     if eff.isEmpty():
         return
-    new_versions = scd2_history(eff, key, seq_col, op_col)
-    if stored is None:
-        _swap_write(new_versions, history_path)
-        return
-    first_seq = eff.groupBy(key).agg(F.min(seq_col).alias("__close_at"))
-    closed = (
-        stored.join(first_seq, key, "left")
-        .select(
-            *[c for c in stored.columns if c not in ("valid_to", "is_current")],
-            F.when(
-                F.col("valid_to").isNull() & F.col("__close_at").isNotNull(),
-                F.col("__close_at"),
+    out = scd2_history(eff, key, seq_col, op_col)
+    if stored is not None:
+        first_seq = eff.groupBy(key).agg(F.min(seq_col).alias("__close_at"))
+        closed = (
+            stored.join(first_seq, key, "left")
+            .select(
+                *[c for c in stored.columns if c not in ("valid_to", "is_current")],
+                F.when(
+                    F.col("valid_to").isNull() & F.col("__close_at").isNotNull(),
+                    F.col("__close_at"),
+                )
+                .otherwise(F.col("valid_to"))
+                .alias("valid_to"),
             )
-            .otherwise(F.col("valid_to"))
-            .alias("valid_to"),
+            .withColumn("is_current", F.col("valid_to").isNull())
         )
-        .withColumn("is_current", F.col("valid_to").isNull())
-    )
-    out = closed.unionByName(new_versions).localCheckpoint(eager=True)
-    _swap_write(out, history_path)
+        out = closed.unionByName(out).localCheckpoint(eager=True)
+    swap_in(history_path, lambda staging: out.write.mode("overwrite").parquet(staging))
 
 
 def maintain_scd2_history(

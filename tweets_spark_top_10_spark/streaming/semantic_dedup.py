@@ -57,12 +57,9 @@ from tweets_spark_top_10_spark.functions.similarity import (
     ivf_assign_cells,
     l2_norm,
 )
-from tweets_spark_top_10_spark.streaming.ann import _one_per_id
-from tweets_spark_top_10_spark.streaming.heavy_hitters import (
-    _recover,
-    _swap_in,
-)
+from tweets_spark_top_10_spark.streaming.ann import one_per_id
 from tweets_spark_top_10_spark.functions.sampling import hash_bucket
+from tweets_spark_top_10_spark.sources.swap import recover, swap_in
 from tweets_spark_top_10_spark.streaming.sketch import upsert_rows_by_bucket
 from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
 
@@ -84,10 +81,9 @@ def upsert_semantic_pairs_batch(
     Order matters: cells upsert FIRST (so the pair join sees the batch's
     own rows and emits new-vs-new pairs without a separate self-join),
     then the batch x stored-cell-members cosine pairs distinct-merge
-    into the pair table under the same atomic swap protocol the MG
-    summaries use.
+    into the pair table, published by ``sources/swap.py``.
     """
-    one = _one_per_id(batch_vecs, id_col, vec_col, seq_col)
+    one = one_per_id(batch_vecs, id_col, vec_col, seq_col)
     assigned = ivf_assign_cells(
         one, centroids, id_col, vec_col, n_probe=1
     ).withColumn("bucket", hash_bucket(id_col, n_buckets))
@@ -122,14 +118,13 @@ def upsert_semantic_pairs_batch(
         )
         .distinct()
     )
-    _recover(pairs_path)
-    if os.path.exists(pairs_path):
+    if recover(pairs_path):
         merged = (
             spark.read.parquet(pairs_path).unionByName(new_pairs).distinct()
         )
     else:
         merged = new_pairs
-    _swap_in(
+    swap_in(
         pairs_path,
         lambda staging: merged.write.mode("overwrite").parquet(staging),
     )
@@ -161,11 +156,10 @@ def maintain_semantic_dedup(
     per ingested vector).  The quantizer then becomes part of the
     DURABLE state: ``centroids_path`` (required) holds the current
     centroid table with a ``fitted_n`` column recording the corpus
-    size it was fitted on, swapped atomically (stage → aside → live,
-    the MG protocol).  On attach, a persisted quantizer WINS over the
-    ``centroids`` argument, so a restarted stream continues with
-    whatever re-fits already happened instead of silently reverting to
-    the caller's stale book.
+    size it was fitted on, published by ``sources/swap.py``.  On
+    attach, a persisted quantizer WINS over the ``centroids`` argument,
+    so a restarted stream continues with whatever re-fits already
+    happened instead of silently reverting to the caller's stale book.
 
     Crash contract: the centroid swap happens AFTER
     :func:`refit_semantic_state`'s two state swaps, and ``fitted_n``
@@ -198,8 +192,7 @@ def maintain_semantic_dedup(
     # Mutable closure state: [centroid DataFrame, corpus size at fit].
     state = [centroids, fitted_on]
     if refit_growth is not None:
-        _recover(centroids_path)
-        if os.path.exists(centroids_path):
+        if recover(centroids_path):
             persisted = spark0.read.parquet(centroids_path)
             if "fitted_n" not in persisted.columns:
                 raise ValueError(
@@ -262,7 +255,7 @@ def _persist_centroids(cents: DataFrame, path: str, fitted_n: int) -> None:
     """Atomically persist the centroid table with its ``fitted_n``
     sizing metadata (one swap, one table — no sidecar to race)."""
     out = cents.withColumn("fitted_n", F.lit(int(fitted_n)))
-    _swap_in(path, lambda staging: out.write.mode("overwrite").parquet(staging))
+    swap_in(path, lambda staging: out.write.mode("overwrite").parquet(staging))
 
 
 def refit_semantic_state(
@@ -311,7 +304,7 @@ def refit_semantic_state(
     (a superset; clusters can only coarsen).
 
     Crash contract: both state dirs swap atomically and independently
-    (stage → aside → live).  A crash BETWEEN the two swaps leaves new
+    (``sources/swap.py``).  A crash BETWEEN the two swaps leaves new
     cells with old pairs — re-running the refit converges, because
     every derived artifact is a function of the (unchanged) stored
     vector set; the refit is idempotent by the same argument.
@@ -331,8 +324,8 @@ def refit_semantic_state(
     )
     from tweets_spark_top_10_spark.sources.writers import write_partitioned
 
-    _recover(cells_path)
-    _recover(pairs_path)
+    recover(cells_path)
+    recover(pairs_path)
     # Cut lineage to the live files BEFORE any swap: everything below
     # derives from this materialized snapshot, never from cells_path.
     corpus = (
@@ -354,7 +347,7 @@ def refit_semantic_state(
         .withColumn("bucket", hash_bucket(id_col, n_buckets))
         .localCheckpoint(eager=True)
     )
-    _swap_in(
+    swap_in(
         cells_path,
         lambda staging: write_partitioned(assigned, staging, ["bucket"]),
     )
@@ -440,7 +433,7 @@ def refit_semantic_state(
         new_pairs = (
             spark.read.parquet(pairs_path).unionByName(new_pairs).distinct()
         )
-    _swap_in(
+    swap_in(
         pairs_path,
         lambda staging: new_pairs.write.mode("overwrite").parquet(staging),
     )
@@ -460,7 +453,7 @@ def semantic_clusters_from_state(
     from tweets_spark_top_10_spark.functions.dedup import connected_components
 
     ids = spark.read.parquet(cells_path).select(F.col(id_col))
-    if os.path.exists(pairs_path):
+    if recover(pairs_path):
         comp = connected_components(spark.read.parquet(pairs_path))
     else:
         comp = ids.select(
