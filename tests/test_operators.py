@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.functions.dedup import (
@@ -13,6 +16,7 @@ from tweets_spark_top_10_spark.functions.text import (
     language_id,
     ngrams,
     quality_score,
+    shingles,
     stopword_ratio,
     tokenize,
 )
@@ -66,10 +70,89 @@ def test_tokenize_drops_empties(spark):
 
 def test_ngrams_short_docs(spark):
     df = spark.createDataFrame([("a b c",), ("a",), ("",)], "t: string")
-    out = df.select(ngrams(tokenize(F.col("t")), 2).alias("g")).collect()
+    out = df.select(ngrams(F.col("t"), 2).alias("g")).collect()
     assert out[0].g == ["a b", "b c"]
     assert out[1].g == []
     assert out[2].g == []
+
+
+# The tokenize rule (see tests/test_sketch_invariants._py_shingles): split
+# on ASCII whitespace, drop empties, join each n-token window with a space.
+_TOKEN_SPLIT = re.compile(r"\s+", re.ASCII)
+
+_EDGE_TEXTS = [
+    None,
+    "",
+    " \t\n\r\x0b\x0c ",
+    "one",
+    "one two",
+    "\t\n lead \r\x0b\x0cand  trail\x0c\n\r\t ",
+    "a\tb\nc\rd\x0be\x0cf g  h   i    j",
+    "x y x y x y x y x y x",
+    "no\u00a0break space\u2003em\u00a0\u2003gap here",
+    "中文 分词 测试 日本語のテキスト 한국어",
+    "emoji \U0001F600 \U0001F600 test \U0001F600 go",
+    "\U0001F600\U0001F600 \U0001D54F\U0001F600 a\U0001D54F \U0001F600 \U0001D54F",
+]
+
+
+def _py_ngrams(text, n):
+    if text is None:
+        return None
+    toks = [t for t in _TOKEN_SPLIT.split(text) if t != ""]
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def test_ngrams_and_shingles_match_python_token_rule(spark):
+    """The one-regex n-gram kernel against the pure-Python token rule on
+    every whitespace, Unicode and surrogate-pair edge: grams must be
+    byte-identical, in order, and ``shingles`` their first-seen distinct
+    list."""
+    ns = (1, 2, 3, 5, 8)
+    df = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)), "i int, t string")
+    cols = [ngrams(F.col("t"), n).alias(f"g{n}") for n in ns]
+    cols += [shingles(F.col("t"), n).alias(f"s{n}") for n in ns]
+    rows = df.select("i", *cols).orderBy("i").collect()
+    for r in rows:
+        text = _EDGE_TEXTS[r.i]
+        for n in ns:
+            want = _py_ngrams(text, n)
+            assert r[f"g{n}"] == want, (text, n)
+            assert r[f"s{n}"] == (
+                None if want is None else list(dict.fromkeys(want))
+            ), (text, n)
+    with pytest.raises(ValueError):
+        ngrams(F.col("t"), 0)
+
+
+def test_minhash_signatures_golden(spark):
+    """Pinned ``minhash_signatures(with_count=True)`` values: the
+    persisted ``streaming/sketch`` MinHash index stays valid only while
+    the shingle strings, and so these values, stay byte-identical."""
+    from tweets_spark_top_10_spark.functions.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog the quick brown fox"),
+            (2, "  the quick\tbrown fox\n\x0b\njumps over the\u00a0lazy cat\r\n"),
+            (3, "emoji \U0001F600 \U0001F600 test \U0001F600 go 中文 "
+                "\U0001D54F\U0001F600 x"),
+        ],
+        "doc_id long, text string",
+    )
+    sigs = minhash_signatures(docs, with_count=True).orderBy("doc_id")
+    got = [tuple(r) for r in sigs.collect()]
+    assert got == [
+        (1, -7091059247639022479, -6736894140626584498, -7668838801573006933,
+         -8913829193979565694, -6894973831385508883, -8782049980855672681,
+         -8002430306350003406, -7820744106168624891, 9),
+        (2, -7265585055556345512, -6736894140626584498, -8761402319039005057,
+         -2542202827347916924, -6894973831385508883, -7940015800785298728,
+         -7725107020461618285, -7820744106168624891, 6),
+        (3, -9149484169088811006, -8088727964717308438, -6618152480376341058,
+         -8531512399778751805, -5720326381060269854, -5223154599885398209,
+         -7875880628167040713, -2572282777397889786, 7),
+    ]
 
 
 def test_stopword_ratio_bounds(spark):

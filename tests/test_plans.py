@@ -124,6 +124,18 @@ def test_minhash_rerank_builds_hash_join_on_shingles(spark, sf_dir):
     assert "ShuffledHashJoin" in plan, plan
 
 
+def test_shingle_path_has_no_lambda(spark, sf_dir):
+    """No per-element higher-order function on the shingle path: Spark
+    interprets a lambda element by element instead of codegen'ing it,
+    and shingling is the widest per-row stage of near-dedup."""
+    from tweets_spark_top_10_spark.functions.dedup import shingle_table
+    from tweets_spark_top_10_spark.sources.registry import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    plan = shingle_table(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan.lower(), plan
+
+
 def test_gram_identity_shuffles_are_fixed_width(spark, sf_dir):
     """Every gram/shingle-keyed exchange in the n-gram family must move
     8-byte xxhash64 keys, not raw n-gram strings: the 100x probes

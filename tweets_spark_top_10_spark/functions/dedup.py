@@ -10,12 +10,14 @@ Scale design (100 TB of documents):
   shingles (appearing in thousands of docs) quadratically blow up the
   candidate set, so `max_shingle_df` drops them (a shingle shared by
   10k docs is useless as dedup evidence anyway — it is boilerplate).
-- **MinHash-LSH**: sub-quadratic candidate generation via
-  ``pyspark.ml.feature.MinHashLSH`` banding; the exact-Jaccard rerank
-  of candidates is cheap.
-- **SimHash**: 64-bit sketch via a vectorized Pandas UDF (Arrow
-  batches); near-dup = small Hamming distance, banded by 16-bit chunks
-  for candidate generation.
+- **MinHash-LSH**: sub-quadratic candidate generation by banding
+  per-document MinHash signatures in one self-equi-join
+  (:func:`minhash_band_pairs`; :func:`minhash_lsh_pairs` keeps the
+  ``pyspark.ml`` MinHashLSH variant); the exact-Jaccard rerank of
+  candidates is cheap.
+- **SimHash**: 64-bit sketch from per-token ``xxhash64`` bit votes in
+  one aggregate (no Python); near-dup = small Hamming distance, banded
+  by 16-bit chunks for candidate generation.
 
 Session-cache note: several operators ``persist()`` multiply-referenced
 intermediates (shingle tables, long-format signatures).  The handles
@@ -75,18 +77,22 @@ def shingle_table(
     candidate generation.
 
     ``key``: optional Column -> Column transform (e.g. ``F.xxhash64``)
-    applied to each shingle BEFORE the per-doc distinct, so shingle
-    identity — and every shuffle keyed by it, the distinct included —
-    rides a fixed-width key instead of a raw n-gram string.  ``None``
-    keeps raw strings (the MinHash signature path hashes per-table with
-    its own seeds and needs the original value).
+    applied to each exploded shingle, so shingle identity — and every
+    shuffle keyed by it — rides a fixed-width key instead of a raw
+    n-gram string.  ``None`` keeps raw strings (the MinHash signature
+    path hashes per-table with its own seeds and needs the original
+    value).
 
-    Per-doc distinctness comes from ``array_distinct`` on the shingle
-    array BEFORE the explode — distinct-per-(id, shingle) is a
-    row-local property of the source doc, so it needs a per-row
-    expression, not the corpus-wide ``distinct()`` an earlier version
-    ran (whose exchange shuffled every within-doc duplicate it was
-    about to drop — at the 100x probe, HALF the exchange's rows).
+    Each doc's shingles come from ONE regex pass over its text
+    (:func:`~tweets_spark_top_10_spark.functions.text.shingles`) and
+    ONE ``array_distinct`` BEFORE the explode — distinct-per-(id,
+    shingle) is a row-local property of the source doc, so it needs a
+    per-row expression, not the corpus-wide ``distinct()`` an earlier
+    version ran (whose exchange shuffled every within-doc duplicate it
+    was about to drop — at the 100x probe, HALF the exchange's rows).
+    Keep per-element lambdas (``filter`` / ``zip_with`` / ``transform``)
+    off this path: Spark interprets them element by element, and this
+    is the widest per-row stage of the dedup pipeline.
 
     ``partition_by_shingle``: repartition by the shingle key.
     ``hashpartitioning(shingle)`` satisfies the clustered distribution
@@ -97,7 +103,7 @@ def shingle_table(
 
     The source is fanned out first when its scan arrives narrower than
     the core count (``spread_scan`` — a conditional no-op at cluster
-    scale): the tokenize/shingle/explode chain runs BEFORE the first
+    scale): the shingle/explode chain runs BEFORE the first
     exchange, and on the single-split fixture files it otherwise
     serializes on one core (r16: the single biggest stage of every
     shingle consumer at sf0.1).  ``spread=False`` opts out for callers
@@ -108,10 +114,8 @@ def shingle_table(
         from tweets_spark_top_10_spark.functions.spread import spread_scan
 
         df = spread_scan(df)
-    toks = tokenize(F.col(text_col))
     out = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles(toks, n))).alias("shingle"),
+        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("shingle")
     )
     if key is not None:
         out = out.select(F.col(id_col), key(F.col("shingle")).alias("shingle"))
@@ -139,7 +143,7 @@ def ngram_jaccard_pairs(
     """
     # Referenced multiply below (the DF aggregation when capping, the
     # per-doc counts, and both self-join sides) — persist once so the
-    # tokenize/explode/distinct subplan runs once.  (At scale this is a
+    # shingle/explode subplan runs once.  (At scale this is a
     # materialized per-corpus intermediate.)
     #
     # Compact shingle identity (round-8 verdict item 1): raw 3-gram
@@ -155,9 +159,9 @@ def ngram_jaccard_pairs(
     # scale.  A 64-bit collision merges two shingles' dedup evidence —
     # at billions of distinct shingles the birthday bound makes that a
     # handful of merged pairs, noise against a >=threshold Jaccard.
-    # The distinct() in shingle_table runs on hashed keys too (the
-    # projection commutes through it), so even the FIRST shuffle of the
-    # shingle pipeline moves 8-byte keys, not strings — and with
+    # shingle_table hashes right after its per-doc explode, so even
+    # the FIRST shuffle of the shingle pipeline moves 8-byte keys, not
+    # strings — and with
     # partition_by_shingle the cached table is ALREADY hash-partitioned
     # by that key, so the DF-cap aggregate and both candidate-join
     # sides below add ZERO further corpus-sized exchanges.
@@ -235,8 +239,9 @@ def minhash_lsh_pairs(
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    toks = tokenize(F.col(text_col))
-    docs = df.select(id_col, shingles(toks, n).alias("sh")).filter(F.size("sh") > 0)
+    docs = df.select(id_col, shingles(F.col(text_col), n).alias("sh")).filter(
+        F.size("sh") > 0
+    )
     tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features)
     feats = tf.transform(docs)
     lsh = MinHashLSH(

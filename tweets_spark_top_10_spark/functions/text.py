@@ -5,9 +5,11 @@ The reference's only text-adjacent operation is exploding a pre-split
 ``hashtags: array<string>`` column (``App.java:97``); everything here is
 the [EXT] text surface (SURVEY.md §2.2) a training-data pipeline needs.
 
-All pure Catalyst expressions (split / transform / filter / aggregate on
-arrays) — they pipeline inside whole-stage codegen with no shuffle and
-no Python boundary, which is what makes them viable over 100 TB of text.
+All pure Catalyst expressions — no shuffle and no Python boundary, which
+is what makes them viable over 100 TB of text.  The array higher-order
+functions some of them use (``filter`` / ``transform`` with a lambda) are
+NOT codegen'd: Spark interprets the lambda per element.  Hot paths avoid
+them — :func:`ngrams` builds every gram in one regex pass over the text.
 """
 
 from __future__ import annotations
@@ -31,10 +33,10 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 ENGLISH_STOPWORDS = LANG_STOPWORDS["en"]
 
 
-def tokenize(text: Column | str, pattern: str = TOKEN_PATTERN) -> Column:
-    """Split on a regex and drop empty tokens → ``array<string>``."""
+def tokenize(text: Column | str) -> Column:
+    """Split on ``TOKEN_PATTERN`` and drop empty tokens → ``array<string>``."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(col, pattern), lambda t: t != F.lit(""))
+    return F.filter(F.split(col, TOKEN_PATTERN), lambda t: t != F.lit(""))
 
 
 def token_count(tokens: Column) -> Column:
@@ -42,28 +44,30 @@ def token_count(tokens: Column) -> Column:
     return F.size(tokens).cast("long")
 
 
-def ngrams(tokens: Column, n: int, sep: str = " ") -> Column:
-    """Word n-grams as an array of joined strings; [] when < n tokens.
+def ngrams(text: Column | str, n: int) -> Column:
+    """Word n-grams of ``text`` as an array of space-joined strings, in
+    order; [] when it has < n tokens, NULL for NULL text.
 
-    Array-native and shuffle-free: zip n shifted ``slice``s of the token
-    array. (A ``transform`` over an index sequence with per-index
-    ``element_at`` looks equivalent but re-evaluates the tokens
-    expression per element — O(tokens²) per row, measured 10× slower.)
+    The grams are exactly ``" ".join`` of each n consecutive
+    :func:`tokenize` tokens, built in ONE codegen'd regex pass: collapse
+    ``TOKEN_PATTERN`` runs to one space, then a zero-width match at every
+    token start whose lookahead captures the next n tokens.  The anchor
+    is a lookbehind on ``^`` or a space, not ``(?<!\\S)``: after an
+    empty match Java steps one UTF-16 unit forward, which can land
+    inside a surrogate pair (an emoji), where ``(?<!\\S)`` would match
+    and emit a lone-surrogate gram.
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    ln = F.greatest(F.size(tokens) - (n - 1), F.lit(0))
-    acc = F.slice(tokens, 1, ln)
-    for j in range(2, n + 1):
-        acc = F.zip_with(
-            acc, F.slice(tokens, j, ln), lambda a, b: F.concat(a, F.lit(sep), b)
-        )
-    return acc
+    col = F.col(text) if isinstance(text, str) else text
+    norm = F.regexp_replace(col, TOKEN_PATTERN, " ")
+    gram = r"(?<=^| )(?=(\S+(?: \S+){%d}))" % (n - 1)
+    return F.regexp_extract_all(norm, F.lit(gram), F.lit(1))
 
 
-def shingles(tokens: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (the near-dedup unit)."""
-    return F.array_distinct(ngrams(tokens, n))
+def shingles(text: Column | str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of ``text`` (the near-dedup unit)."""
+    return F.array_distinct(ngrams(text, n))
 
 
 def stopword_ratio(tokens: Column, stopwords: list[str] | None = None) -> Column:

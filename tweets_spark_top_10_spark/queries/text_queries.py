@@ -142,8 +142,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the bigram string (cf. the reference's hashtag count,
     App.java:97-99 — same plan shape, synthesized array)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
-    grams = docs.select(F.explode(ngrams(toks, 2)).alias("bigram"))
+    grams = docs.select(F.explode(ngrams(F.col("text"), 2)).alias("bigram"))
     counted = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("n"))
     return top_k(counted, [F.desc("n"), F.asc("bigram")], k=20)
 
@@ -1642,17 +1641,18 @@ def doc_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # spread_scan: the double-ngram explode+hash below otherwise runs
     # entirely in the fixture's single scan split (no-op at scale).
-    toks = spread_scan(docs).select(
-        "doc_id", tokenize(F.col("text")).alias("arr")
-    ).where(F.size("arr") >= 3)
+    # A doc has >= 3 tokens iff it has a 3-gram.
+    arrs = spread_scan(docs).select(
+        "doc_id",
+        ngrams(F.col("text"), 2).alias("g2"),
+        ngrams(F.col("text"), 3).alias("g3"),
+    ).where(F.size("g3") > 0)
     tag = lambda n_val, col: F.transform(  # noqa: E731
         col, lambda gm: F.struct(F.lit(n_val).alias("n"), gm.alias("gram"))
     )
-    grams = toks.select(
+    grams = arrs.select(
         "doc_id",
-        F.explode(
-            F.concat(tag(2, ngrams(F.col("arr"), 2)), tag(3, ngrams(F.col("arr"), 3)))
-        ).alias("x"),
+        F.explode(F.concat(tag(2, F.col("g2")), tag(3, F.col("g3")))).alias("x"),
     ).select("doc_id", "x.n", F.xxhash64("x.gram").alias("gram"))
     counts = grams.groupBy("doc_id", "n", "gram").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -1792,12 +1792,11 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicated gram list."""
     docs = load_table(spark, sf_dir, "documents")
     # spread_scan: the 8-token window explode+hash below otherwise runs
-    # in the single scan split (no-op at scale).
-    toks = spread_scan(docs).select(
-        "doc_id", tokenize(F.col("text")).alias("arr")
-    ).where(F.size("arr") >= 8)
+    # in the single scan split (no-op at scale).  Docs under 8 tokens
+    # have no window, so the explode drops them.
     wins = (
-        toks.select("doc_id", F.explode(ngrams(F.col("arr"), 8)).alias("gram"))
+        spread_scan(docs)
+        .select("doc_id", F.explode(ngrams(F.col("text"), 8)).alias("gram"))
         .select("doc_id", F.xxhash64("gram").alias("gram"))
         .repartition("gram")
     )
