@@ -242,25 +242,22 @@ def test_bpe_encode_arrow_twin_matches_chained_replace(spark, sf_dir):
         assert arrow == chained, (_label, len(rules))
 
 
-def test_bpe_encode_serves_from_maintained_state(spark, sf_dir, tmp_path):
-    """Tokenizer serving from the STREAMING maintainer's artifact: feed
-    the corpus through one maintenance batch, read the stored merge
-    table back, and encode with it — identical output to the inline
-    learn-then-encode path (the serving-from-maintained == inline
-    discipline every other index family has)."""
-    from tweets_spark_top_10_spark.functions.bpe import bpe_encode_docs
-    from tweets_spark_top_10_spark.sources.registry import load_table
-    from tweets_spark_top_10_spark.streaming.bpe import (
-        bpe_step,
-        read_bpe_merges,
+def test_bpe_encode_serves_from_provided_rules(spark, sf_dir):
+    """Tokenizer serving from a provided merge table: learn the rules
+    with batch bpe_learn_merges, collect them to the driver, and encode
+    with them — identical output to the inline learn-then-encode path
+    (the serving-from-artifact == inline discipline every other index
+    family has)."""
+    from tweets_spark_top_10_spark.functions.bpe import (
+        bpe_encode_docs,
+        bpe_learn_merges,
     )
+    from tweets_spark_top_10_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    state = str(tmp_path / "enc_state")
-    bpe_step(docs, state, "text", 8, 2.0, batch_id=0)
     stored = [
         (r.merge_rank, r.lhs, r.rhs, r.pair_count)
-        for r in read_bpe_merges(spark, state)
+        for r in bpe_learn_merges(docs, merges=8)
         .orderBy("merge_rank")
         .collect()
     ]
@@ -270,104 +267,6 @@ def test_bpe_encode_serves_from_maintained_state(spark, sf_dir, tmp_path):
     )
     inline = sorted(map(tuple, bpe_encode_docs(docs, merges=8).collect()))
     assert served == inline
-
-
-def test_streaming_encode_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming tokenizer serving (encode_stream_docs): documents
-    streamed in two micro-batches, encoded under the maintained merge
-    table, must union to EXACTLY the batch bpe_encode_docs output with
-    the same stored rules; a replay of the stream against a fresh
-    checkpoint overwrites the batch subdirectories instead of
-    duplicating rows; and a bootstrap state dir (no merge table yet)
-    degrades to character segmentation rather than failing."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from tweets_spark_top_10_spark.functions.bpe import bpe_encode_docs
-    from tweets_spark_top_10_spark.sources.registry import load_table
-    from tweets_spark_top_10_spark.streaming.bpe import (
-        bpe_step,
-        encode_stream_docs,
-        read_bpe_merge_rules,
-    )
-    from tweets_spark_top_10_spark.streaming.sources import file_stream
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    state = str(tmp_path / "enc_state")
-    bpe_step(docs, state, "text", 8, 2.0, batch_id=0)
-    rules = read_bpe_merge_rules(spark, state)
-    assert rules
-
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    pdf.iloc[:250].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[250:].to_parquet(src / "b2.parquet", index=False)
-
-    out = str(tmp_path / "tokens_out")
-    q = encode_stream_docs(
-        file_stream(spark, str(src), docs.schema, max_files_per_trigger=1),
-        state,
-        out_path=out,
-        checkpoint=str(tmp_path / "ck_enc"),
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        map(
-            tuple,
-            spark.read.parquet(out)
-            .select("doc_id", "n_tokens", "tokens", "n_rules")
-            .collect(),
-        )
-    )
-    want_rows = bpe_encode_docs(docs, merge_rules=rules).withColumn(
-        "n_rules", F.lit(len(rules))
-    )
-    want = sorted(
-        map(
-            tuple,
-            want_rows.select("doc_id", "n_tokens", "tokens", "n_rules").collect(),
-        )
-    )
-    assert got == want
-    assert all(r[-1] == len(rules) for r in got)
-
-    # replay (fresh checkpoint, batch ids restart): overwrite, not append
-    q2 = encode_stream_docs(
-        file_stream(spark, str(src), docs.schema, max_files_per_trigger=1),
-        state,
-        out_path=out,
-        checkpoint=str(tmp_path / "ck_enc2"),
-    )
-    q2.awaitTermination()
-    again = sorted(
-        map(
-            tuple,
-            spark.read.parquet(out)
-            .select("doc_id", "n_tokens", "tokens", "n_rules")
-            .collect(),
-        )
-    )
-    assert again == want
-
-    # bootstrap: no merge table -> character segmentation, n_rules 0
-    empty_state = str(tmp_path / "empty_state")
-    src2 = tmp_path / "doc_stream2"
-    src2.mkdir()
-    pd.DataFrame({"doc_id": [1], "text": ["ab ab"]}).to_parquet(
-        src2 / "b1.parquet", index=False
-    )
-    out2 = str(tmp_path / "tokens_out2")
-    q3 = encode_stream_docs(
-        file_stream(spark, str(src2), docs.schema, max_files_per_trigger=1),
-        empty_state,
-        out_path=out2,
-        checkpoint=str(tmp_path / "ck_enc3"),
-    )
-    q3.awaitTermination()
-    row = spark.read.parquet(out2).collect()[0]
-    assert (row.tokens, row.n_tokens, row.n_rules) == ("a b a b", 4, 0)
 
 
 def test_bpe_matches_python_reference(spark, sf_dir):
@@ -487,239 +386,6 @@ def test_bpe_rejects_bad_merge_count(spark):
     docs = spark.createDataFrame([("x",)], ["text"])
     with pytest.raises(ValueError, match="merges"):
         bpe_learn_merges(docs, merges=0)
-
-
-def test_streaming_bpe_vocab_matches_batch(spark, sf_dir, tmp_path):
-    """Maintained word table == batch word_frequency_table of the full
-    corpus; with the growth trigger crossed on every batch, the
-    maintained merge table == batch bpe_learn_merges — exact, the
-    whole path is deterministic.  Then: a small follow-up batch under
-    the growth threshold folds into the WORD table but leaves the
-    merge table untouched (fitted_tokens unchanged), and a replayed
-    batch-id is a byte-level no-op on the word table."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.functions.bpe import (
-        bpe_learn_merges,
-        word_frequency_table,
-    )
-    from tweets_spark_top_10_spark.sources.registry import load_table
-    from tweets_spark_top_10_spark.streaming.bpe import (
-        _fold_words_batch,
-        maintain_bpe_vocab,
-        read_bpe_merges,
-        read_bpe_words,
-    )
-    from tweets_spark_top_10_spark.streaming.sources import file_stream
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    # 200/120/180: each batch grows tokens well past 1.2x the fitted
-    # size (doc sizes vary ~; margins are 30%+), so every batch
-    # re-learns and the final merge table covers the full corpus
-    pdf.iloc[:200].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[200:320].to_parquet(src / "b2.parquet", index=False)
-    pdf.iloc[320:].to_parquet(src / "b3.parquet", index=False)
-
-    state = str(tmp_path / "bpe_state")
-    q = maintain_bpe_vocab(
-        file_stream(spark, str(src), docs.schema, max_files_per_trigger=1),
-        state,
-        checkpoint=str(tmp_path / "ckpt"),
-        merges=8,
-        relearn_growth=1.2,
-    )
-    q.awaitTermination()
-
-    got_words = sorted(map(tuple, read_bpe_words(spark, state).collect()))
-    want_words = sorted(
-        map(tuple, word_frequency_table(docs).collect())
-    )
-    assert got_words == want_words
-
-    got_merges = sorted(map(tuple, read_bpe_merges(spark, state).collect()))
-    want_merges = sorted(
-        map(tuple, bpe_learn_merges(docs, merges=8).collect())
-    )
-    assert got_merges == want_merges
-
-    # follow-up batch below the growth threshold: words fold, merges
-    # hold.  Fresh checkpoint restarts batch ids at 0 — the stored
-    # marker is the FIRST run's last id, so the fold must still land.
-    extra = pd.DataFrame(
-        {
-            "doc_id": [100000 + i for i in range(10)],
-            "text": ["zq zq zq" for _ in range(10)],
-        }
-    )
-    src2 = tmp_path / "doc_stream2"
-    src2.mkdir()
-    extra.to_parquet(src2 / "b1.parquet", index=False)
-    q2 = maintain_bpe_vocab(
-        file_stream(spark, str(src2), docs.schema, max_files_per_trigger=1),
-        state,
-        checkpoint=str(tmp_path / "ckpt2"),
-        merges=8,
-        relearn_growth=1.2,
-    )
-    q2.awaitTermination()
-    words2 = dict(read_bpe_words(spark, state).collect())
-    assert words2[" z  q "] == 30  # 10 docs x 3 occurrences
-    assert sorted(map(tuple, read_bpe_merges(spark, state).collect())) == (
-        got_merges
-    )
-
-    # replayed batch-id: byte-level no-op on the word table
-    before = sorted(map(tuple, read_bpe_words(spark, state).collect()))
-    replay = spark.createDataFrame(extra)
-    _fold_words_batch(spark, replay, state, "text", batch_id=0)
-    after = sorted(map(tuple, read_bpe_words(spark, state).collect()))
-    assert after == before
-
-
-def test_streaming_bpe_batched_relearn_matches_batch(spark, sf_dir, tmp_path):
-    """relearn_batch>1 switches the stream-decided re-learn to batched
-    merge learning: the maintained merge table must equal batch
-    bpe_learn_merges_batched over the full corpus (deterministic end to
-    end — the re-learn is a pure function of the stored word table)."""
-    from tweets_spark_top_10_spark.functions.bpe import (
-        bpe_learn_merges_batched,
-    )
-    from tweets_spark_top_10_spark.sources.registry import load_table
-    from tweets_spark_top_10_spark.streaming.bpe import (
-        maintain_bpe_vocab,
-        read_bpe_merges,
-    )
-    from tweets_spark_top_10_spark.streaming.sources import file_stream
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    half = len(pdf) // 2
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-
-    state = str(tmp_path / "bpe_state")
-    maintain_bpe_vocab(
-        file_stream(spark, str(src), docs.schema, max_files_per_trigger=1),
-        state,
-        checkpoint=str(tmp_path / "ckpt"),
-        merges=8,
-        relearn_growth=1.2,
-        relearn_batch=4,
-    ).awaitTermination()
-
-    got = sorted(map(tuple, read_bpe_merges(spark, state).collect()))
-    want = sorted(
-        map(
-            tuple,
-            bpe_learn_merges_batched(docs, rounds=2, batch=4).collect(),
-        )
-    )
-    assert got == want
-
-    import pytest
-
-    with pytest.raises(ValueError, match="relearn_batch"):
-        maintain_bpe_vocab(
-            spark.readStream.format("rate").load(),
-            state,
-            checkpoint=str(tmp_path / "c2"),
-            relearn_batch=0,
-        )
-
-
-def test_streaming_bpe_rejects_bad_growth(spark, tmp_path):
-    import pytest
-
-    from tweets_spark_top_10_spark.streaming.bpe import maintain_bpe_vocab
-
-    with pytest.raises(ValueError, match="relearn_growth"):
-        maintain_bpe_vocab(
-            spark.readStream.format("rate").load(),
-            str(tmp_path / "s"),
-            checkpoint=str(tmp_path / "c"),
-            relearn_growth=1.0,
-        )
-
-
-def test_streaming_bpe_zero_merge_corpus_still_amortizes(spark, tmp_path):
-    """An all-single-character corpus learns ZERO merges — the stored
-    table must still carry fitted_tokens (rank-0 sentinel row) so later
-    batches below the growth trigger skip the re-learn instead of
-    paying the full K rounds forever (round-13 review finding)."""
-    from tweets_spark_top_10_spark.streaming.bpe import (
-        bpe_step,
-        read_bpe_merges,
-    )
-
-    state = str(tmp_path / "state")
-    docs = spark.createDataFrame([("a b c",)], ["text"])
-    r0 = bpe_step(docs, state, "text", 8, 2.0, batch_id=0)
-    assert r0["relearned"] is True  # bootstrap always learns
-    assert read_bpe_merges(spark, state).count() == 0  # nothing learnable
-
-    # growth 2.0 not crossed by one more tiny batch -> must NOT re-learn
-    r1 = bpe_step(
-        spark.createDataFrame([("a",)], ["text"]), state, "text", 8, 2.0,
-        batch_id=1,
-    )
-    assert r1["folded"] is True and r1["relearned"] is False, r1
-
-
-def test_streaming_bpe_state_encoding_marker(spark, tmp_path):
-    """Persisted word tables carry a symbol-encoding version marker:
-    state written by pre-v2 code (single-space rows the current
-    split-on-'  ' parser misreads) must refuse LOUDLY instead of
-    silently splitting counts between ' z q ' and ' z  q ' keys
-    (round-13 review finding)."""
-    import pytest
-
-    from tweets_spark_top_10_spark.streaming import bpe as sbpe
-
-    # the write path stamps fresh state dirs
-    state = tmp_path / "fresh"
-    docs = spark.createDataFrame([("hello world",)], ["text"])
-    sbpe.bpe_step(docs, str(state), "text", 2, 2.0, batch_id=0)
-    assert (state / "_BPE_ENCODING_VERSION").read_text().strip() == "2"
-    assert sbpe.read_bpe_words(spark, str(state)).count() == 2
-
-    # pre-marker state with verifiably-v1 rows (single-space) -> refuse
-    v1 = tmp_path / "v1state"
-    spark.createDataFrame([(" h i ", 1)], ["s", "freq"]).coalesce(
-        1
-    ).write.parquet(str(v1 / "words"))
-    with pytest.raises(RuntimeError, match="pre-v2"):
-        sbpe.read_bpe_words(spark, str(v1))
-    with pytest.raises(RuntimeError, match="pre-v2"):
-        sbpe.bpe_step(docs, str(v1), "text", 2, 2.0, batch_id=0)
-
-    # pre-marker state with verifiably-v2 rows (double-space — written
-    # by post-fix code from before the marker existed, the r15 advisor
-    # case) -> stamped in place as the migration, then readable
-    v2 = tmp_path / "v2state"
-    spark.createDataFrame([(" h  i ", 1)], ["s", "freq"]).coalesce(
-        1
-    ).write.parquet(str(v2 / "words"))
-    assert sbpe.read_bpe_words(spark, str(v2)).count() == 1
-    assert (v2 / "_BPE_ENCODING_VERSION").read_text().strip() == "2"
-
-    # nothing readable to sniff (empty words dir): safe-refuse with
-    # manual-migration guidance, never guess
-    legacy = tmp_path / "legacy"
-    (legacy / "words").mkdir(parents=True)
-    with pytest.raises(RuntimeError, match="no readable row"):
-        sbpe.read_bpe_words(spark, str(legacy))
-
-    # explicit version mismatch -> refuse on read AND write
-    (state / "_BPE_ENCODING_VERSION").write_text("1")
-    with pytest.raises(RuntimeError, match="symbol-encoding v1"):
-        sbpe.read_bpe_merges(spark, str(state))
-    with pytest.raises(RuntimeError, match="symbol-encoding v1"):
-        sbpe.bpe_step(docs, str(state), "text", 2, 2.0, batch_id=1)
 
 
 def test_bpe_chained_replace_at_arrow_threshold_depth(spark):

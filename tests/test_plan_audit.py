@@ -80,48 +80,6 @@ def test_plan_invariants(name, spark, sf_dir):
     )
 
 
-def test_catalog_priority_tiers_are_valid():
-    """The red-first/stale-first rotation must be sound: every name in
-    ``_LAST_CHECKED`` / ``_RED_LATEST`` exists in the registry (a typo
-    would silently mis-tier a query), and the registry iterates red
-    rows first, then monotone ascending last-checked-round order, so
-    the driver's ~50-row budget always lands on red-latest fixes before
-    anything else (round-6 verdict item 1c)."""
-    from tweets_spark_top_10_spark.queries.catalog import (
-        _LAST_CHECKED,
-        _RED_LATEST,
-        _REPROVE_NEXT,
-    )
-
-    unknown = [n for n in _LAST_CHECKED if n not in QUERIES]
-    assert not unknown, f"_LAST_CHECKED names not in registry: {unknown}"
-    unknown_red = [n for n in _RED_LATEST if n not in QUERIES]
-    assert not unknown_red, f"_RED_LATEST names not in registry: {unknown_red}"
-    unknown_rp = [n for n in _REPROVE_NEXT if n not in QUERIES]
-    assert not unknown_rp, f"_REPROVE_NEXT names not in registry: {unknown_rp}"
-
-    def tier(n):
-        if n in _RED_LATEST:
-            return -2
-        if n in _REPROVE_NEXT:
-            return -1
-        return _LAST_CHECKED.get(n, 0)
-
-    tiers = [tier(n) for n in QUERIES]
-    assert tiers == sorted(tiers), (
-        "registry not in red-first/reprove/stale-first order: "
-        f"{[(n, tier(n)) for n in QUERIES]}"
-    )
-    # red-latest queries must occupy the prefix, ahead of everything
-    names = list(QUERIES)
-    assert set(names[: len(_RED_LATEST)]) == set(_RED_LATEST)
-    # then the rewritten-since-last-check queries
-    rp = set(_REPROVE_NEXT) - set(_RED_LATEST)
-    assert (
-        set(names[len(_RED_LATEST) : len(_RED_LATEST) + len(rp)]) == rp
-    )
-
-
 def test_no_new_shuffles(spark, sf_dir):
     """Plan-shape regression tripwire: no catalog query may plan MORE
     Exchange operators (shuffles/broadcasts, reuse excluded) than the

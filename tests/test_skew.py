@@ -82,31 +82,6 @@ def test_semantic_dedup_hot_cell_capped(spark, tmp_path):
         # the unbridged cap left s clusters / s keeps here
         assert hot_clusters == {min(hot_ids)}, (hot_clusters, s, cap)
         assert sum(1 for i in hot_ids if rows[i][1]) == 1
-
-        # streaming-refit parity on the SAME skewed corpus: the refit's
-        # pair regeneration must apply the identical cap + rep bridge,
-        # so state-derived clusters == the batch query
-        from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-            refit_semantic_state,
-            semantic_clusters_from_state,
-        )
-
-        cells_state = str(tmp_path / "cells_state")
-        pairs_state = str(tmp_path / "pairs_state")
-        spark.read.parquet(str(tmp_path / "embeddings.parquet")).select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-        ).write.parquet(cells_state)
-        refit_semantic_state(spark, cells_state, pairs_state)
-        got = sorted(
-            map(
-                tuple,
-                semantic_clusters_from_state(
-                    spark, cells_state, pairs_state
-                ).collect(),
-            )
-        )
-        assert got == sorted((i, c, k) for i, (c, k) in rows.items())
     finally:
         con.close()
         spark.catalog.clearCache()

@@ -6,8 +6,7 @@ starts; a ``writeStream`` anywhere else in the package would start a query
 at the session's batch default instead.  ``swap.recover`` is the one crash
 recovery for the ``__stage``/``__old`` directories; a second copy of the
 suffixes is a second protocol that can drift from it.  The per-bucket swap
-in ``streaming/sketch.py`` and the lease-marker compaction in
-``streaming/layout.py`` are separate protocols that share the names.
+in ``streaming/sketch.py`` is a separate protocol that shares the names.
 """
 
 from __future__ import annotations
@@ -20,7 +19,6 @@ START_PATH = PACKAGE / "streaming" / "sinks.py"
 SWAP_OWNERS = {
     PACKAGE / "sources" / "swap.py",
     PACKAGE / "streaming" / "sketch.py",
-    PACKAGE / "streaming" / "layout.py",
 }
 
 

@@ -965,449 +965,6 @@ def test_signature_upsert_restores_bucket_stranded_mid_swap(
     assert not os.path.exists(str(aside))
 
 
-def test_streaming_ann_enrichment_matches_batch(spark, sf_dir, tmp_path):
-    """Incrementally-maintained IVF index + streamed query enrichment ==
-    batch ivf_knn over the final corpus state — exact.
-
-    Vector stream: first half, second half, then one vector RE-SENT
-    negated (it must move cells and replace its old row).  The
-    maintained cell table must equal the batch assignment of the final
-    corpus, and a query stream enriched against it must produce exactly
-    the batch ivf_knn top-5 (same fixed centroid book)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tweets_spark_top_10_spark.functions.similarity import (
-        ivf_assign_cells,
-        ivf_centroids,
-        ivf_knn,
-    )
-    from tweets_spark_top_10_spark.streaming.ann import (
-        enrich_stream_ann,
-        maintain_ivf_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    cands = emb.filter(F.col("vec_id") >= 10)
-    qdf = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # Fixed offline coarse book (97-stride over the pre-mutation corpus)
-    cents = ivf_centroids(cands, "vec_id")
-
-    pdf = cands.toPandas().sort_values("vec_id").reset_index(drop=True)
-    pdf["embedding"] = pdf["embedding"].map(list)
-    half = len(pdf) // 2
-    mutated_id = int(pdf.vec_id.iloc[1])  # not a 97-stride centroid member
-    mutated_vec = [
-        -float(v) for v in pdf.loc[pdf.vec_id == mutated_id, "embedding"].iloc[0]
-    ]
-
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    pd.DataFrame({"vec_id": [mutated_id], "embedding": [mutated_vec]}).to_parquet(
-        src / "b3.parquet", index=False
-    )
-
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = file_stream(spark, str(src), vec_schema, max_files_per_trigger=1)
-    table = str(tmp_path / "cell_table")
-    maintain_ivf_index(
-        stream, cents, table, checkpoint=str(tmp_path / "ckpt_idx")
-    ).awaitTermination()
-
-    final_cands = cands.filter(F.col("vec_id") != mutated_id).unionByName(
-        spark.createDataFrame(
-            [(mutated_id, mutated_vec)], schema=vec_schema
-        )
-    )
-    got_idx = {
-        (r.vec_id, r.cell_id) for r in spark.read.parquet(table).collect()
-    }
-    want_idx = {
-        (r.vec_id, r.cell_id)
-        for r in ivf_assign_cells(final_cands, cents, "vec_id", n_probe=1).collect()
-    }
-    assert got_idx == want_idx
-
-    qsrc = tmp_path / "query_stream"
-    qsrc.mkdir()
-    qpdf = qdf.toPandas()
-    qpdf["embedding"] = qpdf["embedding"].map(list)
-    qpdf.to_parquet(qsrc / "q1.parquet", index=False)
-    q_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    qstream = file_stream(spark, str(qsrc), q_schema, max_files_per_trigger=1)
-    out = str(tmp_path / "ann_out")
-    enrich_stream_ann(
-        qstream, table, cents, out, checkpoint=str(tmp_path / "ckpt_q")
-    ).awaitTermination()
-
-    got = {
-        (r.query_id, r.vec_id, r.cos_sim, r.rank)
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        (r.query_id, r.vec_id, r.cos_sim, r.rank)
-        for r in ivf_knn(
-            qdf, final_cands, k=5, cand_id="vec_id", centroids=cents
-        ).collect()
-    }
-    assert got and got == want
-
-
-def test_streaming_rp_ivf_index_matches_batch(spark, sf_dir, tmp_path):
-    """Incrementally-maintained PROJECTED cell table == batch
-    rp_array+ivf_assign_cells of the final corpus state against the
-    same fixed projected centroid book — exact (rounded projections,
-    deterministic argmin).  Includes a mutated-vector resend that must
-    re-project and replace its old row, and the served top-5 through
-    rp_ivf_rerank_knn's prebuilt path must equal the inline pipeline."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tweets_spark_top_10_spark.functions.similarity import (
-        ivf_assign_cells,
-        ivf_centroids,
-        rp_array,
-        rp_ivf_rerank_knn,
-    )
-    from tweets_spark_top_10_spark.streaming.ann import maintain_rp_ivf_index
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    cands = emb.filter(F.col("vec_id") >= 10)
-    # fixed offline book in the PROJECTED space (pre-mutation corpus)
-    cents = ivf_centroids(
-        rp_array(cands, "vec_id", d_out=32), "vec_id", "rp_vec"
-    ).localCheckpoint(eager=True)
-
-    pdf = cands.toPandas().sort_values("vec_id").reset_index(drop=True)
-    pdf["embedding"] = pdf["embedding"].map(list)
-    half = len(pdf) // 2
-    mutated_id = int(pdf.vec_id.iloc[1])
-    mutated_vec = [
-        -float(v) for v in pdf.loc[pdf.vec_id == mutated_id, "embedding"].iloc[0]
-    ]
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    pd.DataFrame({"vec_id": [mutated_id], "embedding": [mutated_vec]}).to_parquet(
-        src / "b3.parquet", index=False
-    )
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = file_stream(spark, str(src), vec_schema, max_files_per_trigger=1)
-    table = str(tmp_path / "rp_cell_table")
-    maintain_rp_ivf_index(
-        stream, cents, table, checkpoint=str(tmp_path / "ckpt_rp")
-    ).awaitTermination()
-
-    final_cands = cands.filter(F.col("vec_id") != mutated_id).unionByName(
-        spark.createDataFrame([(mutated_id, mutated_vec)], schema=vec_schema)
-    )
-    want_cells = ivf_assign_cells(
-        rp_array(final_cands, "vec_id", d_out=32), cents, "vec_id", "rp_vec",
-        n_probe=1,
-    )
-    got_idx = {
-        (r.vec_id, r.cell_id, tuple(r.rp_vec))
-        for r in spark.read.parquet(table).collect()
-    }
-    want_idx = {
-        (r.vec_id, r.cell_id, tuple(r.rp_vec)) for r in want_cells.collect()
-    }
-    assert got_idx == want_idx
-
-    # serving from the maintained table == the inline pipeline
-    qdf = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    maintained = spark.read.parquet(table).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    served = {
-        tuple(r)
-        for r in rp_ivf_rerank_knn(
-            qdf, final_cands.withColumnRenamed("vec_id", "neighbor_id"),
-            k=5, d_out=32, shortlist=50,
-            centroids=cents, cand_cells=maintained,
-        ).collect()
-    }
-    inline = {
-        tuple(r)
-        for r in rp_ivf_rerank_knn(
-            qdf, final_cands.withColumnRenamed("vec_id", "neighbor_id"),
-            k=5, d_out=32, shortlist=50, centroids=cents,
-        ).collect()
-    }
-    assert served and served == inline
-
-
-def test_streaming_pq_index_matches_batch(spark, sf_dir, tmp_path):
-    """Incrementally-maintained PQ-codes table == batch pq_encode of the
-    final corpus state against the same fixed codebook — exact (the
-    argmin encode is deterministic). Includes a mutated-vector resend."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tweets_spark_top_10_spark.functions.pq import pq_codebook, pq_encode
-    from tweets_spark_top_10_spark.functions.sampling import hash_bucket
-    from tweets_spark_top_10_spark.functions.similarity import l2_norm
-    from tweets_spark_top_10_spark.streaming.ann import maintain_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = l2_norm(F.col("embedding"))
-    cands = emb.filter(F.col("vec_id") >= 10).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double") / n).alias(
-            "embedding"
-        ),
-    )
-    cb = pq_codebook(cands, "vec_id").localCheckpoint(eager=False)
-
-    pdf = cands.toPandas().sort_values("vec_id").reset_index(drop=True)
-    pdf["embedding"] = pdf["embedding"].map(list)
-    half = len(pdf) // 2
-    mutated_id = int(pdf.vec_id.iloc[2])
-    mutated_vec = [
-        -float(v) for v in pdf.loc[pdf.vec_id == mutated_id, "embedding"].iloc[0]
-    ]
-
-    src = tmp_path / "pq_vec_stream"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    pd.DataFrame({"vec_id": [mutated_id], "embedding": [mutated_vec]}).to_parquet(
-        src / "b3.parquet", index=False
-    )
-
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = file_stream(spark, str(src), vec_schema, max_files_per_trigger=1)
-    table = str(tmp_path / "pq_table")
-    maintain_pq_index(
-        stream, cb, table, checkpoint=str(tmp_path / "ckpt_pq")
-    ).awaitTermination()
-
-    final_cands = cands.filter(F.col("vec_id") != mutated_id).unionByName(
-        spark.createDataFrame([(mutated_id, mutated_vec)], schema=vec_schema)
-    )
-    got = sorted(
-        (r.vec_id, r.m, r.code, r.bucket)
-        for r in spark.read.parquet(table).collect()
-    )
-    want = sorted(
-        (r.vec_id, r.m, r.code, r.bucket)
-        for r in pq_encode(final_cands, cb, "vec_id")
-        .withColumn("bucket", hash_bucket("vec_id", 16))
-        .collect()
-    )
-    assert len(got) == 16 * len(pdf)
-    assert got == want
-
-    # ADC enrichment against the maintained codes table == batch
-    # pq_adc_topk over the final corpus with the same codebook, exact.
-    from tweets_spark_top_10_spark.functions.pq import pq_adc_topk
-    from tweets_spark_top_10_spark.streaming.ann import enrich_stream_adc
-
-    qdf = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("embedding", lambda x: x.cast("double") / n).alias(
-            "embedding"
-        ),
-    )
-    qsrc = tmp_path / "pq_query_stream"
-    qsrc.mkdir()
-    qpdf = qdf.toPandas()
-    qpdf["embedding"] = qpdf["embedding"].map(list)
-    qpdf.to_parquet(qsrc / "q1.parquet", index=False)
-    q_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    qstream = file_stream(spark, str(qsrc), q_schema, max_files_per_trigger=1)
-    out = str(tmp_path / "adc_out")
-    enrich_stream_adc(
-        qstream, table, cb, out, checkpoint=str(tmp_path / "ckpt_adc")
-    ).awaitTermination()
-    got_adc = {
-        (r.query_id, r.vec_id, r.approx_d2, r.rank)
-        for r in spark.read.parquet(out).collect()
-    }
-    want_adc = {
-        (r.query_id, r.vec_id, r.approx_d2, r.rank)
-        for r in pq_adc_topk(
-            qdf, final_cands, k=5, cand_id="vec_id", codebook=cb
-        ).collect()
-    }
-    assert got_adc and got_adc == want_adc
-
-
-def test_streaming_opq_adc_matches_batch(spark, sf_dir, tmp_path):
-    """OPQ-composed streaming: codes maintained in the PERMUTED space
-    (maintain_pq_index(perm=...)) + query-stream ADC enrichment through
-    the same permutation == the batch pq_adc_opq pipeline over the
-    final corpus state, exact. Includes a mutated-vector resend, and a
-    checkpoint-wiped re-run to prove the batch_id-keyed overwrite sink
-    is idempotent (not just at-least-once)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tweets_spark_top_10_spark.functions.pq import (
-        apply_permutation,
-        opq_permutation,
-        pq_adc_topk,
-        pq_codebook,
-        pq_encode,
-    )
-    from tweets_spark_top_10_spark.functions.sampling import hash_bucket
-    from tweets_spark_top_10_spark.functions.similarity import l2_norm
-    from tweets_spark_top_10_spark.streaming.ann import (
-        enrich_stream_adc,
-        maintain_pq_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = l2_norm(F.col("embedding"))
-    cands = emb.filter(F.col("vec_id") >= 10).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double") / n).alias(
-            "embedding"
-        ),
-    )
-    perm = opq_permutation(cands).localCheckpoint(eager=False)
-    cands_p = apply_permutation(cands, "vec_id", perm)
-    cb = pq_codebook(cands_p, "vec_id").localCheckpoint(eager=False)
-
-    pdf = cands.toPandas().sort_values("vec_id").reset_index(drop=True)
-    pdf["embedding"] = pdf["embedding"].map(list)
-    half = len(pdf) // 2
-    mutated_id = int(pdf.vec_id.iloc[4])
-    mutated_vec = [
-        -float(v) for v in pdf.loc[pdf.vec_id == mutated_id, "embedding"].iloc[0]
-    ]
-    src = tmp_path / "opq_vec_stream"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    pd.DataFrame({"vec_id": [mutated_id], "embedding": [mutated_vec]}).to_parquet(
-        src / "b3.parquet", index=False
-    )
-
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = file_stream(spark, str(src), vec_schema, max_files_per_trigger=1)
-    table = str(tmp_path / "opq_table")
-    maintain_pq_index(
-        stream, cb, table, checkpoint=str(tmp_path / "ckpt_opq"), perm=perm
-    ).awaitTermination()
-
-    final_cands = cands.filter(F.col("vec_id") != mutated_id).unionByName(
-        spark.createDataFrame([(mutated_id, mutated_vec)], schema=vec_schema)
-    )
-    final_p = apply_permutation(final_cands, "vec_id", perm)
-    got = sorted(
-        (r.vec_id, r.m, r.code, r.bucket)
-        for r in spark.read.parquet(table).collect()
-    )
-    want = sorted(
-        (r.vec_id, r.m, r.code, r.bucket)
-        for r in pq_encode(final_p, cb, "vec_id")
-        .withColumn("bucket", hash_bucket("vec_id", 16))
-        .collect()
-    )
-    assert len(got) == 16 * len(pdf)
-    assert got == want
-
-    qdf = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("embedding", lambda x: x.cast("double") / n).alias(
-            "embedding"
-        ),
-    )
-    qsrc = tmp_path / "opq_query_stream"
-    qsrc.mkdir()
-    qpdf = qdf.toPandas()
-    qpdf["embedding"] = qpdf["embedding"].map(list)
-    qpdf.to_parquet(qsrc / "q1.parquet", index=False)
-    q_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    out = str(tmp_path / "opq_adc_out")
-    enrich_stream_adc(
-        file_stream(spark, str(qsrc), q_schema, max_files_per_trigger=1),
-        table,
-        cb,
-        out,
-        checkpoint=str(tmp_path / "ckpt_opq_adc"),
-        perm=perm,
-    ).awaitTermination()
-    got_adc = {
-        (r.query_id, r.vec_id, r.approx_d2, r.rank)
-        for r in spark.read.parquet(out).collect()
-    }
-    want_adc = {
-        (r.query_id, r.vec_id, r.approx_d2, r.rank)
-        for r in pq_adc_topk(
-            apply_permutation(qdf, "query_id", perm),
-            final_p,
-            k=5,
-            cand_id="vec_id",
-            codebook=cb,
-        ).collect()
-    }
-    assert got_adc and got_adc == want_adc
-
-    # Replay with a wiped checkpoint: the same micro-batches regenerate
-    # and OVERWRITE their batch_id subdirs — total row count unchanged
-    # (an append sink would double it).
-    n_rows = spark.read.parquet(out).count()
-    enrich_stream_adc(
-        file_stream(spark, str(qsrc), q_schema, max_files_per_trigger=1),
-        table,
-        cb,
-        out,
-        checkpoint=str(tmp_path / "ckpt_opq_adc_replay"),
-        perm=perm,
-    ).awaitTermination()
-    assert spark.read.parquet(out).count() == n_rows
-
-
 def test_foreach_batch_kv_upsert_matches_batch(spark, sf_dir, tmp_path):
     """The R12 analog (ES bulk index, App.java:159-178): streamed keyed
     upserts converge to the batch latest-state of the same rows —
@@ -2714,507 +2271,6 @@ def test_mg_merge_replayed_batch_is_noop(spark, sf_dir, tmp_path):
     # (the marker check is ==, not <=; round-8 review finding)
     merge_mg_batch_grouped(spark, batch, crashed, "lang", capacity=64, batch_id=0)
     assert canon(crashed) != after5, "fresh-checkpoint batch was discarded"
-
-
-def test_streaming_semantic_dedup_matches_batch(spark, sf_dir, tmp_path):
-    """Incrementally maintained semantic-dedup state == the batch
-    semantic_dedup_keep pipeline: drain the vector corpus in 3
-    micro-batches against the same fixed coarse quantizer, then the
-    state-derived (id, cluster, keep) must match the batch query
-    row-for-row.  Draining the SAME data again (duplicate delivery)
-    must leave the state unchanged."""
-    from tweets_spark_top_10_spark.functions.similarity import (
-        semdedup_centroids,
-    )
-    from tweets_spark_top_10_spark.queries.catalog import QUERIES
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        maintain_semantic_dedup,
-        semantic_clusters_from_state,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    # the batch query's corpus-scaled quantizer, fixed for the stream
-    cents = semdedup_centroids(vecs, cand_id="vec_id", vec_col="vec")
-
-    pdf = vecs.toPandas().sort_values("vec_id").reset_index(drop=True)
-    third = len(pdf) // 3
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    pdf.iloc[:third].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[third : 2 * third].to_parquet(src / "b2.parquet", index=False)
-    pdf.iloc[2 * third :].to_parquet(src / "b3.parquet", index=False)
-
-    stream = file_stream(
-        spark, str(src), vecs.schema, max_files_per_trigger=1
-    )
-    cells = str(tmp_path / "sd_cells")
-    pairs = str(tmp_path / "sd_pairs")
-    q = maintain_semantic_dedup(
-        stream, cents, cells, pairs, checkpoint=str(tmp_path / "sd_ckpt")
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    want = sorted(
-        map(tuple, QUERIES["semantic_dedup_keep"](spark, sf_dir).collect())
-    )
-    assert got == want
-
-    # duplicate delivery: fresh checkpoint, same files -> same state
-    q2 = maintain_semantic_dedup(
-        stream, cents, cells, pairs, checkpoint=str(tmp_path / "sd_ckpt2")
-    )
-    q2.awaitTermination()
-    again = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert again == want
-
-
-def test_streaming_semantic_refit_matches_batch(spark, sf_dir, tmp_path):
-    """Quantizer re-fit with state migration — the production lever for
-    an unbounded stream (BASELINE.md): start the stream against a
-    deliberately STALE quantizer (4 cells — the corpus wants √N), drain
-    2/3 of the corpus, re-fit mid-stream (corpus-scaled centroids +
-    cell re-assignment + pair regeneration), drain the rest against the
-    returned centroids, re-fit once more at full corpus size — and the
-    state-derived (id, cluster, keep) must equal the batch
-    semantic_dedup_keep query row-for-row.  Plus: a legacy-preserving
-    refit never drops recorded pairs, and the refit is idempotent."""
-    from tweets_spark_top_10_spark.functions.similarity import ivf_centroids
-    from tweets_spark_top_10_spark.queries.catalog import QUERIES
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        maintain_semantic_dedup,
-        refit_semantic_state,
-        semantic_clusters_from_state,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    pdf = vecs.toPandas().sort_values("vec_id").reset_index(drop=True)
-    third = len(pdf) // 3
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    pdf.iloc[:third].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[third : 2 * third].to_parquet(src / "b2.parquet", index=False)
-
-    stale = ivf_centroids(vecs, "vec_id", "vec", n_cells=4, stride=29)
-    stream = file_stream(
-        spark, str(src), vecs.schema, max_files_per_trigger=1
-    )
-    cells = str(tmp_path / "sd_cells")
-    pairs = str(tmp_path / "sd_pairs")
-    ckpt = str(tmp_path / "sd_ckpt")
-    maintain_semantic_dedup(
-        stream, stale, cells, pairs, checkpoint=ckpt
-    ).awaitTermination()
-
-    stale_pairs = set(map(tuple, spark.read.parquet(pairs).collect()))
-    assert stale_pairs, "stale quantizer found no pairs — fixture too easy"
-
-    # mid-stream refit, legacy-preserving: evidence already recorded
-    # under the stale quantizer must survive even where the new one no
-    # longer co-locates it
-    cents2 = refit_semantic_state(
-        spark, cells, pairs, keep_legacy_pairs=True
-    )
-    after_refit = set(map(tuple, spark.read.parquet(pairs).collect()))
-    assert after_refit >= stale_pairs
-
-    # drain the remaining third against the refit centroids (same
-    # checkpoint — only the new file is unprocessed)
-    pdf.iloc[2 * third :].to_parquet(src / "b3.parquet", index=False)
-    maintain_semantic_dedup(
-        stream, cents2, cells, pairs, checkpoint=ckpt
-    ).awaitTermination()
-
-    # final refit at full corpus size, batch-equivalence mode: the
-    # state becomes a pure function of (corpus, √N quantizer) — exactly
-    # what the batch query computes
-    refit_semantic_state(spark, cells, pairs)
-    got = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    want = sorted(
-        map(tuple, QUERIES["semantic_dedup_keep"](spark, sf_dir).collect())
-    )
-    assert got == want
-
-    # idempotence: re-running the refit leaves the state unchanged
-    refit_semantic_state(spark, cells, pairs)
-    again = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert again == want
-
-    # crash between the two swaps: cells already migrated, pairs still
-    # the old quantizer's — restore the stale pair set into the live
-    # pairs dir and re-run; refit must converge back to the batch
-    # state, because batch-equivalence mode regenerates pairs from the
-    # cell snapshot and never reads the pair table
-    import shutil
-
-    shutil.rmtree(pairs)
-    spark.createDataFrame(
-        sorted(stale_pairs), "id_a long, id_b long"
-    ).write.mode("overwrite").parquet(pairs)
-    refit_semantic_state(spark, cells, pairs)
-    recovered = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert recovered == want
-
-
-def test_streaming_semantic_refit_guards(spark, sf_dir, tmp_path):
-    """Round-10 advice (low): entry validation on the stream-decided
-    refit — refit_growth ≤ 1 (a full O(N·√N) rebuild EVERY micro-batch)
-    rejects loudly, a persisted centroid table without fitted_n (not a
-    maintainer artifact) rejects with the column list, and an empty one
-    names the recovery action instead of raising NoneType errors."""
-    import pytest
-
-    from tweets_spark_top_10_spark.functions.similarity import ivf_centroids
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        maintain_semantic_dedup,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    src = tmp_path / "g_src"
-    src.mkdir()
-    vecs.limit(10).toPandas().to_parquet(src / "b.parquet")
-    stream = file_stream(spark, str(src), vecs.schema, max_files_per_trigger=1)
-    book = ivf_centroids(vecs, "vec_id", "vec", n_cells=4, stride=29)
-    args = dict(
-        cells_path=str(tmp_path / "g_cells"),
-        pairs_path=str(tmp_path / "g_pairs"),
-        checkpoint=str(tmp_path / "g_ckpt"),
-    )
-
-    with pytest.raises(ValueError, match="refit_growth must be > 1"):
-        maintain_semantic_dedup(
-            stream, book, refit_growth=1.0,
-            centroids_path=str(tmp_path / "g_cents"), **args,
-        )
-    with pytest.raises(ValueError, match="requires centroids_path"):
-        maintain_semantic_dedup(stream, book, refit_growth=2.0, **args)
-
-    # a foreign parquet at centroids_path: reject naming the columns
-    foreign = str(tmp_path / "g_foreign")
-    book.write.parquet(foreign)
-    with pytest.raises(ValueError, match="no fitted_n column"):
-        maintain_semantic_dedup(
-            stream, book, refit_growth=2.0, centroids_path=foreign, **args
-        )
-
-    # an empty (zero-row) book: reject naming the recovery action
-    empty = str(tmp_path / "g_empty")
-    book.limit(0).withColumn("fitted_n", F.lit(16)).write.parquet(empty)
-    with pytest.raises(ValueError, match="empty"):
-        maintain_semantic_dedup(
-            stream, book, refit_growth=2.0, centroids_path=empty, **args
-        )
-
-
-def test_streaming_semantic_refit_stream_decided(spark, sf_dir, tmp_path):
-    """Round-10 production cadence: the STREAM decides when to re-fit.
-    ``maintain_semantic_dedup(refit_growth=2.0)`` starts from a
-    deliberately stale 4-cell quantizer (derived fitted_on = 4² = 16)
-    and drains the 500-vector corpus as 125/125/250 — the stored corpus
-    doubles at every batch boundary, so the loop must refit after each
-    batch and the LAST refit lands exactly on the full corpus: the
-    final state equals the batch semantic_dedup_keep query with zero
-    manual refit calls.  Then the durable-quantizer and crash-re-arm
-    contracts: a re-attached stream passed the stale book must continue
-    from the PERSISTED quantizer (duplicate delivery leaves the state
-    unchanged), and a simulated crash that rolled the centroid table
-    back to the stale book re-arms the trigger on the next drain."""
-    from tweets_spark_top_10_spark.functions.similarity import ivf_centroids
-    from tweets_spark_top_10_spark.queries.catalog import QUERIES
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        _persist_centroids,
-        maintain_semantic_dedup,
-        semantic_clusters_from_state,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    pdf = vecs.toPandas().sort_values("vec_id").reset_index(drop=True)
-    n = len(pdf)
-    q1, q2 = n // 4, n // 2
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    pdf.iloc[:q1].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[q1:q2].to_parquet(src / "b2.parquet", index=False)
-    pdf.iloc[q2:].to_parquet(src / "b3.parquet", index=False)
-
-    stale = ivf_centroids(vecs, "vec_id", "vec", n_cells=4, stride=29)
-    cells = str(tmp_path / "sd_cells")
-    pairs = str(tmp_path / "sd_pairs")
-    cents_path = str(tmp_path / "sd_cents")
-    stream = file_stream(spark, str(src), vecs.schema, max_files_per_trigger=1)
-    maintain_semantic_dedup(
-        stream,
-        stale,
-        cells,
-        pairs,
-        checkpoint=str(tmp_path / "sd_ckpt"),
-        refit_growth=2.0,
-        centroids_path=cents_path,
-    ).awaitTermination()
-
-    want = sorted(
-        map(tuple, QUERIES["semantic_dedup_keep"](spark, sf_dir).collect())
-    )
-    got = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert got == want, "stream-decided refits did not converge to batch state"
-    persisted = spark.read.parquet(cents_path)
-    assert persisted.select("fitted_n").head()[0] == n, (
-        "last refit did not land on the full corpus"
-    )
-    assert persisted.count() > 4, "quantizer never re-fitted past the stale book"
-
-    # durable quantizer wins over the caller's stale argument: fresh
-    # checkpoint, same files — duplicate delivery, no state change, and
-    # fitted_n stays at n (no spurious refit: n >= 2n is false)
-    maintain_semantic_dedup(
-        file_stream(spark, str(src), vecs.schema, max_files_per_trigger=1),
-        stale,
-        cells,
-        pairs,
-        checkpoint=str(tmp_path / "sd_ckpt2"),
-        refit_growth=2.0,
-        centroids_path=cents_path,
-    ).awaitTermination()
-    again = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert again == want
-    assert spark.read.parquet(cents_path).select("fitted_n").head()[0] == n
-
-    # crash re-arm: roll the centroid table back to the stale book
-    # (as if the crash hit after refit's state swaps but before the
-    # centroid swap — fitted_n never advanced).  The next drain sees
-    # stored n >= 2*16, re-runs the refit, and converges.
-    _persist_centroids(stale, cents_path, 16)
-    maintain_semantic_dedup(
-        file_stream(spark, str(src), vecs.schema, max_files_per_trigger=1),
-        stale,
-        cells,
-        pairs,
-        checkpoint=str(tmp_path / "sd_ckpt3"),
-        refit_growth=2.0,
-        centroids_path=cents_path,
-    ).awaitTermination()
-    recovered = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert recovered == want
-    assert spark.read.parquet(cents_path).select("fitted_n").head()[0] == n
-
-
-def test_streaming_skewed_merge_coarsens_then_converges(spark, tmp_path):
-    """Skewed-corpus contract for the INCREMENTAL merge path: between
-    refits the per-batch merge emits all intra-cell pairs (uncapped —
-    per-batch work is bounded by the batch side, not the cell), a
-    SUPERSET of the batch pipeline's capped+bridged pair set, so
-    stream-derived clusters may only COARSEN the batch answer (every
-    batch-merged group lands inside ONE stream group; dedup evidence is
-    never lost).  A refit then regenerates the exact batch state.
-    Fixture: the test_skew adversarial corpus — 90% of 800 vectors
-    near-identical on one direction, forcing the batch cap+bridge path."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tweets_spark_top_10_spark.functions.similarity import (
-        semdedup_centroids,
-    )
-    from tweets_spark_top_10_spark.queries.catalog import QUERIES
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        refit_semantic_state,
-        semantic_clusters_from_state,
-        upsert_semantic_pairs_batch,
-    )
-
-    n, dim = 800, 8
-
-    def emb(i: int) -> list[float]:
-        if i % 10 != 9:
-            return [1.0, (i + 1) * 2e-8] + [0.0] * (dim - 2)
-        j = 1 + (i // 10) % (dim - 1)
-        return [0.0] * j + [1.0] + [0.0] * (dim - 1 - j)
-
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(range(n), pa.int64()),
-                "label": pa.array([i % 5 for i in range(n)], pa.int32()),
-                "embedding": pa.array(
-                    [emb(i) for i in range(n)], pa.list_(pa.float32())
-                ),
-            }
-        ),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    want_rows = QUERIES["semantic_dedup_keep"](spark, str(tmp_path)).collect()
-    want_cluster = {r.vec_id: r.cluster for r in want_rows}
-
-    vecs = spark.read.parquet(str(tmp_path / "embeddings.parquet")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    cents = semdedup_centroids(vecs, cand_id="vec_id", vec_col="vec")
-    cells = str(tmp_path / "cells")
-    pairs = str(tmp_path / "pairs")
-    for lo, hi in ((0, n // 2), (n // 2, n)):
-        upsert_semantic_pairs_batch(
-            spark,
-            vecs.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            cents,
-            cells,
-            pairs,
-        )
-    got_cluster = {
-        r.vec_id: r.cluster
-        for r in semantic_clusters_from_state(spark, cells, pairs).collect()
-    }
-    # coarsening: every batch cluster maps into exactly one stream cluster
-    seen: dict[int, int] = {}
-    for vid, bc in want_cluster.items():
-        sc = got_cluster[vid]
-        assert seen.setdefault(bc, sc) == sc, (
-            f"batch cluster {bc} split across stream clusters "
-            f"{seen[bc]} and {sc} — incremental merge LOST evidence"
-        )
-
-    # convergence: a refit regenerates the exact batch state
-    refit_semantic_state(spark, cells, pairs)
-    got = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert got == sorted(map(tuple, want_rows))
-
-
-def test_streaming_semantic_refit_collapses_exact_dup_mass(spark, tmp_path):
-    """Round-10 advice (medium): an EXACT-duplicate mass counted
-    uncollapsed can push its cell over the sub-cell cap, split by
-    id % s across sub-cells whose min-id reps are non-dup decoys
-    OUTSIDE threshold — a refit without the batch pipeline's xxhash64
-    collapse prepass then keeps s canonicals where the batch query
-    keeps one.  Fixture engineered to hit exactly that: 532 bitwise-
-    identical vectors + 9 low-id decoys that share the mass's cell
-    (argmin) but sit below the 0.3 cosine threshold to it, so every
-    sub-cell's min-id rep is either a decoy or a lone mass member and
-    the rep bridge cannot reconnect the mass.  The refit must still
-    equal the batch ``semantic_dedup_keep`` row-for-row."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tweets_spark_top_10_spark.functions.similarity import (
-        ivf_assign_cells,
-        ivf_centroids,
-        scaled_cell_params,
-        semdedup_centroids,
-        subcell_cap,
-    )
-    from tweets_spark_top_10_spark.queries.catalog import QUERIES
-    from tweets_spark_top_10_spark.streaming.semantic_dedup import (
-        refit_semantic_state,
-        semantic_clusters_from_state,
-        upsert_semantic_pairs_batch,
-    )
-
-    n, dim = 600, 8
-    mass = [1.0] + [0.0] * (dim - 1)
-
-    def emb(i: int) -> list[float]:
-        if i == 0 or 10 <= i < 540:
-            return list(mass)  # bitwise-identical duplicate mass
-        if 1 <= i <= 9:
-            # decoy: argmin lands in the mass's cell (cos≈0.29 to mass
-            # beats ≤0.24 to every axis-filler centroid) but BELOW the
-            # 0.3 pair threshold; distinct floats so decoys are
-            # near-dups of each other, never exact dups
-            return [0.3, 0.25, 0.0, i * 1e-6, 0.0, 0.0, 0.0, 0.95]
-        axis = 1 + (i % 2)  # axis fillers spread the strided book
-        v = [0.0] * dim
-        v[axis] = 1.0
-        v[4] = (i - 540) * 1e-6
-        return v
-
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(range(n), pa.int64()),
-                "label": pa.array([i % 5 for i in range(n)], pa.int32()),
-                "embedding": pa.array(
-                    [emb(i) for i in range(n)], pa.list_(pa.float32())
-                ),
-            }
-        ),
-        str(tmp_path / "embeddings.parquet"),
-    )
-
-    vecs = spark.read.parquet(str(tmp_path / "embeddings.parquet")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    # fixture-hardness guard: UNcollapsed, the mass cell must exceed the
-    # cap (otherwise this test would pass trivially without the prepass)
-    n_cells, stride = scaled_cell_params(n)
-    cap = subcell_cap(n, n_cells)
-    book = ivf_centroids(vecs, "vec_id", "vec", n_cells, stride)
-    hot = (
-        ivf_assign_cells(vecs, book, "vec_id", "vec", n_probe=1)
-        .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c"))
-        .first()[0]
-    )
-    assert hot > cap, f"fixture too easy: hottest cell {hot} <= cap {cap}"
-
-    want_rows = QUERIES["semantic_dedup_keep"](spark, str(tmp_path)).collect()
-    mass_ids = {0} | set(range(10, 540))
-    want_mass_keeps = sum(
-        1 for r in want_rows if r.vec_id in mass_ids and r.keep
-    )
-    assert want_mass_keeps == 1, (
-        f"batch keeps {want_mass_keeps} canonicals of the exact-dup mass"
-    )
-
-    cents = semdedup_centroids(vecs, cand_id="vec_id", vec_col="vec")
-    cells = str(tmp_path / "cells")
-    pairs = str(tmp_path / "pairs")
-    for lo, hi in ((0, n // 2), (n // 2, n)):
-        upsert_semantic_pairs_batch(
-            spark,
-            vecs.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            cents,
-            cells,
-            pairs,
-        )
-    refit_semantic_state(spark, cells, pairs)
-    got = sorted(
-        map(tuple, semantic_clusters_from_state(spark, cells, pairs).collect())
-    )
-    assert got == sorted(map(tuple, want_rows))
 
 
 def test_streaming_grouped_heavy_hitters_order_independent_exactness(

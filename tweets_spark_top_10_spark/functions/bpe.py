@@ -71,10 +71,9 @@ def read_merge_rules_parquet(spark, path: str) -> list[tuple[int, str, str, int]
     """A persisted MERGE_SCHEMA parquet (e.g. the committed production
     fixture ``fixtures/bpe_merges_32k/merges.parquet`` built by
     tools/bpe_build_index.py) as the driver-side rule list every
-    encoder consumes — the offline/online split's online half, same
-    shape as ``streaming/bpe.read_bpe_merge_rules`` reads off the
-    maintainer's state dir.  K rows: metadata-class collect, same
-    bounded-cardinality contract as PQ codebooks."""
+    encoder consumes — the offline/online split's online half.  K
+    rows: metadata-class collect, same bounded-cardinality contract as
+    PQ codebooks."""
     return [
         (r.merge_rank, r.lhs, r.rhs, r.pair_count)
         for r in spark.read.schema(MERGE_SCHEMA)
@@ -143,9 +142,7 @@ def learn_from_words(
     words: DataFrame, merges: int
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn loop over an existing (s, freq) word-frequency table —
-    the entry the STREAMING maintainer uses to re-learn merges from
-    its incrementally-maintained word table without touching the raw
-    corpus (``streaming/bpe.py``)."""
+    re-learns merges without touching the raw corpus."""
     if merges < 1:
         raise ValueError(f"merges must be >= 1, got {merges}")
     # LAZY checkpoints throughout (r16): each round's TakeOrdered
@@ -387,9 +384,8 @@ def bpe_encode_docs(
        expensive per-word encode runs once per unique word, not once
        per occurrence);
     2. merge rules learned here (``merges`` rounds) or PROVIDED —
-       e.g. read from the streaming maintainer's state dir
-       (``streaming/bpe.read_bpe_merges``), the serving-from-maintained
-       artifact path every other index family has;
+       e.g. the committed fixture via :func:`read_merge_rules_parquet`,
+       the serving-from-artifact path every other index family has;
     3. distinct words segmented in one chained-replace projection
        (:func:`segment_words`; :func:`segment_words_arrow` for 32k-rule
        tables);

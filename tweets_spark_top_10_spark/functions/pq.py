@@ -423,16 +423,12 @@ def pq_adc_topk(
     stride: int = 7,
     round_digits: int = 6,
     codebook: DataFrame | None = None,
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-K by PQ/ADC: candidates are scanned as M-byte
     codes; per-candidate distance is SUM of M broadcast-LUT entries.
 
     ``codebook`` overrides the strided seed codebook (e.g. a
-    :func:`pq_codebook_refine` output).  ``codes`` overrides the
-    in-query encode with a precomputed (id, m, code) table — the
-    maintained-index path (``streaming/ann.maintain_pq_index``), where
-    the scan side never touches a vector at all.
+    :func:`pq_codebook_refine` output).
 
     Output: (query_id, cand_id, approx_d2, rank) — rank by rounded ADC
     distance, candidate id as tie-break (deterministic, oracle-exact).
@@ -442,8 +438,7 @@ def pq_adc_topk(
         if codebook is not None
         else pq_codebook(candidates, cand_id, vec_col, m, sub_dim, n_codes, stride)
     )
-    if codes is None:
-        codes = pq_encode(candidates, cb, cand_id, vec_col, m, sub_dim)
+    codes = pq_encode(candidates, cb, cand_id, vec_col, m, sub_dim)
     qsub = _explode_subvectors(queries, query_id, vec_col, m, sub_dim)
     lut = qsub.join(F.broadcast(cb), "m").select(
         F.col(query_id),

@@ -327,9 +327,9 @@ def ivf_knn(
     instead of all of them.
 
     ``centroids``/``cand_cells`` override the in-query quantizer with a
-    precomputed coarse book / cell-assignment table — the maintained-
-    index path (``streaming/ann.py``) where assignments come from an
-    incrementally-upserted artifact table instead of a fresh scan.
+    precomputed coarse book / cell-assignment table — the prebuilt-
+    index path, where assignments come from a persisted artifact table
+    instead of a fresh scan.
     """
     cents = (
         centroids
@@ -799,7 +799,7 @@ def rp_ivf_rerank_knn(
     ``centroids``/``cand_cells`` (both in the PROJECTED space, the
     latter shaped (cand_id, rp_vec, cell_id)) override the in-query
     index build — the prebuilt-serving split the bench's rp curve
-    measures, mirroring :func:`ivf_knn`'s maintained-artifact path.
+    measures, mirroring :func:`ivf_knn`'s prebuilt-index path.
     """
     qp = rp_array(queries, query_id, vec_col, d_out, dim, seed)
     cp = (

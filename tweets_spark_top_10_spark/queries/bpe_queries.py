@@ -257,9 +257,8 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no window, no skew pivot).  The 32k-rule production path swaps the
     replace chain for the Arrow per-word encoder
     (``segment_words_arrow``, pinned exact-equal in tests); serving
-    from the STREAMING maintainer's merge table is the
-    ``merge_rules=read_bpe_merges(...)`` parameter, differential-tested
-    in tests/test_bpe.py."""
+    from a stored merge table is the ``merge_rules=`` parameter,
+    differential-tested in tests/test_bpe.py."""
     from tweets_spark_top_10_spark.functions.bpe import bpe_encode_docs as enc
 
     docs = load_table(spark, sf_dir, "documents")

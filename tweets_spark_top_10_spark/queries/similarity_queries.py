@@ -570,9 +570,8 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     codes: (neighbor_id, m, code)) and return their parquet paths.
 
     This is the offline half of the production split: index
-    construction amortizes across queries (streaming/ann.py maintains
-    the same tables incrementally), so query latency measures the ADC
-    scan alone.  Deterministic (strided seed codebook, rounded-distance
+    construction amortizes across queries, so query latency measures
+    the ADC scan alone.  Deterministic (strided seed codebook, rounded-distance
     encode), so rebuilds are byte-stable and the value oracle is the
     same as ``pq_adc_top5``'s."""
     from tweets_spark_top_10_spark.functions.pq import (

@@ -13,8 +13,7 @@ all three:
   writes ``batch_id=N`` with dynamic partition overwrite, and
   Structured Streaming replays a failed batch under the SAME batch id,
   so a replay overwrites its own previous output instead of double
-  counting (this is the batch-id-keyed idempotence pattern the append
-  sinks in ``streaming/ann.py`` document as their weaker alternative);
+  counting (the batch-id-keyed idempotence pattern);
 - the LOCF fill is a function of the complete bucket table, and an
   out-of-order arrival in bucket B changes every filled bucket until
   the next observation — so the fill is derived ON READ

@@ -167,8 +167,8 @@ def foreach_batch_kv_upsert(
     Within-batch duplicate keys: with ``seq_col`` the max-sequence row
     wins (arrival-order semantics that survive backfills batching
     differently); without it the lexicographically largest value struct
-    wins — deterministic, but within-trigger order is undefined (the
-    streaming/ann dedup contract).  Across batches the upsert gives
+    wins — deterministic, but within-trigger order is undefined.
+    Across batches the upsert gives
     last-writer-wins, and replaying a batch converges to the same
     table.
     """

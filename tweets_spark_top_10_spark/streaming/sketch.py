@@ -78,7 +78,7 @@ def upsert_rows_by_bucket(
     bucket-partitioned parquet table: last-writer-wins on ``id_col``,
     untouched bucket partitions never read or written.  The generic
     engine under every incrementally-maintained per-row artifact table
-    (MinHash signatures, ANN cell assignments, PQ codes, ...).
+    (MinHash signatures, ``sinks.foreach_batch_kv_upsert`` tables).
     """
     rows = keyed_rows.persist()
     # Stage-then-swap, never read-your-own-overwrite: the merge plan
