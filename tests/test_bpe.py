@@ -390,7 +390,7 @@ def test_bpe_rejects_bad_merge_count(spark):
 
 def test_bpe_chained_replace_at_arrow_threshold_depth(spark):
     """The chained-replace path serves every rule list up to
-    ``arrow_threshold`` (default 256), but equivalence and Catalyst
+    ``functions/bpe._ARROW_THRESHOLD`` (256), but equivalence and Catalyst
     depth were only exercised at 8 sequential / ~24 batched rules (r15
     advisor finding). Pin a 250-rule chain — just under the threshold —
     producing a 250-deep nested F.replace tree: it must analyze,

@@ -546,194 +546,6 @@ def test_load_table_rejects_non_utc_session_zone(spark, sf_dir):
     assert load_table(spark, sf_dir, "nation").count() == 25
 
 
-def test_write_zorder_clusters_every_dimension(spark, sf_dir, tmp_path):
-    """Z-order vs 1-D range clustering on (l_orderkey, l_partkey): a
-    filter on the SECOND column alone prunes most z-ordered files by
-    footer min/max, while the 1-D layout leaves every file overlapping.
-    Content round-trips exactly."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from tweets_spark_top_10_spark.sources.writers import (
-        write_clustered,
-        write_zorder_clustered,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    zdir, rdir = str(tmp_path / "zorder"), str(tmp_path / "range1d")
-    write_zorder_clustered(li, zdir, ["l_orderkey", "l_partkey"], num_files=64)
-    write_clustered(li, rdir, ["l_orderkey"], num_files=16)
-
-    def file_ranges(d, col):
-        out = []
-        for f in sorted(glob.glob(f"{d}/part-*.parquet")):
-            t = pq.read_table(f, columns=[col])[col]
-            out.append((pc.min(t).as_py(), pc.max(t).as_py()))
-        return out
-
-    pk_min = li.agg(F.min("l_partkey")).collect()[0][0]
-    pk_max = li.agg(F.max("l_partkey")).collect()[0][0]
-    # thin slice on the non-prefix column: ~10% of the partkey domain
-    lo = pk_min + (pk_max - pk_min) * 0.45
-    hi = pk_min + (pk_max - pk_min) * 0.55
-    z_ranges = file_ranges(zdir, "l_partkey")
-    r_ranges = file_ranges(rdir, "l_partkey")
-    z_hit = sum(1 for mn, mx in z_ranges if mx >= lo and mn <= hi)
-    r_hit = sum(1 for mn, mx in r_ranges if mx >= lo and mn <= hi)
-    assert len(z_ranges) >= 8
-    assert r_hit == len(r_ranges), "1-D layout should not prune partkey"
-    assert z_hit <= int(0.4 * len(z_ranges)), (
-        f"z-order should bound partkey per file: {z_hit}/{len(z_ranges)}"
-    )
-    # and the prefix column still prunes too (both layouts)
-    ok_min = li.agg(F.min("l_orderkey")).collect()[0][0]
-    ok_max = li.agg(F.max("l_orderkey")).collect()[0][0]
-    olo = ok_min + (ok_max - ok_min) * 0.45
-    ohi = ok_min + (ok_max - ok_min) * 0.55
-    zo = file_ranges(zdir, "l_orderkey")
-    zo_hit = sum(1 for mn, mx in zo if mx >= olo and mn <= ohi)
-    assert zo_hit <= int(0.4 * len(zo))
-
-    back = spark.read.parquet(zdir)
-    assert back.count() == li.count()
-    assert back.agg(F.sum("l_quantity")).collect() == li.agg(
-        F.sum("l_quantity")
-    ).collect()
-
-
-def test_file_bloom_index_point_lookup(spark, sf_dir, tmp_path):
-    """Per-file Bloom sidecar: every point lookup equals the full-scan
-    filter (zero false negatives), present keys open few files when
-    the key is file-clustered, and an absent key reads no file at all
-    (or only FPR noise)."""
-    from tweets_spark_top_10_spark.sources.file_index import (
-        build_file_bloom_index,
-        candidate_files,
-        point_lookup,
-    )
-    from tweets_spark_top_10_spark.sources.writers import write_clustered
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value"
-    )
-    out = str(tmp_path / "events_by_user")
-    write_clustered(events, out, ["user_id"], num_files=8)
-    n_files = len(glob.glob(f"{out}/part-*.parquet"))
-    assert n_files >= 4
-
-    index = build_file_bloom_index(spark, out, "user_id").cache()
-    users = [r["user_id"] for r in events.select("user_id").distinct().limit(12).collect()]
-    total_cand = 0
-    for u in users:
-        cand = candidate_files(index, u)
-        total_cand += len(cand)
-        got = sorted(
-            r["event_id"] for r in point_lookup(spark, out, index, "user_id", u).collect()
-        )
-        want = sorted(
-            r["event_id"]
-            for r in spark.read.parquet(out).where(F.col("user_id") == u).collect()
-        )
-        assert got == want and got, f"user {u}"
-    # clustered layout -> each user lives in ~1 file; Bloom should
-    # prove that for most probes (allow FPR slack)
-    assert total_cand <= 2 * len(users), (total_cand, n_files)
-
-    # absent key: no false negatives is trivial (empty == empty); the
-    # value is not opening files — candidate set stays tiny
-    missing = max(users) + 10_000_000
-    assert len(candidate_files(index, missing)) <= 1
-    assert point_lookup(spark, out, index, "user_id", missing).count() == 0
-    index.unpersist()
-
-
-def test_retire_hour_partitions_ttl_and_crash_sweep(spark, tmp_path):
-    """TTL retirement drops exactly the dirs older than the watermark
-    (both zero-padded and Spark-style unpadded layouts), sweeps a
-    leftover __retired dir from a crashed run, prunes empty parents,
-    and the surviving table still reads cleanly."""
-    import datetime
-
-    from tweets_spark_top_10_spark.sources.maintenance import (
-        list_hour_partitions,
-        retire_hour_partitions,
-    )
-
-    base = str(tmp_path / "hourly")
-    df = spark.range(5).toDF("v")
-    dirs = [
-        "year=2024/month=02/day=28/hour=22",
-        "year=2024/month=02/day=28/hour=23",
-        "year=2024/month=3/day=1/hour=0",    # unpadded (Spark-written)
-        "year=2024/month=03/day=01/hour=01",
-    ]
-    for d in dirs:
-        df.write.parquet(f"{base}/{d}")
-    # simulate a crashed previous retire: renamed aside, not deleted
-    import os as _os
-
-    _os.rename(
-        f"{base}/year=2024/month=02/day=28/hour=22",
-        f"{base}/year=2024/month=02/day=28/hour=22__retired",
-    )
-
-    assert len(list_hour_partitions(base)) == 3
-    retired = retire_hour_partitions(
-        base, older_than=datetime.datetime(2024, 3, 1, 1)
-    )
-    assert len(retired) == 2  # hour=23 and the unpadded hour=0
-    left = list_hour_partitions(base)
-    assert [h for h, _ in left] == [datetime.datetime(2024, 3, 1, 1)]
-    assert not any("__retired" in p for _, p in left)
-    # empty parents pruned; survivor still readable
-    assert not _os.path.exists(f"{base}/year=2024/month=02")
-    assert spark.read.parquet(f"{base}/year=2024/month=03/day=01/hour=01").count() == 5
-
-
-def test_collect_file_stats_matches_footers(spark, sf_dir, tmp_path):
-    """The distributed manifest reproduces pyarrow's own footer stats
-    per (file, column): row counts, null counts, min/max."""
-    import pyarrow.parquet as pq
-
-    from tweets_spark_top_10_spark.sources.maintenance import collect_file_stats
-    from tweets_spark_top_10_spark.sources.writers import write_clustered
-
-    out = str(tmp_path / "stats_tbl")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    write_clustered(orders, out, ["o_orderkey"], num_files=5)
-
-    manifest = {
-        (r["file"], r["column"]): r
-        for r in collect_file_stats(spark, out, ["o_orderkey", "o_totalprice"]).collect()
-    }
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert files and len(manifest) == 2 * len(files)
-    for f in files:
-        meta = pq.read_metadata(f)
-        for col_idx, col in enumerate(meta.schema.names):
-            if col not in ("o_orderkey", "o_totalprice"):
-                continue
-            mns, mxs, nulls = [], [], 0
-            for rg in range(meta.num_row_groups):
-                g = meta.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema != col:
-                        continue
-                    nulls += c.statistics.null_count or 0
-                    mns.append(c.statistics.min)
-                    mxs.append(c.statistics.max)
-            r = manifest[(f, col)]
-            assert r["n_rows"] == meta.num_rows
-            assert r["n_nulls"] == nulls
-            assert r["min_str"] == str(min(mns))
-            assert r["max_str"] == str(max(mxs))
-
-
 def test_write_with_audit_single_pass_metrics(spark, sf_dir, tmp_path):
     """Audit metrics ride the write job itself (df.observe): the
     returned dict matches a direct recomputation, and the written data
@@ -761,38 +573,6 @@ def test_write_with_audit_single_pass_metrics(spark, sf_dir, tmp_path):
     ).collect()[0].asDict()
     assert got == direct
     assert spark.read.parquet(out).count() == got["n_rows"] > 0
-
-
-def test_prune_files_by_range_matches_footers(spark, sf_dir, tmp_path):
-    """Manifest range pruning keeps exactly the files whose footer box
-    intersects the predicate range — and reading only those files
-    yields the same rows as the full-scan filter."""
-    from tweets_spark_top_10_spark.sources.maintenance import (
-        collect_file_stats,
-        prune_files_by_range,
-    )
-    from tweets_spark_top_10_spark.sources.writers import write_clustered
-
-    out = str(tmp_path / "range_tbl")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_clustered(li, out, ["l_orderkey"], num_files=8)
-    stats = collect_file_stats(spark, out, ["l_orderkey"]).cache()
-
-    ok_max = li.agg(F.max("l_orderkey")).collect()[0][0]
-    lo, hi = ok_max * 0.4, ok_max * 0.5
-    files = prune_files_by_range(stats, "l_orderkey", lo, hi)
-    all_files = [r["file"] for r in stats.select("file").distinct().collect()]
-    assert 0 < len(files) < len(all_files)
-    got = (
-        spark.read.parquet(*files)
-        .where(F.col("l_orderkey").between(lo, hi))
-        .count()
-    )
-    want = spark.read.parquet(out).where(
-        F.col("l_orderkey").between(lo, hi)
-    ).count()
-    assert got == want > 0
-    stats.unpersist()
 
 
 def test_read_json_quarantine_splits_good_and_bad(spark, tmp_path):

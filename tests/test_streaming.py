@@ -150,156 +150,6 @@ def test_foreach_batch_overwrite_idempotent(
     assert first == second
 
 
-def _has_protobuf() -> bool:
-    # transformWithStateInPandas speaks protobuf to the state server;
-    # the runtime dependency is missing from this container (PySpark
-    # declares it optional) and installs are unavailable.
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.parametrize(
-    "impl",
-    [
-        "apply_in_pandas",
-        pytest.param(
-            "transform_with_state",
-            marks=pytest.mark.skipif(
-                not _has_protobuf(),
-                reason="transformWithStateInPandas needs google.protobuf "
-                "(absent from container; pip install unavailable) — the "
-                "differential gate runs wherever protobuf exists",
-            ),
-        ),
-    ],
-)
-def test_stateful_sessionization_matches_batch(
-    spark, sf_dir, events_dir, events_schema, impl
-):
-    """Stateful sessions == batch lag-gap sessions, for BOTH custom-state
-    APIs (applyInPandasWithState and transformWithStateInPandas).
-
-    Closed-session semantics: every batch session that ends more than
-    (gap + watermark-delay) before the max event time MUST be emitted by
-    the stream; everything the stream emits must be a real batch session.
-    """
-    import datetime
-
-    from pyspark.sql import Window
-    from tweets_spark_top_10_spark.streaming import (
-        sessionize_transform_with_state,
-        sessionize_with_state,
-    )
-
-    sessionize = (
-        sessionize_with_state
-        if impl == "apply_in_pandas"
-        else sessionize_transform_with_state
-    )
-    gap_s, wm_s = 7200, 600
-    stream = file_stream(spark, events_dir, events_schema, max_files_per_trigger=1)
-    sessions = sessionize(
-        stream, "ts", "user_id", gap_seconds=gap_s, watermark="10 minutes"
-    )
-    q = run_to_memory(sessions, f"state_sessions_{impl}")
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table(f"state_sessions_{impl}").collect()
-    }
-    assert got, "stateful stream emitted nothing"
-
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    batch = (
-        events.withColumn("prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "new_sess",
-            (
-                F.col("prev_ts").isNull()
-                | (
-                    F.unix_micros("ts") - F.unix_micros("prev_ts")
-                    > gap_s * 1_000_000
-                )
-            ).cast("int"),
-        )
-        .withColumn("sess_id", F.sum("new_sess").over(w))
-        .groupBy("user_id", "sess_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    all_sessions = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.collect()
-    }
-    mx = events.agg(F.max("ts")).collect()[0][0]
-    cutoff = mx - datetime.timedelta(seconds=gap_s + wm_s)
-    must_emit = {s for s in all_sessions if s[2] < cutoff}
-
-    assert got <= all_sessions, f"phantom sessions: {sorted(got - all_sessions)[:3]}"
-    missing = must_emit - got
-    assert not missing, f"{len(missing)} closed sessions never emitted: {sorted(missing)[:3]}"
-
-
-def test_stateful_session_absorbs_earlier_late_event(
-    spark, events_schema, tmp_path
-):
-    """A late-but-within-watermark event that PREDATES the stored
-    session's start must lower session_start to it (session_window
-    semantics: the merged session starts at its earliest member).
-
-    Regression test: the merge branch used to extend only session_end.
-    """
-    import datetime
-    import os
-
-    import pandas as pd
-    from tweets_spark_top_10_spark.streaming import sessionize_with_state
-
-    def write_batch(name, rows, mtime):
-        p = str(tmp_path / name)
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": [pd.Timestamp(r[1]) for r in rows],
-                "user_id": [r[2] for r in rows],
-                "event_type": "x",
-                "value": 1.0,
-                "props": "{}",
-            }
-        ).to_parquet(p, coerce_timestamps="us", allow_truncated_timestamps=True)
-        os.utime(p, (mtime, mtime))
-
-    t = datetime.datetime(2024, 1, 1, 10, 0)
-    h = datetime.timedelta(minutes=30)
-    # Batch 1: the session as first seen (10:30). Batch 2: a late event
-    # at 10:00 — older than the stored start, newer than the 2h
-    # watermark. Batch 3: a far-future event closing the session.
-    write_batch("b1.parquet", [(1, t + h, 1)], 1_000)
-    write_batch("b2.parquet", [(2, t, 1)], 2_000)
-    write_batch("b3.parquet", [(3, t + datetime.timedelta(hours=10), 99)], 3_000)
-
-    stream = file_stream(spark, str(tmp_path), events_schema, max_files_per_trigger=1)
-    sessions = sessionize_with_state(
-        stream, "ts", "user_id", gap_seconds=3600, watermark="2 hours"
-    )
-    q = run_to_memory(sessions, "late_start_sessions")
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table("late_start_sessions").collect()
-        if r.user_id == 1
-    }
-    assert got == {(1, t, t + h, 2)}, got
-
-
 def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema, tmp_path):
     """The reference query, streaming: windowed counts -> per-window
     top-3 ranked in the foreachBatch sink -> partition-overwritten
@@ -349,48 +199,6 @@ def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema,
         assert got.get(key) == n, f"{key}: stream={got.get(key)} batch={n}"
 
 
-def test_session_window_matches_batch(spark, sf_dir, events_dir, events_schema):
-    """Built-in session_window streaming == the same session_window agg
-    run as a batch query, for sessions closed by the final watermark."""
-    import datetime
-
-    from tweets_spark_top_10_spark.streaming import session_agg
-
-    stream = file_stream(spark, events_dir, events_schema, max_files_per_trigger=1)
-    sessions = session_agg(stream, "ts", "user_id", gap="2 hours", watermark="10 minutes")
-    q = run_to_memory(sessions, "sw_sessions")
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start): (r.n_events, r.session_value)
-        for r in spark.table("sw_sessions").collect()
-    }
-    assert got, "session stream emitted nothing"
-
-    events = load_table(spark, sf_dir, "events")
-    batch = (
-        events.groupBy(F.session_window("ts", "2 hours"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
-    mx = events.agg(F.max("ts")).collect()[0][0]
-    cutoff = mx - datetime.timedelta(seconds=600)
-    for r in batch.collect():
-        if r.session_end <= cutoff:
-            assert got.get((r.user_id, r.session_start)) == (
-                r.n_events,
-                r.session_value,
-            ), f"user {r.user_id} @ {r.session_start}"
-
-
 def test_rate_source_windowed_count_runs(spark):
     """Rate source smoke: a windowed count over the built-in load
     generator produces rows within a bounded run."""
@@ -418,91 +226,6 @@ def test_rate_source_windowed_count_runs(spark):
         assert spark.table("rate_counts").count() > 0
     finally:
         q.stop()
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_dir, events_schema):
-    """Stream-static broadcast join: every streamed event enriched with
-    its user's segment; totals must equal the batch join."""
-    from tweets_spark_top_10_spark.streaming.joins import enrich_stream
-
-    dim = (
-        load_table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
-    )
-    stream = file_stream(spark, events_dir, events_schema)
-    enriched = enrich_stream(stream, dim, on="user_id")
-    q = run_to_memory(enriched.select("event_id", "c_mktsegment"), "enriched")
-    q.awaitTermination()
-    got = (
-        spark.table("enriched")
-        .groupBy("c_mktsegment")
-        .count()
-        .collect()
-    )
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .join(dim, "user_id")
-        .groupBy("c_mktsegment")
-        .count()
-        .collect()
-    )
-    assert {(r.c_mktsegment, r["count"]) for r in got} == {
-        (r.c_mktsegment, r["count"]) for r in batch
-    }
-
-
-def test_stream_stream_interval_join_matches_batch(
-    spark, sf_dir, events_dir, events_schema
-):
-    """Stream-stream interval join (purchases x views within 1h per
-    user) == the equivalent batch theta join, for pairs whose left
-    event closed under the final watermark."""
-    import datetime
-
-    from tweets_spark_top_10_spark.streaming.joins import interval_join
-
-    def split(df, et, suffix):
-        return df.filter(F.col("event_type") == et).select(
-            F.col("event_id").alias(f"eid_{suffix}"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias(f"ts_{suffix}"),
-        )
-
-    stream = file_stream(spark, events_dir, events_schema, max_files_per_trigger=1)
-    purchases = split(stream, "purchase", "p").withColumnRenamed("user_id", "user_id")
-    views = split(stream, "view", "v")
-    joined = interval_join(
-        purchases.withColumnRenamed("ts_p", "tsp"),
-        views.withColumnRenamed("ts_v", "tsv"),
-        key="user_id",
-        left_ts="tsp",
-        right_ts="tsv",
-        lookback="1 hour",
-        watermark="10 minutes",
-    ).select("eid_p", "eid_v")
-    q = run_to_memory(joined, "ssj_out")
-    q.awaitTermination()
-    got = {(r.eid_p, r.eid_v) for r in spark.table("ssj_out").collect()}
-    assert got, "stream-stream join emitted nothing"
-
-    ev = load_table(spark, sf_dir, "events")
-    p = split(ev, "purchase", "p")
-    v = split(ev, "view", "v")
-    batch = p.join(
-        v,
-        (p.user_id == v.user_id)
-        & (F.col("ts_v") >= F.col("ts_p") - F.expr("INTERVAL 1 hour"))
-        & (F.col("ts_v") <= F.col("ts_p")),
-    ).select("eid_p", "eid_v", "ts_p")
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    cutoff = mx - datetime.timedelta(seconds=600 + 3600)
-    expected_closed = {
-        (r.eid_p, r.eid_v) for r in batch.collect() if r.ts_p < cutoff
-    }
-    all_pairs = {(r.eid_p, r.eid_v) for r in batch.collect()}
-    assert got <= all_pairs, f"phantom pairs: {sorted(got - all_pairs)[:3]}"
-    missing = expected_closed - got
-    assert not missing, f"{len(missing)} closed pairs missing: {sorted(missing)[:3]}"
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -1100,317 +823,6 @@ def test_streaming_heavy_hitters_summary_certifies_exact_topk(spark, sf_dir, tmp
     assert got.collect() == want.collect()
 
 
-def test_streaming_bloom_bits_match_batch_build(spark, sf_dir, tmp_path):
-    """Incrementally OR-merged Bloom words == the single-pass batch
-    build over all streamed keys, bit for bit (bit_or is mergeable and
-    idempotent) — including after a re-sent (duplicated) batch."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.functions.bloom import (
-        bloom_build,
-        bloom_might_contain,
-    )
-    from tweets_spark_top_10_spark.streaming.bloom import (
-        maintain_bloom,
-        read_bloom_words,
-    )
-
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    pdf = cust.toPandas().sort_values("c_custkey").reset_index(drop=True)
-    half = len(pdf) // 2
-    src = tmp_path / "bloom_keys"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    # duplicate delivery of batch 1: idempotent by construction
-    pdf.iloc[:half].to_parquet(src / "b3.parquet", index=False)
-
-    stream = file_stream(spark, str(src), cust.schema, max_files_per_trigger=1)
-    table = str(tmp_path / "bloom_words")
-    q = maintain_bloom(
-        stream, table, checkpoint=str(tmp_path / "bloom_ckpt"), key_col="c_custkey"
-    )
-    q.awaitTermination()
-
-    got = read_bloom_words(spark, table)
-    want = bloom_build(cust, "c_custkey")
-    assert got == want
-    # and the maintained filter admits every member key
-    hits = cust.where(bloom_might_contain(F.col("c_custkey"), got)).count()
-    assert hits == cust.count()
-
-
-def test_streaming_cdc_snapshot_matches_batch_apply(spark, sf_dir, tmp_path):
-    """Stream-maintained CDC snapshot == batch apply_changes over the
-    full change log, value-exact — including a DUPLICATED batch file
-    (at-least-once replay) and seq-DESCENDING file names (delivery
-    order decoupled from seq order; the seq-beats-stored rule, not
-    arrival order, decides every merge). Tombstoned keys stay dead
-    even when a pre-delete upsert arrives after the delete."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.operators.merge import apply_changes
-    from tweets_spark_top_10_spark.streaming.cdc import (
-        init_cdc_table,
-        maintain_cdc_snapshot,
-        read_cdc_snapshot,
-    )
-
-    base = (
-        load_table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal")
-        .limit(50)
-    )
-    keys = [r["c_custkey"] for r in base.collect()]
-    log = []
-    for i, k in enumerate(keys[:20]):
-        log.append((k, f"upd_{k}", 1.0 * i, "U", i + 1))
-    for i, k in enumerate(keys[5:10]):
-        log.append((k, f"dead_{k}", 0.0, "D", 100 + i))
-    for i in range(3):  # brand-new keys
-        log.append((900000 + i, f"new_{i}", -1.0, "I", 200 + i))
-    # an upsert with seq OLDER than key 5..7's delete, delivered later
-    for i, k in enumerate(keys[5:8]):
-        log.append((k, f"zombie_{k}", 9.9, "U", 50 + i))
-    schema = "c_custkey long, c_name string, c_acctbal double, op string, seq long"
-    changes = spark.createDataFrame(log, schema)
-
-    src = tmp_path / "cdc_changes"
-    src.mkdir()
-    pdf = pd.DataFrame(log, columns=["c_custkey", "c_name", "c_acctbal", "op", "seq"])
-    # deliver high-seq changes FIRST (b1), low-seq later (b2), then a
-    # duplicate of b1 (replay)
-    hi, lo = pdf[pdf["seq"] >= 50], pdf[pdf["seq"] < 50]
-    hi.to_parquet(src / "b1.parquet", index=False)
-    lo.to_parquet(src / "b2.parquet", index=False)
-    hi.to_parquet(src / "b3.parquet", index=False)
-
-    table = str(tmp_path / "cdc_table")
-    init_cdc_table(base, table)
-    stream = file_stream(spark, str(src), changes.schema, max_files_per_trigger=1)
-    q = maintain_cdc_snapshot(
-        stream, table, checkpoint=str(tmp_path / "cdc_ckpt"), key="c_custkey"
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        map(tuple, read_cdc_snapshot(spark, table).collect())
-    )
-    want = sorted(map(tuple, apply_changes(base, changes, "c_custkey").collect()))
-    assert got == want
-    # the zombie upsert must NOT have resurrected deleted keys
-    got_keys = {t[0] for t in got}
-    assert not any(k in got_keys for k in keys[5:8])
-
-
-def test_streaming_ivm_view_tracks_snapshot(spark, sf_dir, tmp_path):
-    """Stream-maintained additive rollup: after every-batch maintenance
-    over a change stream with a DUPLICATED batch (replay) and
-    seq-out-of-order delivery, the view equals a direct aggregate of
-    the final maintained snapshot AND of the batch-merged log."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.operators.ivm import build_agg_view
-    from tweets_spark_top_10_spark.operators.merge import apply_changes
-    from tweets_spark_top_10_spark.streaming.cdc import read_cdc_snapshot
-    from tweets_spark_top_10_spark.streaming.ivm import maintain_agg_view
-
-    # change log over a tiny keyed table: inserts, group-moving
-    # updates, deletes — cents-style exact longs
-    log = []
-    for i in range(40):
-        log.append((i, f"g{i % 4}", 100 + i, "I", 1))
-    for i in range(0, 40, 2):
-        log.append((i, f"g{(i + 1) % 4}", 200 + i, "U", 2))  # move group
-    for i in range(0, 40, 5):
-        log.append((i, f"g{i % 4}", 0, "D", 3))
-    schema = "k long, g string, v long, op string, seq long"
-    changes = spark.createDataFrame(log, schema)
-
-    src = tmp_path / "ivm_changes"
-    src.mkdir()
-    pdf = pd.DataFrame(log, columns=["k", "g", "v", "op", "seq"])
-    hi, lo = pdf[pdf["seq"] >= 3], pdf[pdf["seq"] < 3]
-    hi.to_parquet(src / "b1.parquet", index=False)   # deletes arrive first
-    lo.to_parquet(src / "b2.parquet", index=False)
-    hi.to_parquet(src / "b3.parquet", index=False)   # replay
-
-    snap, view = str(tmp_path / "ivm_snap"), str(tmp_path / "ivm_view")
-    stream = file_stream(spark, str(src), changes.schema, max_files_per_trigger=1)
-    q = maintain_agg_view(
-        stream, snap, view, checkpoint=str(tmp_path / "ivm_ckpt"),
-        key="k", group_cols=["g"], sum_cols=["v"],
-    )
-    q.awaitTermination()
-
-    got = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in spark.read.parquet(view).collect()
-    }
-    from_snapshot = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in build_agg_view(
-            read_cdc_snapshot(spark, snap), ["g"], ["v"]
-        ).collect()
-    }
-    empty_base = spark.createDataFrame([], "k long, g string, v long")
-    from_log = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in build_agg_view(
-            apply_changes(empty_base, changes, "k"), ["g"], ["v"]
-        ).collect()
-    }
-    assert got == from_snapshot == from_log and got
-
-
-def test_ivm_replay_after_crash_between_swaps_converges(spark, tmp_path):
-    """The IVM two-swap crash window (view swapped, snapshot merge
-    crashed): replaying the SAME batch_id must converge both artifacts
-    instead of double-counting the view delta.  The view dir's
-    batch-id marker (round-8; same protocol as the MG summaries) skips
-    the replayed view update while the seq-idempotent snapshot merge
-    still runs."""
-    from tweets_spark_top_10_spark.operators.ivm import build_agg_view
-    from tweets_spark_top_10_spark.streaming.cdc import read_cdc_snapshot
-    from tweets_spark_top_10_spark.streaming import ivm as ivm_mod
-
-    schema = "k long, g string, v long, op string, seq long"
-    b1 = spark.createDataFrame(
-        [(i, f"g{i % 2}", 10 + i, "I", 1) for i in range(8)], schema
-    )
-    b2 = spark.createDataFrame(
-        [(i, f"g{(i + 1) % 2}", 100 + i, "U", 2) for i in range(0, 8, 2)],
-        schema,
-    )
-    snap, view = str(tmp_path / "snap"), str(tmp_path / "view")
-
-    ivm_mod.ivm_step(spark, b1, snap, view, "k", ["g"], ["v"], batch_id=0)
-
-    # crash: view swap commits, snapshot merge dies
-    real_merge = ivm_mod.merge_cdc_batch
-    ivm_mod.merge_cdc_batch = lambda *a, **kw: (_ for _ in ()).throw(
-        RuntimeError("crash before snapshot merge")
-    )
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError):
-            ivm_mod.ivm_step(spark, b2, snap, view, "k", ["g"], ["v"], batch_id=1)
-    finally:
-        ivm_mod.merge_cdc_batch = real_merge
-
-    # view is one batch ahead of the snapshot now; replay batch 1
-    ivm_mod.ivm_step(spark, b2, snap, view, "k", ["g"], ["v"], batch_id=1)
-
-    got = {
-        r["g"]: (r["n"], r["sum_v"]) for r in spark.read.parquet(view).collect()
-    }
-    want = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in build_agg_view(
-            read_cdc_snapshot(spark, snap), ["g"], ["v"]
-        ).collect()
-    }
-    assert got == want and got, (got, want)
-
-
-def test_cdc_tombstone_compaction_keeps_live_rows(spark, tmp_path):
-    """Compaction drops only tombstones below the replay horizon: live
-    rows of any seq and younger tombstones survive, and the visible
-    snapshot is unchanged."""
-    from tweets_spark_top_10_spark.streaming.cdc import (
-        compact_cdc_table,
-        init_cdc_table,
-        merge_cdc_batch,
-        read_cdc_snapshot,
-    )
-
-    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string")
-    table = str(tmp_path / "cdc_compact")
-    init_cdc_table(base, table)
-    changes = spark.createDataFrame(
-        [(1, "a_dead", "D", 5), (2, "b_dead", "D", 50), (3, "c2", "U", 60)],
-        "k int, v string, op string, seq long",
-    )
-    merge_cdc_batch(spark, changes, table, "k")
-
-    before = sorted(map(tuple, read_cdc_snapshot(spark, table).collect()))
-    assert compact_cdc_table(spark, table, replay_horizon_seq=10) == 1  # k=1 only
-    stored = spark.read.parquet(table)
-    assert stored.where("__deleted").count() == 1      # k=2 tombstone kept
-    assert stored.where("NOT __deleted").count() == 1     # live k=3 untouched
-    assert sorted(map(tuple, read_cdc_snapshot(spark, table).collect())) == before
-    assert compact_cdc_table(spark, table, replay_horizon_seq=10) == 0  # idempotent
-
-
-def test_streaming_resample_matches_batch_locf(spark, sf_dir, tmp_path):
-    """Bucket partials maintained over an out-of-order multi-batch
-    stream, then read_resampled == batch resample_locf over the union
-    of all observations — and a REPLAYED batch (same batch_id, rerun
-    of the merge step) changes nothing (batch-id-keyed overwrite)."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.operators.resample import resample_locf
-    from tweets_spark_top_10_spark.streaming.resample import (
-        maintain_bucket_partials,
-        read_resampled,
-    )
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "ts", "value")
-        .where(F.col("user_id") < 30)
-    )
-    pdf = events.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # micros, not nanos
-    src = tmp_path / "obs"
-    src.mkdir()
-    # deliver NEWEST observations first (out of order)
-    pdf_sorted = pdf.sort_values("ts", ascending=False).reset_index(drop=True)
-    third = len(pdf_sorted) // 3
-    pdf_sorted.iloc[:third].to_parquet(src / "b1.parquet", index=False)
-    pdf_sorted.iloc[third : 2 * third].to_parquet(src / "b2.parquet", index=False)
-    pdf_sorted.iloc[2 * third :].to_parquet(src / "b3.parquet", index=False)
-
-    partials = str(tmp_path / "partials")
-    stream = file_stream(spark, str(src), events.schema, max_files_per_trigger=1)
-    q = maintain_bucket_partials(
-        stream, partials, checkpoint=str(tmp_path / "rs_ckpt"),
-        key_col="user_id", ts_col="ts", value_col="value",
-    )
-    q.awaitTermination()
-
-    def snap():
-        return sorted(
-            (r["user_id"], r["bucket"], r["v"], r["is_gap"])
-            for r in read_resampled(spark, partials, "user_id").collect()
-        )
-
-    got = snap()
-    want = sorted(
-        (r["user_id"], r["bucket"], r["v"], r["is_gap"])
-        for r in resample_locf(events, "user_id", "ts", "value").collect()
-    )
-    assert got == want and got
-
-    # simulate an at-least-once replay: rerun batch 0's merge by hand
-    # with the same batch_id and data — the partition overwrites itself
-    b1 = spark.createDataFrame(pdf_sorted.iloc[:third], events.schema)
-    unit_partial = (
-        b1.groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket"))
-        .agg(F.sum("value").alias("v_sum"), F.count("value").alias("v_cnt"))
-        .withColumn("batch_id", F.lit(0))
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        unit_partial.write.mode("overwrite").partitionBy("batch_id").parquet(partials)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    assert snap() == want
-
-
 def test_stream_static_pit_enrichment_matches_batch(spark, sf_dir, tmp_path):
     """pit_join works unchanged as a stream-static join: a probe
     STREAM enriched against static SCD2 history equals the batch
@@ -1447,110 +859,6 @@ def test_stream_static_pit_enrichment_matches_batch(spark, sf_dir, tmp_path):
     got = sorted(map(tuple, spark.table("pit_mem").collect()))
     want = sorted(map(tuple, pit_join(probes, hist, "o_orderkey", "at").collect()))
     assert got == want and got
-
-
-def test_compact_bucket_partials_preserves_series(spark, sf_dir, tmp_path):
-    """Folding pre-horizon batch partitions into batch_id=-1 leaves the
-    resampled series bit-identical, shrinks the partition count, and a
-    replayed at-horizon batch still overwrites itself (idempotence
-    preserved above the horizon)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.streaming.resample import (
-        compact_bucket_partials,
-        maintain_bucket_partials,
-        read_resampled,
-    )
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "ts", "value")
-        .where(F.col("user_id") < 20)
-    )
-    pdf = events.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    src = tmp_path / "cp_obs"
-    src.mkdir()
-    third = len(pdf) // 3
-    for i in range(3):
-        pdf.iloc[i * third : (i + 1) * third if i < 2 else len(pdf)].to_parquet(
-            src / f"b{i}.parquet", index=False
-        )
-    partials = str(tmp_path / "cp_partials")
-    q = maintain_bucket_partials(
-        file_stream(spark, str(src), events.schema, max_files_per_trigger=1),
-        partials, checkpoint=str(tmp_path / "cp_ckpt"),
-        key_col="user_id", ts_col="ts", value_col="value",
-    )
-    q.awaitTermination()
-
-    def snap():
-        return sorted(
-            map(tuple, read_resampled(spark, partials, "user_id").collect())
-        )
-
-    before = snap()
-    n_parts_before = len(_glob.glob(f"{partials}/batch_id=*"))
-    assert n_parts_before == 3
-    assert compact_bucket_partials(spark, partials, batch_horizon=2) == 2
-    assert len(_glob.glob(f"{partials}/batch_id=*")) == 2  # {-1, 2}
-    assert snap() == before
-    # idempotent: nothing left to fold below the horizon but -1 itself
-    assert compact_bucket_partials(spark, partials, batch_horizon=2) == 0
-
-
-def test_streaming_scd2_history_matches_batch(spark, sf_dir, tmp_path):
-    """History maintained per micro-batch over an in-order multi-batch
-    change stream with a REPLAYED batch == batch scd2_history over the
-    full log: same versions, same intervals, same open rows. Deletes
-    arriving in a later batch close the stored open version without
-    emitting one."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.operators.merge import scd2_history
-    from tweets_spark_top_10_spark.streaming.scd2 import maintain_scd2_history
-
-    keys = list(range(1, 41))
-    log = []
-    for k in keys:
-        log.append((k, f"v0_{k}", "I", 1))          # batch 1: births
-    for k in keys[::2]:
-        log.append((k, f"v1_{k}", "U", 2))          # batch 2: updates
-    for k in keys[::4]:
-        log.append((k, f"dead_{k}", "D", 3))        # batch 3: deletes
-    for k in keys[1::4]:
-        log.append((k, f"v2_{k}", "U", 3))          # batch 3: more updates
-    schema = "k long, v string, op string, seq long"
-    changes = spark.createDataFrame(log, schema)
-
-    src = tmp_path / "scd2_changes"
-    src.mkdir()
-    pdf = pd.DataFrame(log, columns=["k", "v", "op", "seq"])
-    for i, s in enumerate([1, 2, 3]):
-        pdf[pdf["seq"] == s].to_parquet(src / f"b{i}.parquet", index=False)
-    pdf[pdf["seq"] == 2].to_parquet(src / "b3.parquet", index=False)  # replay
-
-    hist_path = str(tmp_path / "scd2_hist")
-    q = maintain_scd2_history(
-        file_stream(spark, str(src), changes.schema, max_files_per_trigger=1),
-        hist_path, checkpoint=str(tmp_path / "scd2_ckpt"), key="k",
-    )
-    q.awaitTermination()
-
-    got = sorted(map(tuple, spark.read.parquet(hist_path).select(
-        "k", "v", "valid_from", "valid_to", "is_current").collect()))
-    want = sorted(map(tuple, scd2_history(changes, "k").select(
-        "k", "v", "valid_from", "valid_to", "is_current").collect()))
-    assert got == want and got
-    # spot-check semantics: k=1 (born, updated, deleted) has two closed
-    # versions and no open one; k=2 (born, updated seq3) has an open v2
-    by_k = {}
-    for k, v, vf, vt, cur in got:
-        by_k.setdefault(k, []).append((v, vf, vt, cur))
-    assert by_k[1] == [("v0_1", 1, 2, False), ("v1_1", 2, 3, False)]
-    assert ("v2_2", 3, None, True) in by_k[2]
 
 
 def test_synthetic_stream_source_exactly_once_vs_batch(spark, tmp_path):

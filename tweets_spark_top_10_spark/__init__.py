@@ -8,8 +8,8 @@ group-count -> top-10 -> CSV; see SURVEY.md §2.1, reference
 
 - the full batch relational operator surface (filters, joins, windows,
   rollup/cube, set ops, scalar functions),
-- Structured Streaming twins of the batch queries (tumbling/sliding/
-  session windows, watermarks, streaming dedup, idempotent foreachBatch
+- Structured Streaming twins of the batch queries (tumbling/sliding
+  windows, watermarks, streaming dedup, idempotent foreachBatch
   sinks — replacing the reference's delete-then-write ES dance,
   ``App.java:115-157``),
 - LLM-data-pipeline operators: exact/near dedup (MinHash-LSH, SimHash,

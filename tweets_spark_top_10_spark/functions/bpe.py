@@ -368,13 +368,17 @@ def segment_words_arrow(
     return words.mapInPandas(_encode, schema=words.schema)
 
 
+# Rule count above which bpe_encode_docs segments with the Arrow kernel
+# instead of one chained-replace projection.
+_ARROW_THRESHOLD = 256
+
+
 def bpe_encode_docs(
     docs: DataFrame,
     text_col: str = "text",
     doc_id_col: str = "doc_id",
     merges: int = 8,
     merge_rules: list[tuple[int, str, str, int]] | None = None,
-    arrow_threshold: int = 256,
 ) -> DataFrame:
     """Tokenizer SERVING: per-document subword token sequences — the
     output a training-data pipeline actually emits, and the half of
@@ -397,9 +401,9 @@ def bpe_encode_docs(
     Returns (doc_id, n_tokens, tokens) with ``tokens`` the
     space-joined subword sequence.  Documents with no tokens drop out
     (nothing to encode), matching the SQL oracle's join semantics.
-    ``arrow_threshold``: rule count above which the chained replace
-    gives way to :func:`segment_words_arrow` (same fixpoint, pinned
-    exact-equal) — a 32k-deep replace chain would break Catalyst."""
+    Above ``_ARROW_THRESHOLD`` rules the chained replace gives way to
+    :func:`segment_words_arrow` (same fixpoint, pinned exact-equal) — a
+    32k-deep replace chain would break Catalyst."""
     from tweets_spark_top_10_spark.functions.text import tokenize
 
     words = word_frequency_table(docs, text_col)
@@ -407,7 +411,7 @@ def bpe_encode_docs(
         merge_rules, _ = learn_from_words(words, merges)
     segment = (
         segment_words_arrow
-        if len(merge_rules) > arrow_threshold
+        if len(merge_rules) > _ARROW_THRESHOLD
         else segment_words
     )
     seg = segment(words, merge_rules).select(

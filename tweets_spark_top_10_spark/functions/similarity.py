@@ -292,18 +292,6 @@ def subcell_rep_pairs(
     )
 
 
-def semdedup_centroids(
-    vectors: DataFrame, cand_id: str = "vec_id", vec_col: str = "vec"
-) -> DataFrame:
-    """Corpus-scaled coarse quantizer for semantic dedup: one COUNT
-    action (a scalar — quantizer sizing metadata, not data movement),
-    then the deterministic strided centroid sample at √n cells.  Shared
-    by the batch ``semantic_dedup_keep`` query and the streaming twin's
-    fixed quantizer so their differentials stay byte-identical."""
-    n_cells, stride = scaled_cell_params(vectors.count())
-    return ivf_centroids(vectors, cand_id, vec_col, n_cells, stride)
-
-
 def ivf_knn(
     queries: DataFrame,
     candidates: DataFrame,

@@ -1,8 +1,7 @@
 """Whole-directory publish for maintained tables: stage → aside → live.
 
-Every maintained table (MG summaries, Bloom words, CDC snapshots, SCD2
-history, IVM views, resample partials, compacted parquet) is replaced
-as a whole directory:
+Every maintained table (MG summaries, compacted parquet) is replaced as
+a whole directory:
 
 1. ``write(<path>__stage)`` produces the new content;
 2. the live dir is renamed to ``<path>__old``;

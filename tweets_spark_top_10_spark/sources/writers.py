@@ -126,97 +126,6 @@ def write_clustered(
     )
 
 
-def zorder_key(
-    cols: list[str],
-    mins: list[float],
-    maxs: list[float],
-    bits: int = 8,
-):
-    """Morton (Z-order) key column: interleave the ``bits`` most
-    significant bits of each column after min-max scaling to
-    ``[0, 2^bits)``.
-
-    Pure Catalyst bit arithmetic (shift/and/or loop unrolled at plan
-    build — ``bits * len(cols)`` leaf expressions, all whole-stage
-    codegen'd); no UDF.  ``bits=8`` resolves 256 cells per dimension —
-    enough to steer file-level clustering up to ~2^(8*dims) files.
-    """
-    from pyspark.sql import functions as F
-
-    if not cols or len(mins) != len(cols) or len(maxs) != len(cols):
-        raise ValueError("cols/mins/maxs must be equal-length and non-empty")
-    scaled = []
-    top = (1 << bits) - 1
-    for c, mn, mx in zip(cols, mins, maxs):
-        span = (mx - mn) or 1.0
-        s = F.least(
-            F.lit(top),
-            F.greatest(
-                F.lit(0),
-                ((F.col(c).cast("double") - F.lit(float(mn))) * top / span).cast(
-                    "long"
-                ),
-            ),
-        )
-        scaled.append(s)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            bit = F.shiftright(s, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * len(scaled) + j))
-    return z
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int = 16,
-    bits: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """Write with multi-dimensional Z-order clustering.
-
-    ``write_clustered`` is exact for its FIRST column only — a filter
-    on any later column still reads every file.  Interleaving the bits
-    of all cluster columns into one Morton key and range-partitioning
-    on it gives every file a bounded min/max box in EVERY dimension
-    (~N^(1/dims) of the domain per side for N files), so footer-stat
-    pruning works for predicates on any clustered column, not just the
-    sort prefix — the access-path Delta/Iceberg `OPTIMIZE ZORDER BY`
-    provides, on plain parquet dirs.
-
-    One tiny driver-side aggregate fetches per-column min/max for the
-    scaling (2 scalars per column, computed once per write job); the
-    key itself is pure JVM bit arithmetic.  Numeric/date/timestamp
-    columns only (strings would need a collation-aware fixed-width
-    prefix; fail loud via the cast instead of silently misordering).
-    """
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(cluster_cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(cluster_cols)],
-    ).collect()[0]
-    mins = [stats[f"mn_{i}"] for i in range(len(cluster_cols))]
-    maxs = [stats[f"mx_{i}"] for i in range(len(cluster_cols))]
-    if any(v is None for v in mins + maxs):
-        raise ValueError(
-            f"zorder columns {cluster_cols} must be castable to double "
-            "and have at least one non-null value"
-        )
-    z = zorder_key(cluster_cols, mins, maxs, bits=bits)
-    (
-        df.withColumn("__zorder", z)
-        .repartitionByRange(num_files, "__zorder")
-        .sortWithinPartitions("__zorder")
-        .drop("__zorder")
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -7,6 +7,11 @@ semantics are one Structured Streaming query: event-time tumbling
 windows + watermark replace the dir-per-hour convention, and an
 idempotent ``foreachBatch`` overwrite-by-window replaces the
 delete-then-insert dance.
+
+Beside that top-10 path (``sources`` → ``windows`` → ``sinks``) the
+package keeps three maintained forms of near-dedup and trending state:
+Misra-Gries heavy-hitter summaries, a MinHash signature index and
+watermarked duplicate dropping.
 """
 
 from tweets_spark_top_10_spark.streaming.sources import (
@@ -16,7 +21,6 @@ from tweets_spark_top_10_spark.streaming.sources import (
     kafka_stream,
 )
 from tweets_spark_top_10_spark.streaming.windows import (
-    session_agg,
     windowed_count,
     windowed_top_k,
 )
@@ -26,35 +30,10 @@ from tweets_spark_top_10_spark.streaming.heavy_hitters import (
     maintain_heavy_hitters,
     top_k_from_summary,
 )
-from tweets_spark_top_10_spark.streaming.bloom import (
-    maintain_bloom,
-    read_bloom_words,
-)
-from tweets_spark_top_10_spark.streaming.cdc import (
-    init_cdc_table,
-    maintain_cdc_snapshot,
-    read_cdc_snapshot,
-)
-from tweets_spark_top_10_spark.streaming.ivm import (
-    maintain_agg_view,
-    rebuild_view,
-)
-from tweets_spark_top_10_spark.streaming.resample import (
-    maintain_bucket_partials,
-    read_resampled,
-)
-from tweets_spark_top_10_spark.streaming.scd2 import (
-    maintain_scd2_history,
-    merge_scd2_batch,
-)
 from tweets_spark_top_10_spark.streaming.sinks import (
     foreach_batch_overwrite,
     foreach_batch_top_k,
     run_to_memory,
-)
-from tweets_spark_top_10_spark.streaming.stateful import (
-    sessionize_transform_with_state,
-    sessionize_with_state,
 )
 
 __all__ = [
@@ -64,24 +43,10 @@ __all__ = [
     "kafka_stream",
     "windowed_count",
     "windowed_top_k",
-    "session_agg",
-    "sessionize_transform_with_state",
-    "sessionize_with_state",
     "dedup_stream",
     "maintain_minhash_index",
     "maintain_heavy_hitters",
     "top_k_from_summary",
-    "maintain_bloom",
-    "read_bloom_words",
-    "init_cdc_table",
-    "maintain_cdc_snapshot",
-    "read_cdc_snapshot",
-    "maintain_agg_view",
-    "rebuild_view",
-    "maintain_bucket_partials",
-    "read_resampled",
-    "maintain_scd2_history",
-    "merge_scd2_batch",
     "foreach_batch_overwrite",
     "foreach_batch_top_k",
     "run_to_memory",

@@ -1,4 +1,4 @@
-"""Streaming window aggregations: tumbling / sliding / session + top-K.
+"""Streaming window aggregations: tumbling / sliding counts + top-K.
 
 The streaming twin of the reference query (``App.java:92-99``) is
 ``windowed_top_k``: per event-time window, count per key, keep the top
@@ -16,7 +16,7 @@ per core, by ``sinks.start_query``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -66,27 +66,3 @@ def windowed_top_k(
     """
     return windowed_count(stream, ts_col, [key], window=window, watermark=watermark)
 
-
-def session_agg(
-    stream: DataFrame,
-    ts_col: str,
-    key: str,
-    gap: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session windows per key (inactivity gap) — streaming twin of the
-    batch ``user_sessions`` query."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), key)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("session_value"),
-        )
-        .select(
-            key,
-            F.col("session_window.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
