@@ -63,7 +63,7 @@ def test_meta_filter_prunes_before_decode(spark):
     df = attach_meta(_media(spark), mime="image/png")
     small = df.filter(F.length("payload") <= 16)
     out = extract_image_features(small).collect()
-    assert sorted(r.id for r in out) == [2, 4]
+    assert sorted((r.id, r.n_bytes) for r in out) == [(2, 10), (4, 0)]
 
 
 def test_attach_meta_byte_size_prunes_before_decode(spark):

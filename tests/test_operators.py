@@ -211,30 +211,6 @@ def test_simhash_near_duplicates(spark):
     assert (1, 3) not in pairset
 
 
-def test_minhash_lsh_recall_of_high_sim_pairs(spark, sf_dir):
-    """LSH candidate generation must retain (essentially) every pair the
-    exact Jaccard join scores >= 0.5 — the property that makes banding a
-    safe pre-filter for dedup. Seeded, so deterministic per fixture."""
-    from tweets_spark_top_10_spark.functions.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-    from tweets_spark_top_10_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    assert exact, "fixture has no high-similarity pairs"
-    cand = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.3).collect()
-    }
-    recall = len(exact & cand) / len(exact)
-    assert recall >= 0.9, f"LSH lost high-sim pairs: recall={recall:.2f}"
-
-
 def test_minhash_band_recall_is_full(spark, sf_dir):
     """The hand-rolled banding (the registered catalog path) must retain
     EVERY exact-Jaccard>=0.5 pair — it backs a full value oracle, so a

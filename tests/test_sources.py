@@ -196,22 +196,6 @@ def test_schema_drift_fails_loudly(spark, sf_dir, tmp_path, monkeypatch):
         registry.load_table(spark, bad_dir, "nation")
 
 
-def test_compact_parquet_preserves_content(spark, sf_dir, tmp_path):
-    from tweets_spark_top_10_spark.sources.writers import compact_parquet
-
-    src = load_table(spark, sf_dir, "orders")
-    d = str(tmp_path / "many_files")
-    src.repartition(20).write.mode("overwrite").parquet(d)
-    import glob
-
-    assert len(glob.glob(f"{d}/part-*.parquet")) == 20
-    before = sorted(map(tuple, spark.read.parquet(d).collect()))
-    n_files = compact_parquet(spark, d, target_files=4)
-    assert n_files <= 4
-    after = sorted(map(tuple, spark.read.parquet(d).collect()))
-    assert before == after
-
-
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     """ORC is the other columnar lake format Spark ships natively —
     same scan surface (pushdown, pruning) as parquet."""
@@ -231,37 +215,6 @@ def test_orc_predicate_pushdown(spark, sf_dir, tmp_path):
     df = read_batch(spark, out, fmt="orc").filter(F.col("o_orderkey") == 42)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "o_orderkey" in plan, plan
-
-
-def test_binary_dir_ingest_feeds_multimodal(spark, tmp_path):
-    """binaryFile dir ingest -> payload column -> multimodal kernels:
-    the end-to-end media on-ramp.  Glob pruning happens at listing time
-    (non-matching files never become rows)."""
-    from tweets_spark_top_10_spark.functions.multimodal import (
-        attach_meta,
-        extract_image_features,
-    )
-    from tweets_spark_top_10_spark.sources.readers import read_binary_dir
-
-    media = tmp_path / "media" / "nested"
-    media.mkdir(parents=True)
-    blobs = {b"abcabcxyz": "a.img", b"\x00\x01\x02\x03" * 4: "b.img"}
-    for payload, name in blobs.items():
-        (media / name).write_bytes(payload)
-    (media / "ignore.txt").write_text("not media")
-
-    df = read_binary_dir(spark, str(tmp_path / "media"), glob="*.img")
-    rows = {r.path.rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.img", "b.img"}
-    assert rows["a.img"].payload == b"abcabcxyz"
-    assert rows["a.img"].n_bytes == 9
-
-    with_ids = df.select(
-        F.abs(F.xxhash64("path")).alias("id"), "payload"
-    )
-    feats = extract_image_features(attach_meta(with_ids, mime="image/raw"))
-    got = feats.select("n_bytes").collect()
-    assert sorted(r.n_bytes for r in got) == [9, 16]
 
 
 def test_ntz_timestamp_coerced_at_load_boundary(spark, sf_dir, tmp_path):
@@ -303,34 +256,6 @@ def test_ntz_timestamp_coerced_at_load_boundary(spark, sf_dir, tmp_path):
     assert got[0]["ts"] == t0
 
 
-def test_snapshot_write_read_time_travel(spark, sf_dir, tmp_path):
-    """Snapshot-versioned table: latest read tracks the newest publish,
-    pinned reads stay immutable, unknown versions fail loudly."""
-    from tweets_spark_top_10_spark.sources.readers import (
-        read_snapshot,
-        snapshot_versions,
-    )
-    from tweets_spark_top_10_spark.sources.writers import write_snapshot
-
-    base = str(tmp_path / "versioned_nation")
-    nation = load_table(spark, sf_dir, "nation")
-    write_snapshot(nation, base, 1)
-    write_snapshot(nation.filter(F.col("n_regionkey") == 0), base, 2)
-
-    assert snapshot_versions(base) == [1, 2]
-    assert read_snapshot(spark, base).count() == nation.filter(
-        F.col("n_regionkey") == 0
-    ).count()  # latest == v2
-    assert read_snapshot(spark, base, version=1).count() == nation.count()
-    with pytest.raises(FileNotFoundError, match="snapshot 9 not published"):
-        read_snapshot(spark, base, version=9)
-    with pytest.raises(FileNotFoundError, match="no snapshot"):
-        read_snapshot(spark, str(tmp_path / "missing"))
-    # published versions are immutable: re-publishing v1 must refuse
-    with pytest.raises(Exception, match="already exists"):
-        write_snapshot(nation, base, 1)
-
-
 def test_hour_partition_schema_evolution(spark, tmp_path):
     """A producer adding a column mid-day: mergeSchema surfaces it as
     NULL for old hours, and partition pruning still reaches the scan."""
@@ -362,85 +287,56 @@ def test_hour_partition_schema_evolution(spark, tmp_path):
     assert "PartitionFilters" in plan and "hour" in plan
 
 
-def test_avro_python_write_roundtrip(spark, sf_dir, tmp_path):
-    """Distributed fallback Avro WRITE (one container file per
-    partition, executor-side) → fallback read: values, nulls, arrays
-    and timestamps all survive the roundtrip."""
-    from tweets_spark_top_10_spark.sources.avro_py import write_avro_python
-
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority")
-        .limit(200)
-        .repartition(4)
-    )
-    out = str(tmp_path / "orders_avro")
-    n_files = write_avro_python(orders, out)
-    assert 1 <= n_files <= 4
-    assert len(glob.glob(f"{out}/part-*.avro")) == n_files
-    back = read_batch(spark, out, fmt="avro")
-    assert dict(back.dtypes) == dict(orders.dtypes)
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, orders.collect())
-    )
-
-
 def test_avro_python_write_nulls_and_arrays(spark, tmp_path):
-    """Null scalars and array columns through the distributed writer."""
-    from pyspark.sql import types as T
+    """Null scalars and empty or null arrays, written as ``[null, X]``
+    unions, read back through the fallback decoder."""
+    from tweets_spark_top_10_spark.sources.avro_py import write_avro_file
 
-    from tweets_spark_top_10_spark.sources.avro_py import write_avro_python
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("tags", T.ArrayType(T.StringType())),
-            T.StructField("note", T.StringType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(1, ["a", "b"], None), (2, [], "x"), (3, None, "y")], schema=schema
-    )
-    out = str(tmp_path / "nullable_avro")
-    write_avro_python(df, out)
-    back = sorted(map(tuple, read_batch(spark, out, fmt="avro").collect()))
+    schema = {
+        "type": "record",
+        "name": "Row",
+        "fields": [
+            {"name": "id", "type": ["null", "long"]},
+            {"name": "tags", "type": ["null", {"type": "array", "items": "string"}]},
+            {"name": "note", "type": ["null", "string"]},
+        ],
+    }
+    records = [
+        {"id": 1, "tags": ["a", "b"], "note": None},
+        {"id": 2, "tags": [], "note": "x"},
+        {"id": 3, "tags": None, "note": "y"},
+    ]
+    out = tmp_path / "nullable_avro"
+    out.mkdir()
+    write_avro_file(str(out / "part-0.avro"), schema, records)
+    back = sorted(map(tuple, read_batch(spark, str(out), fmt="avro").collect()))
     assert back == [(1, ["a", "b"], None), (2, [], "x"), (3, None, "y")]
 
 
-def test_write_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
-    """Range-clustered write: per-file min/max of the cluster key are
-    pairwise disjoint (so footer stats prune), content is preserved,
-    and the cluster-key filter is pushed to the scan."""
-    import pyarrow.parquet as pq
+def test_avro_fallback_rejects_options_it_cannot_honour(spark, tmp_path):
+    """Without the connector, reader options must fail loudly rather than
+    be dropped: a ``mergeSchema`` hour read would otherwise silently read
+    without it."""
+    from pyspark.errors import AnalysisException
 
-    from tweets_spark_top_10_spark.sources.writers import write_clustered
+    from tweets_spark_top_10_spark.sources.avro_py import write_avro_file
+    from tweets_spark_top_10_spark.sources.readers import read_hour_partition
 
-    events = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "clustered")
-    write_clustered(events, out, ["ts"], num_files=6)
+    base = tmp_path / "hours"
+    hour = base / "year=2024" / "month=03" / "day=01" / "hour=07"
+    hour.mkdir(parents=True)
+    recs = [{"timestamp": 1, "hashtags": ["spark"], "user": "a"}]
+    write_avro_file(str(hour / "part-0.avro"), TWEET_AVRO_SCHEMA, recs)
+    try:
+        spark.read.format("avro").load(str(hour)).schema
+    except AnalysisException:
+        pass
+    else:
+        pytest.skip("spark-avro on the classpath honours reader options")
 
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert 2 <= len(files) <= 6
-    import pyarrow.compute as pc
-
-    ranges = []
-    for f in files:
-        ts = pq.read_table(f, columns=["ts"])["ts"]
-        ranges.append((pc.min(ts).as_py(), pc.max(ts).as_py()))
-    ranges.sort()
-    for (_lo, prev_hi), (next_lo, _hi) in zip(ranges, ranges[1:]):
-        assert prev_hi <= next_lo, f"overlapping file ranges: {ranges}"
-
-    back = spark.read.parquet(out)
-    assert back.count() == events.count()
-    mid = events.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).collect()[0][0]
-    import datetime
-    cutoff = datetime.datetime.utcfromtimestamp(mid)
-    plan = (
-        back.filter(F.col("ts") > F.lit(cutoff))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PushedFilters: [IsNotNull(ts), GreaterThan(ts" in plan
+    with pytest.raises(ValueError, match="mergeSchema"):
+        read_hour_partition(spark, str(base), 2024, 3, 1, 7, fmt="avro", mergeSchema="true")
+    assert read_hour_partition(spark, str(base), 2024, 3, 1, 7, fmt="avro").count() == 1
 
 
 def test_avro_fallback_mixed_schemas_fail_loud(spark, tmp_path):
@@ -546,62 +442,6 @@ def test_load_table_rejects_non_utc_session_zone(spark, sf_dir):
     assert load_table(spark, sf_dir, "nation").count() == 25
 
 
-def test_write_with_audit_single_pass_metrics(spark, sf_dir, tmp_path):
-    """Audit metrics ride the write job itself (df.observe): the
-    returned dict matches a direct recomputation, and the written data
-    round-trips."""
-    from tweets_spark_top_10_spark.sources.writers import write_with_audit
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    out = str(tmp_path / "audited")
-    got = write_with_audit(
-        orders,
-        out,
-        metrics={
-            "revenue": F.round(F.sum("o_totalprice"), 4),
-            "null_priority": F.count_if(F.col("o_orderpriority").isNull()),
-            "max_key": F.max("o_orderkey"),
-        },
-    )
-    direct = orders.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.round(F.sum("o_totalprice"), 4).alias("revenue"),
-        F.count_if(F.col("o_orderpriority").isNull()).alias("null_priority"),
-        F.max("o_orderkey").alias("max_key"),
-    ).collect()[0].asDict()
-    assert got == direct
-    assert spark.read.parquet(out).count() == got["n_rows"] > 0
-
-
-def test_read_json_quarantine_splits_good_and_bad(spark, tmp_path):
-    """Malformed JSON rows land in quarantine with their raw text;
-    good rows parse; nothing is dropped."""
-    import pyspark.sql.types as T
-
-    from tweets_spark_top_10_spark.sources.readers import read_json_quarantine
-
-    p = tmp_path / "feed.json"
-    p.write_text(
-        '{"id": 1, "txt": "ok"}\n'
-        "THIS IS NOT JSON\n"
-        '{"id": 2, "txt": "fine"}\n'
-        '{"id": "not_an_int", "txt": 3}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("txt", T.StringType())]
-    )
-    good, bad = read_json_quarantine(spark, str(p), schema)
-    assert sorted((r["id"], r["txt"]) for r in good.collect()) == [
-        (1, "ok"),
-        (2, "fine"),
-    ]
-    raws = [r["raw_record"] for r in bad.collect()]
-    assert len(raws) == 2 and "THIS IS NOT JSON" in raws[0] + raws[1]
-    assert good.count() + bad.count() == 4
-
-
 def test_synthetic_events_datasource(spark):
     """Custom Python DataSource: rows are a pure function of
     (partition, index) — two reads identical, partition count drives
@@ -642,42 +482,3 @@ def test_synthetic_events_datasource(spark):
     )
     with pytest.raises(Exception, match="must be >= 1"):
         load(0, 10).collect()
-
-
-def test_jsonl_sink_commit_protocol(spark, tmp_path):
-    """Custom Python sink: committed files only (staged temps renamed
-    at driver commit, none left behind), overwrite replaces prior
-    parts, content round-trips through spark.read.json, and abort
-    sweeps staged files."""
-    import glob as _glob
-
-    from tweets_spark_top_10_spark.sources.pyds import (
-        _JsonlCommit,
-        _JsonlWriter,
-        register_jsonl_sink,
-    )
-
-    register_jsonl_sink(spark)
-    d = str(tmp_path / "jsonl_out")
-    df = spark.range(100).selectExpr("id", "id * 2 AS dbl")
-    df.repartition(4).write.format("jsonl_dir").option("path", d).mode(
-        "append"
-    ).save()
-    assert len(_glob.glob(f"{d}/part-*.jsonl")) == 4
-    assert not _glob.glob(f"{d}/.staged-*")
-    back = spark.read.json(f"{d}/part-*.jsonl")
-    assert sorted((r["id"], r["dbl"]) for r in back.collect()) == [
-        (i, 2 * i) for i in range(100)
-    ]
-    # overwrite replaces the old parts
-    df.limit(10).repartition(1).write.format("jsonl_dir").option(
-        "path", d
-    ).mode("overwrite").save()
-    assert len(_glob.glob(f"{d}/part-*.jsonl")) == 1
-    assert spark.read.json(f"{d}/part-*.jsonl").count() == 10
-    # abort sweeps staged files
-    w = _JsonlWriter({"path": d}, overwrite=False)
-    staged = tmp_path / "jsonl_out" / ".staged-manual.jsonl"
-    staged.write_text("{}\n")
-    w.abort([_JsonlCommit(str(staged)), None])
-    assert not staged.exists()

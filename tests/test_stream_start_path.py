@@ -5,8 +5,7 @@ and every whole-directory swap goes through ``sources/swap.py``.
 starts; a ``writeStream`` anywhere else in the package would start a query
 at the session's batch default instead.  ``swap.recover`` is the one crash
 recovery for the ``__stage``/``__old`` directories; a second copy of the
-suffixes is a second protocol that can drift from it.  The per-bucket swap
-in ``streaming/sketch.py`` is a separate protocol that shares the names.
+suffixes is a second protocol that can drift from it.
 """
 
 from __future__ import annotations
@@ -16,10 +15,7 @@ import re
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "tweets_spark_top_10_spark"
 START_PATH = PACKAGE / "streaming" / "sinks.py"
-SWAP_OWNERS = {
-    PACKAGE / "sources" / "swap.py",
-    PACKAGE / "streaming" / "sketch.py",
-}
+SWAP_OWNERS = {PACKAGE / "sources" / "swap.py"}
 
 
 def test_write_stream_only_in_sinks():

@@ -15,12 +15,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.conftest import run_to_memory
 from tweets_spark_top_10_spark.sources.registry import SCHEMAS, load_table
 from tweets_spark_top_10_spark.streaming import (
-    dedup_stream,
     file_stream,
     foreach_batch_overwrite,
-    run_to_memory,
     windowed_count,
 )
 
@@ -97,22 +96,6 @@ def test_windowed_count_matches_batch(spark, sf_dir, events_dir, events_schema):
     # Every batch-finalized window must match the streamed result exactly.
     for key, n in expected.items():
         assert got.get(key) == n, f"window {key}: stream={got.get(key)} batch={n}"
-
-
-def test_streaming_dedup_drops_duplicates(spark, events_dir, events_schema, tmp_path):
-    # Duplicate every row: same file replayed means duplicates arrive
-    # within the watermark horizon and must be dropped.
-    dup_dir = str(tmp_path / "dup")
-    base = spark.read.schema(events_schema).parquet(events_dir)
-    base.union(base).repartition(2).write.mode("overwrite").parquet(dup_dir)
-
-    stream = file_stream(spark, dup_dir, events_schema)
-    deduped = dedup_stream(stream, ["event_id"], "ts", watermark="1 hour")
-    q = run_to_memory(deduped, "dedup_out")
-    q.awaitTermination()
-    n_out = spark.table("dedup_out").count()
-    n_unique = base.select("event_id").distinct().count()
-    assert n_out == n_unique, f"dedup kept {n_out}, expected {n_unique}"
 
 
 def test_foreach_batch_overwrite_idempotent(
@@ -197,35 +180,6 @@ def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema,
     expected = {(r.ws, r.event_type): r.n for r in batch.collect()}
     for key, n in expected.items():
         assert got.get(key) == n, f"{key}: stream={got.get(key)} batch={n}"
-
-
-def test_rate_source_windowed_count_runs(spark):
-    """Rate source smoke: a windowed count over the built-in load
-    generator produces rows within a bounded run."""
-    import time
-
-    from tweets_spark_top_10_spark.streaming.sources import rate_stream
-
-    counts = windowed_count(
-        rate_stream(spark, rows_per_second=200),
-        "timestamp",
-        [],
-        window="1 second",
-        watermark="0 seconds",
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("rate_counts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        deadline = time.time() + 25
-        while time.time() < deadline and not spark.table("rate_counts").count():
-            time.sleep(1)
-        assert spark.table("rate_counts").count() > 0
-    finally:
-        q.stop()
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -556,218 +510,6 @@ def test_stream_over_hour_partitioned_dirs(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_streaming_minhash_index_matches_batch(spark, sf_dir, tmp_path):
-    """Incremental signature upsert == batch signatures of the final
-    corpus state.
-
-    Three micro-batches: first half of the docs, second half, then one
-    doc RE-SENT with mutated text.  The maintained table must equal
-    minhash_signatures() computed directly on the final corpus (mutated
-    doc included), bucket column and all — exact, because the whole
-    path is deterministic."""
-    import pandas as pd
-
-    from tweets_spark_top_10_spark.functions.dedup import minhash_signatures
-    from tweets_spark_top_10_spark.functions.sampling import hash_bucket
-    from tweets_spark_top_10_spark.streaming.sketch import maintain_minhash_index
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    half = len(pdf) // 2
-    mutated_id = int(pdf.doc_id.iloc[0])
-    mutated_text = "entirely new text for the resent document"
-
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    pdf.iloc[:half].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b2.parquet", index=False)
-    pd.DataFrame({"doc_id": [mutated_id], "text": [mutated_text]}).to_parquet(
-        src / "b3.parquet", index=False
-    )
-
-    stream = file_stream(
-        spark,
-        str(src),
-        docs.schema,
-        max_files_per_trigger=1,
-    )
-    table = str(tmp_path / "sig_table")
-    q = maintain_minhash_index(
-        stream, table, checkpoint=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-
-    got = sorted(map(tuple, spark.read.parquet(table).collect()))
-    final_corpus = spark.createDataFrame(
-        pd.concat(
-            [
-                pdf[pdf.doc_id != mutated_id],
-                pd.DataFrame(
-                    {"doc_id": [mutated_id], "text": [mutated_text]}
-                ),
-            ]
-        )
-    )
-    want_df = minhash_signatures(final_corpus).withColumn(
-        "bucket", hash_bucket("doc_id", 16)
-    )
-    # align column order with the parquet table (partition col lands last)
-    want = sorted(
-        map(tuple, want_df.select(*spark.read.parquet(table).columns).collect())
-    )
-    assert len(got) == len(pdf)
-    assert got == want
-
-
-def test_signature_upsert_recovers_from_stale_swap_dirs(spark, sf_dir, tmp_path):
-    """Crash re-entrancy: leftover staging/aside dirs from an
-    interrupted swap must not break (or contaminate) the next upsert."""
-    from tweets_spark_top_10_spark.functions.dedup import minhash_signatures
-    from tweets_spark_top_10_spark.functions.sampling import hash_bucket
-    from tweets_spark_top_10_spark.streaming.sketch import upsert_signature_batch
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    table = str(tmp_path / "sigs")
-
-    # Simulate a prior crash: stale staging dir with garbage content.
-    stale = tmp_path / "sigs__stage" / "bucket=3"
-    stale.mkdir(parents=True)
-    (stale / "junk.parquet").write_bytes(b"not parquet")
-    (tmp_path / "sigs__old").mkdir()
-
-    upsert_signature_batch(spark, docs, table)
-    got = sorted(map(tuple, spark.read.parquet(table).collect()))
-    cols = spark.read.parquet(table).columns
-    want = sorted(
-        map(
-            tuple,
-            minhash_signatures(docs)
-            .withColumn("bucket", hash_bucket("doc_id", 16))
-            .select(*cols)
-            .collect(),
-        )
-    )
-    assert got == want
-    import os
-
-    assert not os.path.exists(str(tmp_path / "sigs__stage"))
-    assert not os.path.exists(str(tmp_path / "sigs__old"))
-
-
-def test_signature_upsert_restores_bucket_stranded_mid_swap(
-    spark, sf_dir, tmp_path
-):
-    """Crash BETWEEN a bucket's rename pair strands its only copy in the
-    aside dir; the next upsert must move it back in — not delete it —
-    so rows of docs absent from the new batch survive."""
-    import os
-    import shutil
-
-    from tweets_spark_top_10_spark.streaming.sketch import upsert_signature_batch
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    first = docs.limit(60)
-    table = str(tmp_path / "sigs")
-    upsert_signature_batch(spark, first, table)
-    before = sorted(map(tuple, spark.read.parquet(table).collect()))
-
-    # Simulate the torn swap: one live bucket dir moved to the aside.
-    buckets = [d for d in os.listdir(table) if d.startswith("bucket=")]
-    victim = sorted(buckets)[0]
-    aside = tmp_path / "sigs__old"
-    aside.mkdir()
-    shutil.move(os.path.join(table, victim), str(aside / victim))
-
-    # Next batch touches only OTHER docs (disjoint ids): the stranded
-    # bucket's rows can come back only via the aside-restore path.
-    second = docs.filter(~docs.doc_id.isin([r.doc_id for r in first.collect()])).limit(20)
-    upsert_signature_batch(spark, second, table)
-    after = {t for t in map(tuple, spark.read.parquet(table).collect())}
-    missing = set(before) - after
-    assert not missing, f"{len(missing)} stranded rows lost (e.g. {sorted(missing)[:2]})"
-    assert not os.path.exists(str(aside))
-
-
-def test_foreach_batch_kv_upsert_matches_batch(spark, sf_dir, tmp_path):
-    """The R12 analog (ES bulk index, App.java:159-178): streamed keyed
-    upserts converge to the batch latest-state of the same rows —
-    last-writer-wins on the key across micro-batches, max-seq within a
-    batch — and replaying with a wiped checkpoint is idempotent."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_kv_upsert
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "value")
-        .limit(60)
-    )
-    pdf = ev.toPandas().sort_values("event_id").reset_index(drop=True)
-    # pandas defaults to ns parquet timestamps, which Spark's schema'd
-    # stream reader rejects; the fixtures' own nanos handling lives in
-    # load_table, not here.
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    src = tmp_path / "kv_stream"
-    src.mkdir()
-    pdf.iloc[:30].to_parquet(src / "b1.parquet", index=False)
-    pdf.iloc[30:].to_parquet(src / "b2.parquet", index=False)
-    # Resend two keys with mutated values and later timestamps — the
-    # upsert must replace their rows.
-    mut = pdf.iloc[:2].copy()
-    mut["value"] = [111.0, 222.0]
-    mut["ts"] = (mut["ts"] + pd.Timedelta(hours=1)).astype("datetime64[us]")
-    mut.to_parquet(src / "b3.parquet", index=False)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    table = str(tmp_path / "kv_table")
-    foreach_batch_kv_upsert(
-        file_stream(spark, str(src), schema, max_files_per_trigger=1),
-        table,
-        key_col="event_id",
-        checkpoint=str(tmp_path / "ckpt_kv"),
-        seq_col="ts",
-    ).awaitTermination()
-
-    got = {
-        (r.event_id, r.ts, r.user_id, r.value)
-        for r in spark.read.parquet(table).drop("bucket").collect()
-    }
-    all_rows = spark.createDataFrame(pd.concat([pdf, mut]), schema=schema)
-    want = {
-        tuple(r)
-        for r in all_rows.groupBy("event_id")
-        .agg(
-            F.max_by(F.struct("ts", "user_id", "value"), F.col("ts")).alias("r")
-        )
-        .select("event_id", "r.ts", "r.user_id", "r.value")
-        .collect()
-    }
-    assert len(got) == 60
-    assert got == want
-
-    # Idempotent replay: wiped checkpoint, same source -> same table.
-    foreach_batch_kv_upsert(
-        file_stream(spark, str(src), schema, max_files_per_trigger=1),
-        table,
-        key_col="event_id",
-        checkpoint=str(tmp_path / "ckpt_kv2"),
-        seq_col="ts",
-    ).awaitTermination()
-    got2 = {
-        (r.event_id, r.ts, r.user_id, r.value)
-        for r in spark.read.parquet(table).drop("bucket").collect()
-    }
-    assert got2 == want
-
-
 def test_streaming_heavy_hitters_summary_certifies_exact_topk(spark, sf_dir, tmp_path):
     """Incrementally maintained MG summary == a valid candidate source:
     after draining the doc stream in micro-batches, candidates from the
@@ -831,7 +573,6 @@ def test_stream_static_pit_enrichment_matches_batch(spark, sf_dir, tmp_path):
     import pandas as pd
 
     from tweets_spark_top_10_spark.operators.merge import pit_join, scd2_history
-    from tweets_spark_top_10_spark.streaming.sinks import run_to_memory
 
     orders = load_table(spark, sf_dir, "orders").limit(400)
     k = F.col("o_orderkey")
@@ -859,47 +600,6 @@ def test_stream_static_pit_enrichment_matches_batch(spark, sf_dir, tmp_path):
     got = sorted(map(tuple, spark.table("pit_mem").collect()))
     want = sorted(map(tuple, pit_join(probes, hist, "o_orderkey", "at").collect()))
     assert got == want and got
-
-
-def test_synthetic_stream_source_exactly_once_vs_batch(spark, tmp_path):
-    """Custom streaming Python DataSource: draining the bounded stream
-    yields every generated row EXACTLY once across micro-batches, and
-    the content equals the batch source's for the same id range (one
-    generation rule, two engines' worth of plumbing)."""
-    from tweets_spark_top_10_spark.sources.pyds import (
-        register_synthetic_events,
-        register_synthetic_stream,
-    )
-
-    register_synthetic_events(spark)
-    register_synthetic_stream(spark)
-
-    stream = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("rows_per_batch", "64")
-        .option("max_rows", "300")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("syn_stream_t")
-        .option("checkpointLocation", str(tmp_path / "syn_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(map(tuple, spark.table("syn_stream_t").collect()))
-    want = sorted(
-        map(
-            tuple,
-            spark.read.format("synthetic_events")
-            .option("partitions", "3")
-            .option("rows_per_partition", "100")
-            .load()
-            .collect(),
-        )
-    )
-    assert got == want and len(got) == 300
 
 
 def test_kafka_unavailable_is_loud_not_silent(spark):
@@ -944,7 +644,6 @@ def test_kafka_shaped_payload_parity_with_file_stream(
         KafkaConnectorUnavailable,
         kafka_json_values,
         kafka_stream,
-        run_to_memory,
     )
 
     events = load_table(spark, sf_dir, "events").limit(200)
@@ -1104,223 +803,6 @@ def test_grouped_mg_merge_recovers_from_stale_swap_dirs(spark, sf_dir, tmp_path)
     merge_mg_batch_grouped(spark, batch, crashed2, "lang", capacity=64)
     assert canon(crashed2) == want
     assert not os.path.exists(crashed2 + "__stage")
-
-
-def test_kafka_replay_feeds_windowed_heavy_hitters(spark, sf_dir, tmp_path):
-    """Composition: the jar-free kafka_replay source (round 7) drives
-    the watermarked (window, group) MG maintenance (round 8) end to
-    end — JSON payloads with event-time ts decode from the Kafka
-    contract columns, fold into per-(day, segment) summaries under the
-    watermark, and the state-derived top-3 equals the batch exact
-    answer.  This is the production wiring: broker-shaped ingestion →
-    bounded streaming state → exact serving read."""
-    import json
-
-    from tweets_spark_top_10_spark.functions.heavy_hitters import (
-        grouped_exact_top_k,
-    )
-    from tweets_spark_top_10_spark.sources.pyds import (
-        register_kafka_replay,
-        write_kafka_replay_dump,
-    )
-    from tweets_spark_top_10_spark.streaming import kafka_json_values
-    from tweets_spark_top_10_spark.streaming.heavy_hitters import (
-        maintain_windowed_heavy_hitters,
-        windowed_grouped_top_k_from_summary,
-    )
-
-    events = load_table(spark, sf_dir, "events").limit(400).select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
-        (F.col("user_id") % 4).cast("string").alias("seg"),
-        F.col("event_type").alias("token"),
-    )
-    payloads = [
-        r["v"]
-        for r in events.select(
-            F.to_json(F.struct("ts_s", "seg", "token")).alias("v")
-        ).collect()
-    ]
-    root = str(tmp_path / "hh_topic")
-    write_kafka_replay_dump(payloads, root, n_partitions=3)
-
-    register_kafka_replay(spark)
-    stream = (
-        spark.readStream.format("kafka_replay")
-        .option("path", root)
-        .option("topic", "events")
-        .load()
-    )
-    decoded = kafka_json_values(
-        stream, T._parse_datatype_string("ts_s string, seg string, token string")
-    ).select(F.to_timestamp("ts_s").alias("ts"), "seg", "token")
-
-    state = str(tmp_path / "kr_hh_state")
-    q = maintain_windowed_heavy_hitters(
-        decoded,
-        state,
-        checkpoint=str(tmp_path / "kr_hh_ckpt"),
-        time_col="ts",
-        group_col="seg",
-        capacity=64,
-        delay_seconds=40 * 86400,
-        window="day",
-    )
-    q.awaitTermination()
-
-    corpus = events.select(
-        F.date_trunc("day", F.to_timestamp("ts_s")).alias("window"),
-        "seg",
-        "token",
-    )
-    got = sorted(
-        map(
-            tuple,
-            windowed_grouped_top_k_from_summary(
-                spark, state, corpus, "seg", k=3, capacity=64
-            )
-            .select(
-                F.concat_ws(
-                    "|",
-                    F.date_format("window", "yyyy-MM-dd HH:mm:ss"),
-                    "seg",
-                ).alias("wg"),
-                "token",
-                "n",
-            )
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            grouped_exact_top_k(
-                corpus.withColumn(
-                    "wg",
-                    F.concat_ws(
-                        "|",
-                        F.date_format("window", "yyyy-MM-dd HH:mm:ss"),
-                        "seg",
-                    ),
-                ).select("wg", "token"),
-                "wg",
-                "token",
-                k=3,
-                capacity=64,
-            ).collect(),
-        )
-    )
-    assert got == want and got
-
-
-def test_kafka_replay_source_exactly_once_and_payload_parity(
-    spark, sf_dir, tmp_path
-):
-    """The jar-free kafka_replay Python DataSource must deliver the
-    Kafka source contract: 6-column schema, per-partition dense
-    offsets, every payload exactly once, and kafka_json_values
-    decoding identical rows to the original batch.  Files appended
-    after a drain are picked up from the checkpoint (offset resume)
-    with no re-delivery of committed offsets."""
-    import json
-    import os
-
-    from tweets_spark_top_10_spark.sources.pyds import (
-        register_kafka_replay,
-        write_kafka_replay_dump,
-    )
-    from tweets_spark_top_10_spark.streaming import kafka_json_values
-
-    events = load_table(spark, sf_dir, "events").limit(300)
-    payloads = [
-        r["v"]
-        for r in events.select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("v")
-        ).collect()
-    ]
-    root = str(tmp_path / "topic_dump")
-    write_kafka_replay_dump(payloads[:200], root, n_partitions=3)
-
-    register_kafka_replay(spark)
-    stream = (
-        spark.readStream.format("kafka_replay")
-        .option("path", root)
-        .option("topic", "tweets")
-        .load()
-    )
-    schema = "event_id long, user_id long, event_type string, value double"
-    decoded = kafka_json_values(stream, T._parse_datatype_string(schema))
-    ckpt = str(tmp_path / "kr_ckpt")
-    out = str(tmp_path / "kr_out")
-
-    def drain():
-        q = (
-            decoded.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def expected(ps):
-        return sorted(
-            tuple(json.loads(p)[k]
-                  for k in ("event_id", "user_id", "event_type", "value"))
-            for p in ps
-        )
-
-    drain()
-    got1 = spark.read.parquet(out).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    assert sorted(map(tuple, got1.collect())) == expected(payloads[:200])
-
-    # raw contract columns: offsets dense per partition
-    raw_q = (
-        spark.readStream.format("kafka_replay")
-        .option("path", root)
-        .load()
-        .writeStream.format("memory")
-        .queryName("kr_raw")
-        .trigger(availableNow=True)
-        .start()
-    )
-    raw_q.awaitTermination()
-    raw = spark.table("kr_raw")
-    assert set(raw.columns) == {
-        "key", "value", "topic", "partition", "offset", "timestamp"
-    }
-    per_part = (
-        raw.groupBy("partition")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.min("offset").alias("lo"), F.max("offset").alias("hi"))
-        .collect()
-    )
-    assert len(per_part) == 3
-    for r in per_part:
-        assert r["lo"] == 0 and r["hi"] == r["n"] - 1
-
-    # append more records -> resume from checkpoint, no re-delivery
-    by_part: dict[int, int] = {}
-    for i, _ in enumerate(payloads[:200]):
-        by_part[i % 3] = by_part.get(i % 3, 0) + 1
-    for j, p in enumerate(payloads[200:]):
-        part = j % 3
-        start = by_part.get(part, 0)
-        path = os.path.join(
-            root, f"partition={part}", f"{start}-{start + 1}.jsonl"
-        )
-        with open(path, "w") as fh:
-            fh.write(p + "\n")
-        by_part[part] = start + 1
-    drain()
-    got2 = spark.read.parquet(out).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    # exactly once across BOTH drains: 300 rows total, no duplicates
-    assert sorted(map(tuple, got2.collect())) == expected(payloads)
 
 
 def test_windowed_grouped_heavy_hitters_watermark(spark, sf_dir, tmp_path):
@@ -1643,39 +1125,6 @@ def test_streaming_grouped_heavy_hitters_order_independent_exactness(
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
-
-
-def test_kafka_replay_ignores_foreign_files_and_empty_dirs(spark, tmp_path):
-    """Layout robustness: non-partition dirs, malformed file names and
-    empty partitions must be skipped (not crash, not emit rows)."""
-    import os
-
-    from tweets_spark_top_10_spark.sources.pyds import register_kafka_replay
-
-    root = tmp_path / "messy_topic"
-    (root / "partition=0").mkdir(parents=True)
-    (root / "partition=1").mkdir()
-    (root / "_metadata").mkdir()
-    with open(root / "partition=0" / "0-2.jsonl", "w") as fh:
-        fh.write('{"a": 1}\n{"a": 2}\n')
-    with open(root / "partition=0" / "README.txt", "w") as fh:
-        fh.write("not a segment")
-    with open(root / "partition=1" / "garbage.jsonl", "w") as fh:
-        fh.write("badly named: no offset span")
-
-    register_kafka_replay(spark)
-    q = (
-        spark.readStream.format("kafka_replay")
-        .option("path", str(root))
-        .load()
-        .writeStream.format("memory")
-        .queryName("kr_messy")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("kr_messy").select("partition", "offset").collect()
-    assert sorted(map(tuple, rows)) == [(0, 0), (0, 1)]
 
 
 def test_windowed_mg_live_state_bounded_under_token_churn(spark, tmp_path):

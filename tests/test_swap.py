@@ -15,23 +15,6 @@ import os
 import pytest
 
 
-def test_maintained_table_survives_crash_mid_swap(spark, tmp_path):
-    from tweets_spark_top_10_spark.sources.writers import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(200).selectExpr("id", "id % 7 AS g").repartition(8).write.parquet(
-        path
-    )
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    os.rename(path, path + "__old")  # crash between the two renames
-    compact_parquet(spark, path, target_files=2)
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-    leftovers = [
-        p.name for p in tmp_path.iterdir() if p.name.endswith(("__old", "__stage"))
-    ]
-    assert not leftovers, leftovers
-
-
 def _make(path, name: str) -> None:
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, name), "w") as fh:

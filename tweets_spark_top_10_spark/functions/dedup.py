@@ -12,9 +12,8 @@ Scale design (100 TB of documents):
   10k docs is useless as dedup evidence anyway — it is boilerplate).
 - **MinHash-LSH**: sub-quadratic candidate generation by banding
   per-document MinHash signatures in one self-equi-join
-  (:func:`minhash_band_pairs`; :func:`minhash_lsh_pairs` keeps the
-  ``pyspark.ml`` MinHashLSH variant); the exact-Jaccard rerank of
-  candidates is cheap.
+  (:func:`minhash_band_pairs`); the exact-Jaccard rerank of candidates
+  is cheap.
 - **SimHash**: 64-bit sketch from per-token ``xxhash64`` bit votes in
   one aggregate (no Python); near-dup = small Hamming distance, banded
   by 16-bit chunks for candidate generation.
@@ -215,55 +214,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hash_tables: int = 4,
-    # Size the indicator space to ~4-8x the distinct-shingle count:
-    # 2^16 matches the fixture vocab exactly (identical pairs to 2^18,
-    # ~40% faster); a 100 TB corpus with billions of shingles wants
-    # 2^20+ to keep HashingTF collisions from inflating Jaccard.
-    num_features: int = 1 << 16,
-    jaccard_threshold: float = 0.2,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup candidate pairs via MinHash-LSH (sub-quadratic).
-
-    shingles → HashingTF (sparse indicator vector) → MinHashLSH
-    approxSimilarityJoin. Output: (id_a, id_b, jaccard_approx) where
-    jaccard_approx = 1 - lsh distance. The LSH distance is itself an
-    estimate; callers wanting exactness rerank candidates with
-    :func:`ngram_jaccard_pairs` restricted to these pairs.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    docs = df.select(id_col, shingles(F.col(text_col), n).alias("sh")).filter(
-        F.size("sh") > 0
-    )
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features)
-    feats = tf.transform(docs)
-    lsh = MinHashLSH(
-        inputCol="features",
-        outputCol="hashes",
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(
-        feats, feats, 1.0 - jaccard_threshold, distCol="dist"
-    )
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1.0 - F.col("dist"), 6).alias("jaccard_approx"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-
-
 def minhash_band_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -354,12 +304,10 @@ def minhash_signatures(
     """Wide per-document MinHash signature: (id, mh0..mh{t-1}).
 
     ONE hash aggregate over the exploded shingle table — this is the
-    persistable/streamable signature artifact (8 longs = 64 bytes/doc):
-    banding (:func:`minhash_band_pairs`) and incremental index
-    maintenance (``streaming/sketch.py``) both consume it.  A document's
-    signature depends only on its own text, so signatures are
-    incrementally maintainable: new/changed docs re-sketch, everything
-    else is untouched.
+    persistable signature artifact (8 longs = 64 bytes/doc) that banding
+    (:func:`minhash_band_pairs`) consumes.  A document's signature
+    depends only on its own text, so new or changed docs re-sketch and
+    everything else is untouched.
 
     ``with_count`` adds ``n_sh`` (the per-doc distinct-shingle count)
     as one more column of the SAME aggregate: the exact-rerank's

@@ -3,10 +3,8 @@
 The reference has no mutation surface at all (its output is an
 overwritten CSV per hour, ``App.java:133-134``); a training-data
 pipeline needs one — corpora are maintained as base snapshot + change
-feeds (new crawls, takedown deletes, metadata fixes).  This is the
-batch twin of the streaming ``upsert_rows_by_bucket`` sink
-(``streaming/sinks.py``): same last-writer-wins contract, expressed
-as one declarative plan instead of a stateful sink.
+feeds (new crawls, takedown deletes, metadata fixes).  Last writer
+wins per key, expressed as one declarative plan.
 
 Semantics (Delta/Iceberg ``MERGE`` shape):
 

@@ -10,7 +10,6 @@ from tweets_spark_top_10_spark.sources.registry import (
     SCHEMAS,
     TABLES,
     load_table,
-    register_views,
 )
 from tweets_spark_top_10_spark.sources.readers import read_batch, read_hour_partition
 from tweets_spark_top_10_spark.sources.writers import write_csv_top_k, write_partitioned
@@ -19,7 +18,6 @@ __all__ = [
     "SCHEMAS",
     "TABLES",
     "load_table",
-    "register_views",
     "read_batch",
     "read_hour_partition",
     "write_csv_top_k",

@@ -19,9 +19,9 @@ to executors (one row per file), and decoding runs inside
 1000-executor cluster decodes 1000 files at a time; per-file work is
 pure CPU.  This is still the *fallback* path: when the spark-avro jar is
 present the native vectorized connector wins and ``readers.read_batch``
-uses it first.  Writes: :func:`write_avro_python` is the distributed
-fallback (one container file per partition, encoded executor-side);
-:func:`write_avro_file` is the single-process primitive under it.
+uses it first.  Writes: :func:`write_avro_file` encodes one container
+file in one process, which builds reader inputs; production writes go
+through the connector.
 """
 
 from __future__ import annotations
@@ -198,7 +198,7 @@ def to_spark_type(schema) -> T.DataType:
 
 def _timestamp_cols(schema: dict) -> dict[str, int]:
     """Top-level logical timestamp fields → microseconds-per-unit.
-    Looks through ``[null, X]`` unions (the writer wraps every field)."""
+    Looks through ``[null, X]`` unions (how nullable fields are written)."""
     out = {}
     for f in schema.get("fields", ()):
         ft = f["type"]
@@ -392,125 +392,3 @@ def write_avro_file(
         buf.write(sync)
     with open(path, "wb") as fh:
         fh.write(buf.getvalue())
-
-
-def write_avro_python(
-    df: DataFrame,
-    path: str,
-    codec: str = "deflate",
-    records_per_block: int = 1000,
-) -> int:
-    """Distributed fallback Avro WRITE: one container file per input
-    partition, written executor-side via mapInPandas (the write twin of
-    :func:`read_avro_python` — used when the spark-avro connector jar is
-    absent).  Schema is derived from the DataFrame schema (the
-    supported-subset mapping of :func:`to_spark_type`, inverted).
-    Returns the number of files written.
-
-    Each partition's task encodes its Arrow batches and writes
-    ``part-<pid>.avro`` into ``path`` — on a real cluster this requires
-    a shared filesystem (HDFS/object store via fuse), exactly like
-    every file sink; the commit protocol here is write-then-rename-free
-    because avro part files are self-contained and the reader globs
-    ``*.avro``.
-    """
-    import os
-
-    from pyspark.sql import functions as F  # noqa: F811 (executor ship)
-
-    avro_schema = _to_avro_schema(df.schema)
-    os.makedirs(path, exist_ok=True)
-    names = [f.name for f in df.schema.fields]
-
-    def write_files(batches):
-        import pandas as pd
-
-        rows: list[dict] = []
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                rows.append(
-                    {
-                        k: (None if _is_null(v) else _to_py(v))
-                        for k, v in rec.items()
-                    }
-                )
-        if rows:
-            from pyspark import TaskContext
-
-            part = TaskContext.get().partitionId()
-            write_avro_file(
-                os.path.join(path, f"part-{part:05d}.avro"),
-                avro_schema,
-                rows,
-                codec=codec,
-                records_per_block=records_per_block,
-            )
-            yield pd.DataFrame({"n": [len(rows)]})
-
-    out = df.mapInPandas(write_files, schema="n long")
-    files = out.agg(F.count(F.lit(1))).collect()[0][0]
-    return int(files)
-
-
-def _is_null(v) -> bool:
-    # Arrow→pandas surfaces NULL scalars as None/NaN/NaT; arrays are
-    # never null-scalars (and are ambiguous to `!=`), so skip them.
-    if v is None:
-        return True
-    if hasattr(v, "__len__") and not isinstance(v, (str, bytes)):
-        return False
-    try:
-        return bool(v != v)  # NaN/NaT
-    except (TypeError, ValueError):
-        return False
-
-
-def _to_py(v):
-    """numpy/pandas scalars & arrays → plain Python for the encoder."""
-    import pandas as pd
-
-    if isinstance(v, pd.Timestamp):
-        return v.value // 1_000  # ns → µs since epoch (naive == UTC)
-    if hasattr(v, "item") and not hasattr(v, "__len__"):
-        return v.item()
-    if hasattr(v, "tolist"):
-        return v.tolist()
-    return v
-
-
-def _to_avro_schema(spark_schema: "T.StructType") -> dict:
-    """Invert :func:`to_spark_type` for the supported subset; every
-    field is written as a ``[null, X]`` union (Spark columns are
-    nullable by default)."""
-    _INV = {
-        "boolean": "boolean",
-        "integer": "int",
-        "long": "long",
-        "float": "float",
-        "double": "double",
-        "binary": "bytes",
-        "string": "string",
-    }
-
-    def conv(dt: "T.DataType"):
-        name = dt.typeName()
-        if name in _INV:
-            return _INV[name]
-        if isinstance(dt, T.ArrayType):
-            return {"type": "array", "items": conv(dt.elementType)}
-        if isinstance(dt, T.MapType):
-            if not isinstance(dt.keyType, T.StringType):
-                raise NotImplementedError("avro maps require string keys")
-            return {"type": "map", "values": conv(dt.valueType)}
-        if isinstance(dt, T.TimestampType):
-            return {"type": "long", "logicalType": "timestamp-micros"}
-        raise NotImplementedError(f"unsupported spark type for avro: {dt}")
-
-    return {
-        "type": "record",
-        "name": "Row",
-        "fields": [
-            {"name": f.name, "type": ["null", conv(f.dataType)]}
-            for f in spark_schema.fields
-        ],
-    }

@@ -28,15 +28,7 @@ Generation rule (documented because the oracle depends on it)::
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 EVENT_TYPES = ["click", "view", "purchase", "scroll", "share"]
 EPOCH_2024 = 1704067200  # 2024-01-01T00:00:00Z
@@ -96,294 +88,3 @@ class SyntheticEventsDataSource(DataSource):
 def register_synthetic_events(spark) -> None:
     """Idempotent registration (re-register is a no-op overwrite)."""
     spark.dataSource.register(SyntheticEventsDataSource)
-
-
-def _gen_row(rid: int):
-    import datetime
-
-    return (
-        rid,
-        datetime.datetime.utcfromtimestamp(EPOCH_2024 + rid),
-        (rid * 2654435761) % 97,
-        EVENT_TYPES[rid % 5],
-        (rid * 31 % 1000) / 10.0,
-    )
-
-
-class _SyntheticStreamReader(SimpleDataSourceStreamReader):
-    """SimpleDataSourceStreamReader over the same generation rule.
-
-    Offsets are plain dicts (``{"pos": n}``) checkpointed by the
-    engine; ``read`` advances by ``rows_per_batch`` up to ``max_rows``
-    and ``readBetweenOffsets`` regenerates any committed range
-    deterministically — replay after failure yields byte-identical
-    batches, which is exactly why the rows are a pure function of id.
-    """
-
-    def __init__(self, options):
-        self.rows_per_batch = int(options.get("rows_per_batch", "100"))
-        self.max_rows = int(options.get("max_rows", "1000"))
-
-    def initialOffset(self):
-        return {"pos": 0}
-
-    def read(self, start):
-        pos = int(start["pos"])
-        end = min(pos + self.rows_per_batch, self.max_rows)
-        return iter([_gen_row(i) for i in range(pos, end)]), {"pos": end}
-
-    def readBetweenOffsets(self, start, end):
-        return iter(
-            [_gen_row(i) for i in range(int(start["pos"]), int(end["pos"]))]
-        )
-
-
-class SyntheticEventsStreamDataSource(DataSource):
-    """``spark.readStream.format("synthetic_events_stream")`` — the
-    streaming twin of :class:`SyntheticEventsDataSource` (same rule,
-    same schema), for load-testing streaming pipelines without Kafka."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_events_stream"
-
-    def schema(self) -> str:
-        return (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-
-    def simpleStreamReader(self, schema):
-        return _SyntheticStreamReader(self.options)
-
-
-def register_synthetic_stream(spark) -> None:
-    spark.dataSource.register(SyntheticEventsStreamDataSource)
-
-
-class _JsonlCommit(WriterCommitMessage):
-    def __init__(self, staged: str):
-        self.staged = staged
-
-
-class _JsonlWriter(DataSourceWriter):
-    """Task side: stage to a dot-prefixed temp file, report it in the
-    commit message.  Nothing becomes visible until the DRIVER commits —
-    a failed or speculative task's staged file is simply never renamed
-    (and ``abort`` sweeps it), so the sink is exactly-once at the file
-    level without any coordination between tasks."""
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_dir writer requires option 'path'")
-        self.overwrite = overwrite
-
-    def write(self, rows):
-        import json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        staged = os.path.join(self.path, f".staged-{uuid.uuid4().hex}.jsonl")
-        with open(staged, "w") as fh:
-            for row in rows:
-                fh.write(json.dumps(row.asDict(), default=str) + "\n")
-        return _JsonlCommit(staged)
-
-    def commit(self, messages):
-        import glob as _glob
-        import os
-
-        if self.overwrite:
-            for old in _glob.glob(os.path.join(self.path, "part-*.jsonl")):
-                os.remove(old)
-        for i, m in enumerate(messages):
-            os.rename(
-                m.staged, os.path.join(self.path, f"part-{i:05d}.jsonl")
-            )
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
-
-
-class JsonlDirDataSource(DataSource):
-    """``df.write.format("jsonl_dir").option("path", d)`` — a custom
-    SINK with the full stage/commit/abort protocol (the write-side
-    completion of the custom-source story: batch read, stream read,
-    and now write)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonl_dir"
-
-    def writer(self, schema, overwrite: bool):
-        return _JsonlWriter(self.options, overwrite)
-
-
-def register_jsonl_sink(spark) -> None:
-    spark.dataSource.register(JsonlDirDataSource)
-
-
-class _KafkaReplayPartition(InputPartition):
-    """One Kafka partition's offset slice for one micro-batch."""
-
-    def __init__(self, p: int, start: int, end: int, files, topic: str):
-        self.p = p
-        self.start = start
-        self.end = end
-        self.files = files  # [(file_start_offset, path)]
-        self.topic = topic
-
-
-class _KafkaReplayStreamReader(DataSourceStreamReader):
-    """Partition-planned streaming reader over a Kafka-Connect-shaped
-    directory dump::
-
-        <path>/partition=<p>/<start>-<end>.jsonl
-
-    Each file holds the partition's records for offsets [start, end)
-    in order, one VALUE payload per line.  Offsets are the real Kafka
-    contract — per-partition, dense, monotonic — carried as
-    ``{"offsets": {"<p>": next_offset}}``; ``partitions(start, end)``
-    plans ONE InputPartition per Kafka partition with work, and each
-    executor task reads only its partition's files (driver touches
-    file NAMES, never file contents).  Replaying any committed offset
-    range re-reads byte-identical rows, so checkpoint recovery is
-    exactly-once — the jar-free stand-in for the real Kafka source
-    with the same downstream semantics (``streaming/sources.
-    kafka_json_values`` runs unchanged on either).
-
-    Record timestamps are synthesized deterministically from the
-    offset (epoch + offset seconds): replay MUST reproduce identical
-    rows, and a wall-clock ingestion time would break that.
-    """
-
-    def __init__(self, options):
-        self.root = options["path"].rstrip("/")
-        self.topic = options.get("topic", "tweets")
-
-    def _layout(self):
-        import os
-        import re
-
-        out: dict[int, list[tuple[int, int, str]]] = {}
-        if not os.path.isdir(self.root):
-            return out
-        for d in sorted(os.listdir(self.root)):
-            m = re.match(r"partition=(\d+)$", d)
-            if not m:
-                continue
-            p = int(m.group(1))
-            spans = []
-            for f in sorted(os.listdir(os.path.join(self.root, d))):
-                fm = re.match(r"(\d+)-(\d+)\.jsonl$", f)
-                if fm:
-                    spans.append(
-                        (
-                            int(fm.group(1)),
-                            int(fm.group(2)),
-                            os.path.join(self.root, d, f),
-                        )
-                    )
-            out[p] = sorted(spans)
-        return out
-
-    def initialOffset(self) -> dict:
-        return {
-            "offsets": {str(p): (spans[0][0] if spans else 0)
-                        for p, spans in self._layout().items()}
-        }
-
-    def latestOffset(self) -> dict:
-        return {
-            "offsets": {str(p): (spans[-1][1] if spans else 0)
-                        for p, spans in self._layout().items()}
-        }
-
-    def partitions(self, start: dict, end: dict):
-        layout = self._layout()
-        parts = []
-        for key, hi in end["offsets"].items():
-            p = int(key)
-            lo = int(start["offsets"].get(key, 0))
-            hi = int(hi)
-            if hi <= lo:
-                continue
-            files = [
-                (s, path)
-                for s, e, path in layout.get(p, [])
-                if e > lo and s < hi
-            ]
-            parts.append(_KafkaReplayPartition(p, lo, hi, files, self.topic))
-        return parts
-
-    def read(self, part: _KafkaReplayPartition):
-        from datetime import datetime, timezone
-
-        for file_start, path in part.files:
-            with open(path, "rb") as fh:
-                for i, line in enumerate(fh.read().splitlines()):
-                    off = file_start + i
-                    if part.start <= off < part.end:
-                        yield (
-                            None,
-                            line,
-                            part.topic,
-                            part.p,
-                            off,
-                            datetime.fromtimestamp(off, tz=timezone.utc),
-                        )
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class KafkaReplayDataSource(DataSource):
-    """``spark.readStream.format("kafka_replay").option("path", d)`` —
-    Kafka SEMANTICS (per-partition offsets, exactly-once replay, the
-    source's 6-column contract) without the connector jar, over a
-    captured topic dump.  Use the real ``kafka_stream`` when the jar
-    and a broker exist; this covers CI and replay debugging."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "kafka_replay"
-
-    def schema(self) -> str:
-        return (
-            "key binary, value binary, topic string,"
-            " partition int, offset long, timestamp timestamp"
-        )
-
-    def streamReader(self, schema):
-        return _KafkaReplayStreamReader(self.options)
-
-
-def register_kafka_replay(spark) -> None:
-    spark.dataSource.register(KafkaReplayDataSource)
-
-
-def write_kafka_replay_dump(rows: list[str], root: str, n_partitions: int = 2,
-                            records_per_file: int = 50) -> None:
-    """Test/capture helper: deal payload strings round-robin into the
-    ``partition=<p>/<start>-<end>.jsonl`` layout (driver-side, for
-    fixtures; a production capture job writes the same layout from
-    ``foreachBatch``)."""
-    import os
-
-    buckets: dict[int, list[str]] = {p: [] for p in range(n_partitions)}
-    for i, payload in enumerate(rows):
-        buckets[i % n_partitions].append(payload)
-    for p, vals in buckets.items():
-        d = os.path.join(root, f"partition={p}")
-        os.makedirs(d, exist_ok=True)
-        for s in range(0, len(vals), records_per_file):
-            chunk = vals[s : s + records_per_file]
-            path = os.path.join(d, f"{s}-{s + len(chunk)}.jsonl")
-            with open(path, "w") as fh:
-                fh.write("\n".join(chunk) + ("\n" if chunk else ""))

@@ -32,7 +32,9 @@ def read_batch(
     classpath (the scale path: vectorized, schema-pushed); when it is
     absent — as in this container — we fall back to the pure-Python
     container-file decoder in ``avro_py`` (still distributed: binaryFile
-    fan-out + mapInPandas decode). Any *other* avro failure stays loud.
+    fan-out + mapInPandas decode). The fallback takes no reader
+    ``options`` and raises ``ValueError`` when given any, rather than
+    drop them. Any *other* avro failure stays loud.
     """
     if fmt not in _FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; supported: {sorted(_FORMATS)}")
@@ -64,6 +66,11 @@ def read_batch(
         except AnalysisException as exc:  # connector missing ≠ data problem
             if exc.getCondition() not in _MISSING_SOURCE:
                 raise
+            if options:
+                raise ValueError(
+                    "spark-avro connector not on the classpath and the Python "
+                    f"fallback decoder cannot honour options {sorted(options)}"
+                ) from exc
             from tweets_spark_top_10_spark.sources.avro_py import read_avro_python
 
             return read_avro_python(spark, paths, schema=schema)
@@ -75,37 +82,6 @@ def read_batch(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load(paths)
-
-
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Ingest a directory of opaque files as (path, payload, n_bytes).
-
-    The ``binaryFile`` source is the scale path for media ingestion: a
-    1000-executor job lists once and fans the file reads out, each file
-    one row — ``payload: binary`` plugs straight into the multimodal
-    surface (``functions/multimodal.attach_meta`` + the mapInPandas
-    kernels).  ``glob`` prunes at LISTING time (pathGlobFilter), so
-    "only *.jpg under this prefix" never even stats the rest.  Files
-    stream through Spark's 2 GiB-per-row binary limit applies; sharded
-    media (video) belongs in per-chunk rows upstream.
-    """
-    reader = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", str(recursive).lower())
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    return df.select(
-        F.col("path"),
-        F.col("content").alias("payload"),
-        F.col("length").cast("long").alias("n_bytes"),
-    )
 
 
 def read_hour_partition(
@@ -136,7 +112,9 @@ def read_hour_partition(
     reference's own strategy (``App.java:60-84``), and the python
     fallback decoder has no Hive partition-column discovery — then
     attaches the partition values as literal columns so the output
-    shape matches the partition-discovered path exactly.
+    shape matches the partition-discovered path exactly.  Without the
+    connector, ``options`` such as ``mergeSchema`` raise (see
+    :func:`read_batch`).
     """
     if fmt == "avro":
         hour_path = (
@@ -159,72 +137,3 @@ def read_hour_partition(
         & (F.col("day") == day)
         & (F.col("hour") == hour)
     )
-
-
-def snapshot_versions(base_path: str) -> list[int]:
-    """Published snapshot versions under ``base_path``, ascending."""
-    import os
-
-    try:
-        names = os.listdir(base_path)
-    except FileNotFoundError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("snapshot=") and n.removeprefix("snapshot=").isdigit():
-            out.append(int(n.removeprefix("snapshot=")))
-    return sorted(out)
-
-
-def read_snapshot(
-    spark: SparkSession,
-    base_path: str,
-    version: int | None = None,
-) -> DataFrame:
-    """Read one table snapshot (``version=None`` → latest).
-
-    The snapshot dir is read DIRECTLY (not via partition discovery on
-    ``base_path``) so the scan lists only the pinned version's files —
-    a reader never pays for, or races with, other versions.
-    """
-    versions = snapshot_versions(base_path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot=N dirs under {base_path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(
-            f"snapshot {version} not published under {base_path}; have {versions}"
-        )
-    return spark.read.parquet(f"{base_path.rstrip('/')}/snapshot={version}")
-
-
-def read_json_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE JSON ingest split into (good, quarantined) frames.
-
-    A 100 TB crawl feed always contains malformed rows; failing the
-    job (FAILFAST) or silently nulling them (plain PERMISSIVE) are
-    both wrong for a training pipeline — the contract here is: good
-    rows flow, bad rows land in a quarantine frame carrying the RAW
-    line for repair/triage, and nothing is dropped.  Implemented with
-    Spark's corrupt-record column (the schema is extended internally;
-    callers pass only their data schema).
-    """
-    corrupt = "_sg_corrupt"
-    full = T.StructType(schema.fields + [T.StructField(corrupt, T.StringType())])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt)
-        .json(path)
-        .cache()  # split consumes it twice; permissive parse is per-pass
-    )
-    good = df.where(F.col(corrupt).isNull()).drop(corrupt)
-    bad = df.where(F.col(corrupt).isNotNull()).select(
-        F.col(corrupt).alias("raw_record")
-    )
-    return good, bad

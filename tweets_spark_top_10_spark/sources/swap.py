@@ -1,7 +1,7 @@
 """Whole-directory publish for maintained tables: stage → aside → live.
 
-Every maintained table (MG summaries, compacted parquet) is replaced as
-a whole directory:
+The maintained Misra-Gries summaries (``streaming/heavy_hitters``) are
+the only owner: each summary table is replaced as a whole directory:
 
 1. ``write(<path>__stage)`` produces the new content;
 2. the live dir is renamed to ``<path>__old``;

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from tweets_spark_top_10_spark.sources.swap import recover, swap_in
-
 
 def write_csv_top_k(df: DataFrame, path: str, k: int = 10) -> None:
     """Write the top-K rows as a single headered CSV, overwriting.
@@ -24,105 +22,21 @@ def write_csv_top_k(df: DataFrame, path: str, k: int = 10) -> None:
     df.limit(k).coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
 
-def compact_parquet(spark, path: str, target_files: int) -> int:
-    """Compact a small-files parquet directory to ``target_files`` files.
+def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """Partitioned parquet write with dynamic partition overwrite.
 
-    The small-files problem is the classic file-based-lake failure mode
-    (per-hour streaming sinks emit one file per micro-batch per
-    partition; a year later the table is millions of tiny files and the
-    driver chokes on listing).  Read → coalesce (no shuffle) → write the
-    stage → publish with ``sources/swap.py``.  At real scale this runs
-    per partition, not per table.  Returns the new file count.
-
-    Row preservation is checked against the SOURCE count (counted before
-    the rewrite) inside the stage write, so a compacted copy that lost
-    rows raises before the swap and the live table is never touched.
-    """
-    import glob
-    import shutil
-
-    recover(path)
-    before = spark.read.parquet(path).count()
-
-    def _write(staging: str) -> None:
-        spark.read.parquet(path).coalesce(target_files).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        compacted = spark.read.parquet(staging).count()
-        if compacted != before:
-            shutil.rmtree(staging)
-            raise AssertionError(f"compaction lost rows: {before} -> {compacted}")
-
-    swap_in(path, _write)
-    return len(glob.glob(f"{path}/part-*.parquet"))
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    fmt: str = "parquet",
-    dynamic: bool = True,
-) -> None:
-    """Partitioned write with dynamic partition overwrite.
-
-    With ``dynamic=True`` only the partitions present in ``df`` are
-    replaced — re-running an hour replaces exactly that hour, which is
+    Only the partitions present in ``df`` are replaced — re-running an
+    hour replaces exactly that hour, which is
     the race-free version of the reference's "delete ES rows for the
     window, then insert" maintenance (``App.java:102-157`` — including
     its month off-by-one bug, SURVEY.md §1.2, which cannot happen here
     because the partition values come from the data itself).
     """
-    writer = df.write.mode("overwrite").format(fmt).partitionBy(*partition_by)
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.save(path)
-
-
-def write_snapshot(df: DataFrame, base_path: str, version: int) -> None:
-    """Write one immutable table snapshot under ``base/snapshot=V/``.
-
-    Time-travel-style reads over plain partitioned dirs (the public
-    file-lake pattern that predates Delta/Iceberg manifests): every
-    version is a self-contained directory, so a reader pinned to
-    ``snapshot=3`` is immune to concurrent writers publishing v4 —
-    publication is the atomic-enough dir rename of the final file
-    commit, and old versions stay readable until retired.  At 100 TB
-    each snapshot would hold partition dirs underneath; nothing here
-    precludes that (the snapshot level is just the outermost dir).
-    """
-    if version < 0:
-        raise ValueError(f"snapshot version must be >= 0, got {version}")
-    df.write.mode("errorifexists").parquet(
-        f"{base_path.rstrip('/')}/snapshot={version}"
-    )
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """Write with range-clustered layout: rows range-partitioned and
-    sorted on ``cluster_cols``, one file per range.
-
-    Partition pruning handles the DIRECTORY level; this handles the
-    FILE level: each file covers a disjoint range of the cluster key,
-    so its parquet footer min/max excludes it from scans filtering on
-    that key (the poor-man's Z-order — exact for one column, prefix-
-    effective for several).  At 100 TB the difference is reading ~1/N
-    of the files for a point/range query instead of every footer's
-    row groups.  Sorting within files also helps row-group pruning and
-    run-length encoding.
-    """
     (
-        df.repartitionByRange(num_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
     )
 
 
@@ -186,30 +100,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def write_with_audit(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, object] | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> dict:
-    """Write AND audit in one pass: ``df.observe`` attaches aggregate
-    metrics to the write job itself, so row counts / sums / null
-    counts come back without a second scan of the data — at 100 TB
-    the difference between "audited" and "audited for double the
-    cost".  Metrics must be aggregate expressions over the observed
-    plan (Spark's Observation contract); ``n_rows`` is always
-    included.  Returns the realized metric dict.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    exprs = [F.count(F.lit(1)).alias("n_rows")] + [
-        c.alias(name) for name, c in (metrics or {}).items()
-    ]
-    audited = df.observe(obs, *exprs)
-    audited.write.mode(mode).format(fmt).save(path)
-    return obs.get

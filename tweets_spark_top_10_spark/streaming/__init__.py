@@ -9,9 +9,8 @@ idempotent ``foreachBatch`` overwrite-by-window replaces the
 delete-then-insert dance.
 
 Beside that top-10 path (``sources`` → ``windows`` → ``sinks``) the
-package keeps three maintained forms of near-dedup and trending state:
-Misra-Gries heavy-hitter summaries, a MinHash signature index and
-watermarked duplicate dropping.
+package keeps one maintained form of trending state: Misra-Gries
+heavy-hitter summaries (``heavy_hitters``), plain, grouped and windowed.
 """
 
 from tweets_spark_top_10_spark.streaming.sources import (
@@ -24,8 +23,6 @@ from tweets_spark_top_10_spark.streaming.windows import (
     windowed_count,
     windowed_top_k,
 )
-from tweets_spark_top_10_spark.streaming.dedup import dedup_stream
-from tweets_spark_top_10_spark.streaming.sketch import maintain_minhash_index
 from tweets_spark_top_10_spark.streaming.heavy_hitters import (
     maintain_heavy_hitters,
     top_k_from_summary,
@@ -33,7 +30,6 @@ from tweets_spark_top_10_spark.streaming.heavy_hitters import (
 from tweets_spark_top_10_spark.streaming.sinks import (
     foreach_batch_overwrite,
     foreach_batch_top_k,
-    run_to_memory,
 )
 
 __all__ = [
@@ -43,11 +39,8 @@ __all__ = [
     "kafka_stream",
     "windowed_count",
     "windowed_top_k",
-    "dedup_stream",
-    "maintain_minhash_index",
     "maintain_heavy_hitters",
     "top_k_from_summary",
     "foreach_batch_overwrite",
     "foreach_batch_top_k",
-    "run_to_memory",
 ]

@@ -1,4 +1,4 @@
-"""Streaming sinks: idempotent foreachBatch overwrite + test helpers.
+"""Streaming sinks: idempotent foreachBatch overwrite.
 
 ``foreach_batch_overwrite`` is the engine's replacement for the
 reference's ES maintenance (``App.java:146-157``: delete the speed-layer
@@ -124,72 +124,3 @@ def foreach_batch_top_k(
         transform=rank,
         trigger_available_now=trigger_available_now,
     )
-
-
-def run_to_memory(
-    stream: DataFrame,
-    name: str,
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Drain a (bounded) stream into an in-memory table and return the
-    query; callers awaitTermination then read ``spark.table(name)``.
-    Test-only: memory sink collects to the driver."""
-    writer = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    return start_query(stream.sparkSession, writer)
-
-
-def foreach_batch_kv_upsert(
-    stream: DataFrame,
-    table_path: str,
-    key_col: str,
-    checkpoint: str,
-    n_buckets: int = 16,
-    seq_col: str | None = None,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Keyed bulk-upsert sink — the live analog of the reference's
-    commented-out ES bulk index (``saveNewResults``,
-    ``App.java:159-178``), which paired with the delete-by-window
-    (``App.java:146-157``) formed a delete-then-insert replace of the
-    speed-layer rows.  Here both halves collapse into one idempotent
-    keyed upsert per micro-batch: last-writer-wins on ``key_col`` into
-    a bucket-partitioned parquet "index" maintained by the generic
-    stage-then-swap engine (``streaming/sketch.upsert_rows_by_bucket``)
-    — the same batch → keyed merge → atomic-enough swap shape a
-    JDBC/REST bulk-upsert writer takes, testable without an external
-    endpoint (this sandbox has none).
-
-    Within-batch duplicate keys: with ``seq_col`` the max-sequence row
-    wins (arrival-order semantics that survive backfills batching
-    differently); without it the lexicographically largest value struct
-    wins — deterministic, but within-trigger order is undefined.
-    Across batches the upsert gives
-    last-writer-wins, and replaying a batch converges to the same
-    table.
-    """
-    from pyspark.sql import functions as F
-
-    from tweets_spark_top_10_spark.functions.sampling import hash_bucket
-    from tweets_spark_top_10_spark.streaming.sketch import upsert_rows_by_bucket
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        others = [c for c in batch.columns if c != key_col]
-        if seq_col is not None:
-            one = batch.groupBy(key_col).agg(
-                F.max_by(F.struct(*others), F.col(seq_col)).alias("__r")
-            )
-        else:
-            one = batch.groupBy(key_col).agg(F.max(F.struct(*others)).alias("__r"))
-        keyed = one.select(F.col(key_col), F.col("__r.*")).withColumn(
-            "bucket", hash_bucket(key_col, n_buckets)
-        )
-        upsert_rows_by_bucket(batch.sparkSession, keyed, table_path, key_col)
-
-    return start_foreach_batch(stream, _merge, checkpoint, trigger_available_now)

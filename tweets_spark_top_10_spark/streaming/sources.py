@@ -13,20 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def rate_stream(
-    spark: SparkSession,
-    rows_per_second: int = 100,
-) -> DataFrame:
-    """Built-in rate source: (timestamp, value) rows at a fixed rate —
-    the zero-dependency load generator for soak/latency testing of
-    streaming queries."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
-
-
 class KafkaConnectorUnavailable(RuntimeError):
     """The spark-sql-kafka connector jar is not on the classpath.
 
@@ -86,8 +72,7 @@ def kafka_stream(
         raise KafkaConnectorUnavailable(
             "spark-sql-kafka connector not on the classpath; deploy with "
             "--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark "
-            "version>, or replay a captured topic with the jar-free "
-            "format('kafka_replay') source (sources/pyds.py) / "
+            "version>, or replay a captured topic with "
             "streaming.sources.file_stream"
         ) from exc
 
