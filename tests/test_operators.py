@@ -125,10 +125,58 @@ def test_ngrams_and_shingles_match_python_token_rule(spark):
         ngrams(F.col("t"), 0)
 
 
+def test_lsh_exact_rerank_matches_python_set_jaccard(spark):
+    """``lsh_exact_rerank`` against a pure-Python set Jaccard over
+    :func:`_py_ngrams` for every pair of the edge texts (plus a near-dup
+    pair).  Texts with fewer than n tokens and the NULL text get no
+    ``shingle_table`` row and so no output pair; passing ``counts=``
+    changes nothing, because the array sizes are the denominators."""
+    from tweets_spark_top_10_spark.functions.dedup import (
+        lsh_exact_rerank,
+        minhash_signatures,
+        shingle_table,
+    )
+
+    n = 3
+    texts = _EDGE_TEXTS + [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox leaps over the lazy dog",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sets = {i: set(_py_ngrams(t, n) or []) for i, t in enumerate(texts)}
+    with_sh = {i for i, s in sets.items() if s}
+    sh = shingle_table(docs, n=n)
+    ids_out = [r.doc_id for r in sh.collect()]
+    assert sorted(ids_out) == sorted(with_sh)
+    assert {texts.index(None), texts.index("one two")}.isdisjoint(ids_out)
+
+    ids = range(len(texts))
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long"
+    )
+    want = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in with_sh
+        for b in with_sh
+        if a < b
+    }
+    counts = minhash_signatures(docs, n=n, with_count=True).select("doc_id", "n_sh")
+    outs = [
+        lsh_exact_rerank(docs, pairs, n=n, threshold=0.0, shingles=sh),
+        lsh_exact_rerank(docs, pairs, n=n, threshold=0.0, counts=counts),
+    ]
+    got = [{(r.id_a, r.id_b): r.jaccard for r in o.collect()} for o in outs]
+    assert got[0] == got[1]
+    assert got[0].keys() == want.keys()
+    for k, j in want.items():
+        assert abs(got[0][k] - j) <= 5e-7, (k, got[0][k], j)
+    assert 0.0 < want[(len(texts) - 2, len(texts) - 1)] < 1.0
+
+
 def test_minhash_signatures_golden(spark):
-    """Pinned ``minhash_signatures(with_count=True)`` values: the
-    persisted ``streaming/sketch`` MinHash index stays valid only while
-    the shingle strings, and so these values, stay byte-identical."""
+    """Pinned ``minhash_signatures(with_count=True)`` values: banding
+    signatures stay byte-identical, so any change to the shingle
+    strings or to the hash family has to be deliberate."""
     from tweets_spark_top_10_spark.functions.dedup import minhash_signatures
 
     docs = spark.createDataFrame(
@@ -288,7 +336,7 @@ def test_collapse_exact_dups_pair_list_is_exact(spark):
     out = {
         (r.id_a, r.id_b, r.jaccard)
         for r in expand_rep_pairs(
-            rep_pairs, members, sh.select("doc_id").distinct(), "doc_id"
+            rep_pairs, members, sh.select("doc_id"), "doc_id"
         ).collect()
     }
     assert out == truth
@@ -445,10 +493,8 @@ def test_minhash_signature_with_count_matches_shingle_counts(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     wide = minhash_signatures(docs, with_count=True)
     plain = minhash_signatures(docs)
-    counts = (
-        shingle_table(docs)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_ref"))
+    counts = shingle_table(docs).select(
+        "doc_id", F.size("shingles").alias("n_ref")
     )
     joined = wide.join(counts, "doc_id", "full")
     assert (

@@ -112,16 +112,22 @@ def test_join_strategy_hints_control_physical_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in plan_of(F.broadcast(cust))
 
 
-def test_minhash_rerank_builds_hash_join_on_shingles(spark, sf_dir):
-    """The exact-rerank join of the candidate-pair x shingle expansion
-    against the shingle table must stay a ShuffledHashJoin building on
-    the compact shingle side: the sort-merge alternative sorts the
-    plan's widest relation (profiled at 100x fixtures: 14 GB memory /
-    6 GB disk spill in one stage; hash build runs spill-free at half
-    the wall).  Guards the hint in functions/dedup.lsh_exact_rerank
-    against planner-default drift."""
+def test_minhash_rerank_intersects_arrays(spark, sf_dir):
+    """The exact rerank reads each candidate pair's two shingle arrays
+    and takes ``size(array_intersect)``: outside the persisted inputs,
+    the plan must show ``array_intersect`` and must neither explode
+    shingles (a ``Generate``) nor shuffle on a shingle key — either one
+    is the pair x shingle expansion coming back, which multiplies the
+    rerank's rows by the shingles per document."""
+    import re
+
+    from tools.record_plan_shapes import active_lines
+
     plan = _plan(QUERIES["minhash_lsh_candidates"](spark, sf_dir))
-    assert "ShuffledHashJoin" in plan, plan
+    active = "\n".join(active_lines(plan))
+    assert "array_intersect" in active, plan
+    assert not re.search(r"Generate \w+\(shingles?#", active), active
+    assert not re.search(r"hashpartitioning\([^)]*shingles?#", active), active
 
 
 def test_shingle_path_has_no_lambda(spark, sf_dir):

@@ -27,6 +27,27 @@ OUT = Path(__file__).resolve().parent / "plan_shapes.json"
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def active_lines(plan: str):
+    """The lines of ``plan`` outside every ``InMemoryRelation``
+    cached-build subtree: the operators this query runs, not the
+    one-time materialization of a persisted input.  Subtree boundaries
+    come from the tree-drawing indent: a child prints with a strictly
+    longer ``[\\s:|+-]`` prefix than its parent."""
+    import re
+
+    prefix = re.compile(r"^[\s:|+\-]*")
+    cache_stack: list[int] = []  # depths of enclosing InMemoryRelations
+    for line in plan.splitlines():
+        d = len(prefix.match(line).group(0))
+        while cache_stack and d <= cache_stack[-1]:
+            cache_stack.pop()
+        inside_cache = bool(cache_stack)
+        if "InMemoryRelation" in line:
+            cache_stack.append(d)
+        if not inside_cache:
+            yield line
+
+
 def count_exchanges(plan: str) -> int:
     """Count DISTINCT non-reused Exchange operators in the ACTIVE plan.
 
@@ -37,35 +58,21 @@ def count_exchanges(plan: str) -> int:
     Lines without a plan_id (older formats) are counted raw.
 
     Exchanges INSIDE an ``InMemoryRelation`` cached-build subtree are
-    EXCLUDED: they belong to the cache's one-time materialization, and
-    — decisive for a stable golden — how they print depends on
-    materialization ORDER, not plan shape.  A persisted DF first
-    touched by the main action prints its build with within-execution
-    ``ReusedExchange`` collapsing; the same DF pre-materialized by an
-    earlier metadata action (e.g. semantic_dedup_keep's split-detect
-    aggregate) re-prints the full build tree with fresh plan_ids at
-    every reference (measured: 16 → 25 "exchanges" for an identical
-    workload).  Subtree boundaries come from the tree-drawing indent:
-    a child prints with a strictly longer ``[\\s:|+-]`` prefix than its
-    parent."""
+    EXCLUDED (:func:`active_lines`): they belong to the cache's
+    one-time materialization, and — decisive for a stable golden — how
+    they print depends on materialization ORDER, not plan shape.  A
+    persisted DF first touched by the main action prints its build with
+    within-execution ``ReusedExchange`` collapsing; the same DF
+    pre-materialized by an earlier metadata action (e.g.
+    semantic_dedup_keep's split-detect aggregate) re-prints the full
+    build tree with fresh plan_ids at every reference (measured: 16 →
+    25 "exchanges" for an identical workload)."""
     import re
-
-    prefix = re.compile(r"^[\s:|+\-]*")
-
-    def depth(line: str) -> int:
-        return len(prefix.match(line).group(0))
 
     ids: set[str] = set()
     raw = 0
-    cache_stack: list[int] = []  # depths of enclosing InMemoryRelations
-    for line in plan.splitlines():
-        d = depth(line)
-        while cache_stack and d <= cache_stack[-1]:
-            cache_stack.pop()
-        inside_cache = bool(cache_stack)
-        if "InMemoryRelation" in line:
-            cache_stack.append(d)
-        if inside_cache or "Exchange" not in line or "ReusedExchange" in line:
+    for line in active_lines(plan):
+        if "Exchange" not in line or "ReusedExchange" in line:
             continue
         m = re.search(r"\[plan_id=(\d+)\]", line)
         if m:

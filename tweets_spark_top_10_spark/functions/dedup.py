@@ -13,7 +13,7 @@ Scale design (100 TB of documents):
 - **MinHash-LSH**: sub-quadratic candidate generation by banding
   per-document MinHash signatures in one self-equi-join
   (:func:`minhash_band_pairs`); the exact-Jaccard rerank of candidates
-  is cheap.
+  is pair-local arithmetic on the two documents' shingle arrays.
 - **SimHash**: 64-bit sketch from per-token ``xxhash64`` bit votes in
   one aggregate (no Python); near-dup = small Hamming distance, banded
   by 16-bit chunks for candidate generation.
@@ -33,7 +33,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tweets_spark_top_10_spark.functions.cachectl import persist_tracked
-from tweets_spark_top_10_spark.functions.text import fingerprint, shingles, tokenize
+from tweets_spark_top_10_spark.functions.text import (
+    TOKEN_PATTERN,
+    fingerprint,
+    shingles,
+    tokenize,
+)
 
 
 def content_hash(text: Column | str) -> Column:
@@ -68,59 +73,45 @@ def shingle_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    key=None,
-    partition_by_shingle: bool = False,
     spread: bool = True,
 ) -> DataFrame:
-    """(id, shingle) pairs, distinct per doc — the join key space for
-    candidate generation.
+    """(id, shingles): one row per document, ``shingles`` the
+    ``array<string>`` of its distinct word n-grams — the shared input
+    of MinHash signatures, the exact rerank and the n-gram joins.
 
-    ``key``: optional Column -> Column transform (e.g. ``F.xxhash64``)
-    applied to each exploded shingle, so shingle identity — and every
-    shuffle keyed by it — rides a fixed-width key instead of a raw
-    n-gram string.  ``None`` keeps raw strings (the MinHash signature
-    path hashes per-table with its own seeds and needs the original
-    value).
+    A document with no shingle (fewer than n tokens, or NULL text) gets
+    no row.  That is tested on the raw text with a cheap match for n
+    tokens, not with ``size(shingles) > 0``: Catalyst pushes a filter
+    on the array below the projection that builds it by inlining the
+    array's expression, which would run the shingle regex twice.
 
     Each doc's shingles come from ONE regex pass over its text
     (:func:`~tweets_spark_top_10_spark.functions.text.shingles`) and
-    ONE ``array_distinct`` BEFORE the explode — distinct-per-(id,
-    shingle) is a row-local property of the source doc, so it needs a
-    per-row expression, not the corpus-wide ``distinct()`` an earlier
-    version ran (whose exchange shuffled every within-doc duplicate it
-    was about to drop — at the 100x probe, HALF the exchange's rows).
-    Keep per-element lambdas (``filter`` / ``zip_with`` / ``transform``)
-    off this path: Spark interprets them element by element, and this
-    is the widest per-row stage of the dedup pipeline.
-
-    ``partition_by_shingle``: repartition by the shingle key.
-    ``hashpartitioning(shingle)`` satisfies the clustered distribution
-    of every downstream shingle-keyed operator — the hot-shingle
-    DF-cap aggregate and BOTH sides of the candidate equi-join — so
-    the whole n-gram pipeline runs off ONE exchange of the shingle
-    table instead of three.
+    ONE ``array_distinct``.  The table stays at document grain: its
+    consumers explode it themselves where they need a row per shingle
+    (the signature aggregate, the n-gram joins) or read the arrays
+    whole (the rerank's ``array_intersect``), so no exploded
+    (doc, shingle) table is built, shuffled or cached for them.  Keep
+    per-element lambdas (``filter`` / ``zip_with`` / ``transform``) off
+    this path: Spark interprets them element by element, and this is
+    the widest per-row stage of the dedup pipeline.
 
     The source is fanned out first when its scan arrives narrower than
     the core count (``spread_scan`` — a conditional no-op at cluster
-    scale): the shingle/explode chain runs BEFORE the first
-    exchange, and on the single-split fixture files it otherwise
-    serializes on one core (r16: the single biggest stage of every
-    shingle consumer at sf0.1).  ``spread=False`` opts out for callers
-    whose downstream is a light broadcast-join + aggregate (the
-    contamination checks), where the extra exchange measured as a net
-    loss."""
+    scale): the shingle chain runs BEFORE the first exchange, and on
+    the single-split fixture files it otherwise serializes on one core
+    (r16: the single biggest stage of every shingle consumer at sf0.1).
+    ``spread=False`` opts out for callers whose downstream is a light
+    broadcast-join + aggregate (the contamination checks), where the
+    extra exchange measured as a net loss."""
     if spread:
         from tweets_spark_top_10_spark.functions.spread import spread_scan
 
         df = spread_scan(df)
-    out = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("shingle")
+    has_ngram = F.col(text_col).rlike(r"\S+(?:%s\S+){%d}" % (TOKEN_PATTERN, n - 1))
+    return df.where(has_ngram).select(
+        F.col(id_col), shingles(F.col(text_col), n).alias("shingles")
     )
-    if key is not None:
-        out = out.select(F.col(id_col), key(F.col("shingle")).alias("shingle"))
-    if partition_by_shingle:
-        out = out.repartition("shingle")
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -158,16 +149,18 @@ def ngram_jaccard_pairs(
     # scale.  A 64-bit collision merges two shingles' dedup evidence —
     # at billions of distinct shingles the birthday bound makes that a
     # handful of merged pairs, noise against a >=threshold Jaccard.
-    # shingle_table hashes right after its per-doc explode, so even
-    # the FIRST shuffle of the shingle pipeline moves 8-byte keys, not
-    # strings — and with
-    # partition_by_shingle the cached table is ALREADY hash-partitioned
-    # by that key, so the DF-cap aggregate and both candidate-join
-    # sides below add ZERO further corpus-sized exchanges.
+    # Each shingle is hashed right where the doc's array is exploded,
+    # so even the FIRST shuffle of the pipeline moves 8-byte keys, not
+    # strings — and the repartition by that key leaves the cached table
+    # ALREADY hash-partitioned by it (``hashpartitioning(shingle)``
+    # satisfies the clustered distribution of the DF-cap aggregate and
+    # BOTH candidate-join sides), so they add ZERO further corpus-sized
+    # exchanges.
     sh = (
-        shingle_table(
-            df, text_col, id_col, n, key=F.xxhash64, partition_by_shingle=True
-        )
+        shingle_table(df, text_col, id_col, n)
+        .select(F.col(id_col), F.explode("shingles").alias("shingle"))
+        .select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
+        .repartition("shingle")
         .transform(persist_tracked)
     )
     if max_shingle_df is not None:
@@ -229,7 +222,7 @@ def minhash_band_pairs(
     Same sub-quadratic shape as ``pyspark.ml``'s MinHashLSH OR-construction
     (one band per table, r=1) but entirely whole-stage-codegen'd: the
     signature is ``num_tables`` MIN(xxhash64(shingle, seed+i)) columns in
-    ONE hash aggregate over the exploded shingle table, exploded to long
+    ONE hash aggregate over the exploded shingle arrays, exploded to long
     format (doc, table, min) so ALL tables band in ONE self-equi-join on
     (table, min) — a single shuffle regardless of num_tables, vs one
     join stage per table.  No ML pipeline fit, no sparse-vector
@@ -243,9 +236,10 @@ def minhash_band_pairs(
     candidate join is AQE-skew-splittable, and callers can pre-cap hot
     shingles with ``max_shingle_df`` semantics upstream.
 
-    ``shingles``: optionally pass a prepared (id, shingle) table so one
-    scan/explode is shared with the exact rerank — at scale this is a
-    materialized intermediate, computed once per corpus.
+    ``shingles``: optionally pass a prepared :func:`shingle_table` so
+    one scan and shingle pass is shared with the exact rerank — at
+    scale this is a materialized intermediate, computed once per
+    corpus.
 
     ``signatures``: optionally pass a prepared WIDE signature table
     (:func:`minhash_signatures` output, extra columns like ``n_sh``
@@ -303,26 +297,24 @@ def minhash_signatures(
 ) -> DataFrame:
     """Wide per-document MinHash signature: (id, mh0..mh{t-1}).
 
-    ONE hash aggregate over the exploded shingle table — this is the
-    persistable signature artifact (8 longs = 64 bytes/doc) that banding
-    (:func:`minhash_band_pairs`) consumes.  A document's signature
-    depends only on its own text, so new or changed docs re-sketch and
-    everything else is untouched.
+    ONE hash aggregate over the shingle arrays, exploded inside it —
+    this is the persistable signature artifact (8 longs = 64 bytes/doc)
+    that banding (:func:`minhash_band_pairs`) consumes.  A document's
+    signature depends only on its own text, so new or changed docs
+    re-sketch and everything else is untouched.
 
     ``with_count`` adds ``n_sh`` (the per-doc distinct-shingle count)
-    as one more column of the SAME aggregate: the exact-rerank's
-    Jaccard denominator needs that count anyway, and computing it here
-    deletes a whole second corpus aggregate over the shingle table
-    (same groupBy key, same shuffle) from the banding+rerank pipeline.
+    as one more column of the SAME aggregate.
     """
     sh = shingles if shingles is not None else shingle_table(df, text_col, id_col, n)
+    rows = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     aggs = [
         F.min(F.xxhash64(F.col("shingle"), F.lit(seed + i))).alias(f"mh{i}")
         for i in range(num_tables)
     ]
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("n_sh"))
-    return sh.groupBy(id_col).agg(*aggs)
+    return rows.groupBy(id_col).agg(*aggs)
 
 
 def lsh_exact_rerank(
@@ -339,58 +331,37 @@ def lsh_exact_rerank(
 
     The scale contract of LSH: the all-pairs join never happens; exact
     similarity runs on the (sub-quadratic) candidate set.  Plan shape:
-    candidates join shingles of side a (explodes each pair by a's
-    shingles), equi-join side b on (id_b, shingle) to count the
-    intersection, then the Jaccard filter.  Cost is
-    O(|candidates| x shingles/doc), independent of corpus size.
+    each distinct candidate pair joins the two documents' shingle
+    arrays (one join per endpoint, keyed by doc id), and the Jaccard is
+    pair-local arithmetic on them:
+    ``inter = size(array_intersect(a, b))``, then
+    ``inter / (size(a) + size(b) - inter)``.  Each endpoint moves one
+    text-sized array, so the exchanges carry |candidates| x 2 arrays,
+    not the |candidates| x shingles/doc rows a join that expands each
+    pair by its shingles would shuffle, sort and group.  At 100 TB that
+    is the difference between shuffling the pair list once per
+    endpoint and shuffling it once per shingle.
 
     Output: (id_a, id_b, jaccard) — exact, rounded to 6 digits.
-    ``shingles``: optionally pass a prepared (id, shingle) table shared
-    with candidate generation (it is referenced three times here —
-    persist it at the call site).
-    ``counts``: optionally pass precomputed per-doc distinct-shingle
-    counts as (id_col, n_sh) — e.g. the ``n_sh`` column of
-    ``minhash_signatures(with_count=True)`` — so the Jaccard
-    denominator reuses the signature aggregate instead of running a
-    second corpus aggregate over the shingle table.
+    ``shingles``: optionally pass the :func:`shingle_table` shared with
+    candidate generation (it is read twice here — persist it at the
+    call site).
+    ``counts`` is no longer read: the array sizes are the Jaccard
+    denominators.  It stays in the signature only because the
+    ``perfbench`` dedup workload still passes it; the benchmark change
+    that moves that workload onto one dedup entry point drops the
+    argument, and the next engine change deletes the parameter.
     """
     sh = shingles if shingles is not None else shingle_table(df, text_col, id_col, n)
-    # Identity-only use from here on (counts + intersection equi-join):
-    # compact raw strings to 8-byte xxhash64 keys so the (id_b, shingle)
-    # join shuffles fixed-width rows.  A projection over the (possibly
-    # call-site-persisted) raw table — cache reuse is preserved, and the
-    # MinHash banding that shares the raw table keeps its own seeds.
-    sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    if counts is None:
-        counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    else:
-        counts = counts.select(F.col(id_col), F.col("n_sh"))
-    pa = pairs.select("id_a", "id_b").distinct()
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingle"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingle"))
-    # The pair-by-a's-shingles expansion (|candidates| x shingles/doc
-    # rows) is the widest relation in the plan; the default sort-merge
-    # join would SORT it to meet sb, and that sort is pure overhead —
-    # profiled at 100x fixtures it spilled 14 GB memory / 6 GB disk and
-    # was the single hottest stage (2040 s executor time of a 122 s
-    # run).  A shuffled-hash join builds on sb instead: sb is the
-    # compacted 16-byte-row shingle table whose per-partition build
-    # (corpus_bytes / shuffle.partitions) is the thing a cluster sizes
-    # anyway, while the expansion side streams unsorted.  Same
-    # exchanges, no sort, no spill (re-profiled: the stage's spill is
-    # zero and the 100x wall drops ~2x).
-    shared = (
-        pa.join(sa, "id_a")
-        .join(sb.hint("shuffle_hash"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = counts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = counts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
+    sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+    sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
     return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
+        pairs.select("id_a", "id_b")
+        .distinct()
+        .join(sa, "id_a")
+        .join(sb, "id_b")
         .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

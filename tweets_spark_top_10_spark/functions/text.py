@@ -50,18 +50,20 @@ def ngrams(text: Column | str, n: int) -> Column:
 
     The grams are exactly ``" ".join`` of each n consecutive
     :func:`tokenize` tokens, built in ONE codegen'd regex pass: collapse
-    ``TOKEN_PATTERN`` runs to one space, then a zero-width match at every
-    token start whose lookahead captures the next n tokens.  The anchor
-    is a lookbehind on ``^`` or a space, not ``(?<!\\S)``: after an
-    empty match Java steps one UTF-16 unit forward, which can land
-    inside a surrogate pair (an emoji), where ``(?<!\\S)`` would match
-    and emit a lone-surrogate gram.
+    ``TOKEN_PATTERN`` runs to one space, then match each token whole
+    while a lookahead captures it and the next n-1 tokens.  A match
+    consumes its token, so the next attempt starts at the following
+    space and no anchor is needed.  An attempt that fails at a token
+    start (fewer than n tokens left) fails at every later position
+    inside that token too, because the same tokens follow; so a start
+    inside a surrogate pair (an emoji), where Java's scan can land
+    after a failed attempt, never emits a lone-surrogate gram.
     """
     if n < 1:
         raise ValueError("n must be >= 1")
     col = F.col(text) if isinstance(text, str) else text
     norm = F.regexp_replace(col, TOKEN_PATTERN, " ")
-    gram = r"(?<=^| )(?=(\S+(?: \S+){%d}))" % (n - 1)
+    gram = r"(?=(\S+(?: \S+){%d}))\S+" % (n - 1)
     return F.regexp_extract_all(norm, F.lit(gram), F.lit(1))
 
 

@@ -194,7 +194,7 @@ def training_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the eval set drops the doc (broadcast: eval sets are tiny).
     ev_shingles = (
         shingle_table(docs.filter(is_eval), "text", "doc_id", 3)
-        .select("shingle")
+        .select(F.explode("shingles").alias("shingle"))
         .distinct()
     )
     # Contamination is computed over ALL non-eval docs, not the
@@ -208,6 +208,7 @@ def training_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization.  The branch now depends only on the raw scan.
     contaminated = (
         shingle_table(docs.filter(~is_eval), "text", "doc_id", 3)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
         .join(F.broadcast(ev_shingles), "shingle")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("__n"))

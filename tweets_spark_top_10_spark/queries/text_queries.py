@@ -497,8 +497,9 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair list (Jaccard is a function of the shingle set alone), so
     # the true-all-pairs oracle above is unchanged.
     reps, members = collapse_exact_dups(docs, "text", "doc_id")
-    # One shingle table shared by banding and rerank (it is referenced
-    # three times across the two phases) — at scale, a materialized
+    # One document-level shingle table, (doc_id, shingles array),
+    # shared by the signature aggregate and the rerank (read three
+    # times across the two phases) — at scale, a materialized
     # per-corpus intermediate; in-session, persist.  spread=False
     # (r17, adjudicating the r16 driver regression): the table's first
     # consumer is the signature AGGREGATE (map-side combining), so the
@@ -511,27 +512,20 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_table(reps, "text", "doc_id", n=3, spread=False).transform(
         persist_tracked
     )
-    # ONE signature aggregate serves three consumers (r16): the banding
-    # explode, the rerank's Jaccard-denominator counts (`n_sh` rides the
-    # same groupBy — previously a second corpus aggregate over sh), and
-    # the ≥1-shingle expansion gate (a doc has a signature row iff it
-    # produced a shingle — previously a separate re-tokenize pass over
-    # reps).
+    # ONE signature aggregate serves two consumers: the banding explode
+    # and the ≥1-shingle expansion gate (a doc has a signature row iff
+    # it produced a shingle).
     wide = minhash_signatures(
-        reps, "text", "doc_id", 3, 8, 42, shingles=sh, with_count=True
+        reps, "text", "doc_id", 3, 8, 42, shingles=sh
     ).transform(persist_tracked)
     cands = minhash_band_pairs(
         reps, "text", "doc_id", n=3, shingles=sh, signatures=wide
     )
+    # The rerank joins each distinct candidate pair to its two docs'
+    # shingle arrays and takes size(array_intersect) — no pair x
+    # shingle expansion; the array sizes are the Jaccard denominators.
     rep_pairs = lsh_exact_rerank(
-        reps,
-        cands,
-        "text",
-        "doc_id",
-        n=3,
-        threshold=0.5,
-        shingles=sh,
-        counts=wide.select("doc_id", "n_sh"),
+        reps, cands, "text", "doc_id", n=3, threshold=0.5, shingles=sh
     )
     rep_sh_ids = wide.select("doc_id")
     return expand_rep_pairs(rep_pairs, members, rep_sh_ids, "doc_id")
@@ -1187,11 +1181,13 @@ def doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loss here (1.28s unspread vs 1.61s spread, interleaved min-of-4).
     ev_shingles = (
         shingle_table(docs.filter(is_eval), "text", "doc_id", 3, spread=False)
-        .select("shingle")
+        .select(F.explode("shingles").alias("shingle"))
         .distinct()
     )
     train = docs.filter(~is_eval)
-    tr_shingles = shingle_table(train, "text", "doc_id", 3, spread=False)
+    tr_shingles = shingle_table(train, "text", "doc_id", 3, spread=False).select(
+        "doc_id", F.explode("shingles").alias("shingle")
+    )
     shared = (
         tr_shingles.join(F.broadcast(ev_shingles), "shingle")
         .groupBy("doc_id")

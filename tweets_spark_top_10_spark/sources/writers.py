@@ -47,9 +47,8 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int,
     sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Write ``df`` as an external BUCKETED table: rows hash-clustered
+    """Write ``df`` as an external BUCKETED parquet table: rows hash-clustered
     on ``bucket_cols`` into ``num_buckets`` files, optionally sorted
     within each bucket.
 
@@ -92,7 +91,7 @@ def write_bucketed(
         raise ValueError("bucket_cols must be non-empty")
     writer = (
         df.repartition(num_buckets, *bucket_cols)
-        .write.format(fmt)
+        .write.format("parquet")
         .bucketBy(num_buckets, *bucket_cols)
         .option("path", path)
         .mode("overwrite")
